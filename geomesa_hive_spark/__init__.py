@@ -12,12 +12,17 @@ filter-pushdown Catalyst rules), re-expressed Spark-first:
   ``spatial/sql/createUDFs.sql`` registered via ``register_all(spark)``
 - bbox filter pushdown implemented at the API layer (Python cannot inject
   Catalyst rules), mirroring the observable behavior of the reference's
-  ``SpatialFilterPushdownRules``
-- beyond-reference large-scale pipeline operators (dedup, similarity
-  search, text analysis, multimodal) under ``pipeline/``
-- spatial-aware readers/writers under ``sources/`` and a Structured
-  Streaming extension (watermarked rollups, session windows, custom
-  stateful operators) under ``streaming/``.
+  ``SpatialFilterPushdownRules``, plus a SQL-text rewrite
+  (``operators.spatial_sql``) for queries written against the ``ST_*`` names
+- Z2-clustered Parquet/GeoParquet writes whose per-file and per-row-group
+  bbox statistics make that pushdown selective (``operators.partitioning``,
+  ``sources/``)
+- spatial operators beyond the reference (PBSM join, DBSCAN, XZ2 index,
+  density, trajectories) under ``operators/``
+- beyond-paper code still awaiting retirement: the training-data
+  operators under ``pipeline/`` (dedup, similarity search, text,
+  multimodal), the Structured Streaming extension under ``streaming/``
+  and the merge-on-read lake in ``sources/{manifest,incremental,datasource}.py``.
 
 The geometry kernel is pure Python/NumPy (this environment has no
 shapely/pyproj/JTS); points and extents take fully vectorized NumPy fast

@@ -8,21 +8,14 @@ shift-mask ops, Hilbert is a per-bit rotation state machine.
 
 The (x, y) → d transform is the standard iterative algorithm (per-bit
 quadrant extraction + frame rotation; the form given in the public
-literature on Hilbert curve conversion). Both the NumPy kernel and the
-SQL stage generator implement it bit-for-bit; ``stage_sql`` emits
-dialect-portable text (floor-division bit extraction, CASE quadrant
-encoding — no ``^``/``&``/``//`` operators, whose meanings differ
-between Spark SQL and DuckDB) that the contract oracle chains as CTE
-stages and the native Spark builder chains as select stages, so the
-whole index computation stays inside whole-stage codegen at write time
-— no Python in the hot path.
+literature on Hilbert curve conversion), vectorized in NumPy.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["hilbert_d", "hilbert_latlon", "stage_sql", "GRID_SQL"]
+__all__ = ["hilbert_d", "hilbert_latlon"]
 
 
 def hilbert_d(x: np.ndarray, y: np.ndarray, order: int) -> np.ndarray:
@@ -55,43 +48,3 @@ def hilbert_latlon(lon: np.ndarray, lat: np.ndarray, order: int = 16) -> np.ndar
     gx = np.clip(np.floor((np.asarray(lon, np.float64) + 180.0) / 360.0 * s), 0, s - 1)
     gy = np.clip(np.floor((np.asarray(lat, np.float64) + 90.0) / 180.0 * s), 0, s - 1)
     return hilbert_d(gx.astype(np.int64), gy.astype(np.int64), order)
-
-
-def GRID_SQL(lon: str, lat: str, order: int) -> tuple[str, str]:
-    """The lon/lat → grid-int quantization as dialect-portable SQL."""
-    s = float(1 << order)
-    gx = (f"CAST(least(greatest(floor(({lon} + 180.0) / 360.0 * {s}), 0.0),"
-          f" {s - 1.0}) AS BIGINT)")
-    gy = (f"CAST(least(greatest(floor(({lat} + 90.0) / 180.0 * {s}), 0.0),"
-          f" {s - 1.0}) AS BIGINT)")
-    return gx, gy
-
-
-def stage_sql(s: int) -> dict[str, str]:
-    """One per-bit stage of the transform over columns (x, y, d) —
-    dialect-portable expression text shared VERBATIM by the DuckDB
-    oracle (chained CTEs) and the native Spark builder (chained
-    selects)."""
-    fs = float(s)
-    # (… % 2 + 2) % 2: intermediate x/y legitimately go NEGATIVE in
-    # the standard algorithm's rotated frames, and SQL's % is C-style
-    # (can yield −1) while NumPy's is always non-negative — observed
-    # divergence at the first odd-negative quotient, not theoretical
-    rx = f"((CAST(floor(x / {fs}) AS BIGINT) % 2) + 2) % 2"
-    ry = f"((CAST(floor(y / {fs}) AS BIGINT) % 2) + 2) % 2"
-    return {
-        "rx": rx,
-        "ry": ry,
-        "d": (
-            f"d + CAST({s * s} AS BIGINT) * (CASE WHEN rx = 0 AND ry = 0 "
-            f"THEN 0 WHEN rx = 0 THEN 1 WHEN ry = 1 THEN 2 ELSE 3 END)"
-        ),
-        "x": (
-            f"CASE WHEN ry = 0 THEN (CASE WHEN rx = 1 THEN {s - 1} - y "
-            f"ELSE y END) ELSE x END"
-        ),
-        "y": (
-            f"CASE WHEN ry = 0 THEN (CASE WHEN rx = 1 THEN {s - 1} - x "
-            f"ELSE x END) ELSE y END"
-        ),
-    }

@@ -49,7 +49,6 @@ __all__ = [
     "parse_crs",
     "utm_forward",
     "utm_inverse",
-    "UTM_CONSTS",
     "lcc_forward",
     "lcc_inverse",
     "lcc_consts",
@@ -149,12 +148,6 @@ _P1 = 3.0 * _E1 / 2.0 - 27.0 * _E1 * _E1 * _E1 / 32.0
 _P2 = 21.0 * _E1 * _E1 / 16.0 - 55.0 * _E1 * _E1 * _E1 * _E1 / 32.0
 _P3 = 151.0 * _E1 * _E1 * _E1 / 96.0
 _P4 = 1097.0 * _E1 * _E1 * _E1 * _E1 / 512.0
-
-#: constants an oracle-SQL generator needs to replay utm_forward exactly
-UTM_CONSTS = {
-    "a": _A, "e2": _E2, "ep2": _EP2, "k0": _K0,
-    "m1": _M1, "m2": _M2, "m3": _M3, "m4": _M4,
-}
 
 _UTM_RE = re.compile(r"^EPSG:(32[67])(\d{2})$", re.IGNORECASE)
 

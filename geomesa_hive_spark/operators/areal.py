@@ -104,7 +104,7 @@ def _areas_udf(cs: float):
     Axis-aligned rectangle zones take the EXACT closed-form overlap
     (min/max interval arithmetic in doubles — the dominant case: grid
     cells are always rectilinear, and bbox zones are common), which is
-    what makes the contract oracle replayable bit-near. General
+    what makes an independent SQL oracle replayable bit-near. General
     polygons fall back to the real clipping kernel (geom/clip.py),
     whose deliberate robustness epsilon (~1e-9·scale vertex snapping)
     is exactness-traded and pytest-verified instead."""

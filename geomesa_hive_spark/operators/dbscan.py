@@ -24,12 +24,11 @@ ops so every step is a bounded number of shuffles:
 5. Everything else is **noise** (cluster_id = -1).
 
 At 100 TB: the grid join is the only data-sized shuffle and it is
-skew-adaptive via AQE like the PBSM join (hot-cell argument measured in
-`scripts/skew_bench.py`); CC rounds touch only core-core *edges* (dense
-clusters converge in 2-4 rounds). eps chooses the cell size — the
-classic failure mode is eps so large that one cell holds millions of
-points, which is a parameter error, not a plan hazard (and AQE splits
-the hot partition regardless).
+skew-adaptive via AQE like the PBSM join; CC rounds touch only
+core-core *edges* (dense clusters converge in 2-4 rounds). eps chooses
+the cell size — the classic failure mode is eps so large that one cell
+holds millions of points, which is a parameter error, not a plan hazard
+(and AQE splits the hot partition regardless).
 """
 
 from __future__ import annotations

@@ -13,7 +13,7 @@ SQL, no float accumulation.
 
 Scale: one constant-factor explode (x9) and ONE map-side-combined
 groupBy on the cell key; hot cells (cities) are groupBy skew handled
-like every other hash agg (AQE split; measured in skew_bench.py). The
+like every other hash agg (AQE split). The
 output is grid-sized (bounded by world_area/cell^2), not data-sized —
 the whole point of density surfaces at 100 TB: the result that leaves
 the cluster is the raster, never the points.

@@ -11,10 +11,9 @@ Axial math (the standard cube-rounding algorithm): fractional axial
 coords ``q = (√3/3·x − 1/3·y)/s``, ``r = (2/3·y)/s``; extend to cube
 (x, y, z) with x+y+z=0, round each, then repair the axis with the
 largest rounding error so the invariant holds. Every step is plain
-arithmetic + CASE — the DuckDB oracle replays the identical expression
-text, and the repair branches make the assignment EXACT (no
-point-on-boundary ambiguity beyond 1-ulp ties, the same exposure every
-grid operator here accepts).
+arithmetic + CASE, and the repair branches make the assignment EXACT
+(no point-on-boundary ambiguity beyond 1-ulp ties, the same exposure
+every grid operator here accepts).
 """
 
 from __future__ import annotations
@@ -24,14 +23,13 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["hex_cell", "hexbin_counts", "HEX_SQL"]
+__all__ = ["hex_cell", "hexbin_counts"]
 
 _S3_3 = repr(math.sqrt(3.0) / 3.0)
 
 
 def _hex_exprs(x: str, y: str, size: float) -> tuple[str, str]:
-    """(q_expr, r_expr) SQL text — shared VERBATIM with the oracle
-    (DuckDB and Spark both parse this dialect subset)."""
+    """(q_expr, r_expr) SQL text for the native hex assignment."""
     s = repr(float(size))
     fq = f"(({_S3_3} * {x} - (1.0/3.0) * {y}) / {s})"
     fr = f"(((2.0/3.0) * {y}) / {s})"
@@ -52,11 +50,6 @@ def _hex_exprs(x: str, y: str, size: float) -> tuple[str, str]:
         f"ELSE -({rx}) - ({ry}) END AS BIGINT)"
     )
     return q, r
-
-
-def HEX_SQL(x: str, y: str, size: float) -> tuple[str, str]:
-    """The (q, r) expression text — exported for the contract oracle."""
-    return _hex_exprs(x, y, size)
 
 
 def hex_cell(x_col: str, y_col: str, size: float) -> tuple[Column, Column]:

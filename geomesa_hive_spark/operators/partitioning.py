@@ -20,7 +20,6 @@ def add_z2_columns(
     df: DataFrame,
     geom_col: str,
     zoom: int = 6,
-    bits: int = 8,
     bbox: bool = True,
 ) -> DataFrame:
     """Add ``z2`` (coarse partition key via st_partitionCentroid) and a
@@ -38,7 +37,6 @@ def write_spatially_partitioned(
     path: str,
     geom_col: str,
     zoom: int = 6,
-    bits: int = 8,
     mode: str = "overwrite",
     partition_dirs: bool = False,
     num_files: int | None = None,
@@ -57,7 +55,7 @@ def write_spatially_partitioned(
     collapses small datasets into one or two files — and scan pruning
     can never skip more than (files × row groups) granules.
     """
-    enriched = add_z2_columns(df, geom_col, zoom=zoom, bits=bits)
+    enriched = add_z2_columns(df, geom_col, zoom=zoom)
     clustered = (
         enriched.repartitionByRange(num_files, "z2")
         if num_files

@@ -139,8 +139,7 @@ def spatial_join(
     ``spark.sql.autoBroadcastJoinThreshold``-independent hint limits
     rather than silently degrading.
 
-    ``salt > 1`` is the HOT-CELL knob (the ``block_shards`` pattern from
-    pipeline/entity.py, round 14): a clustered dataset — every geometry
+    ``salt > 1`` is the HOT-CELL knob: a clustered dataset — every geometry
     in one city — lands its whole candidate workload on the ONE reducer
     owning that cell, and AQE's skew split only rescues the sort-merge
     path when partition-size thresholds trip. Salting fixes it

@@ -1062,6 +1062,21 @@ def _rewrite_spatial_agg(sql: str, call_re, item_re, inner_fmt,
     return out
 
 
+def _run_rewritten(run, sql: str, *args, **kwargs):
+    """Hand ``run`` (a ``spark.sql``) the spatially rewritten ``sql``,
+    falling back to the untouched query when the rewritten form fails
+    analysis. The one rewrite chain both :func:`spatial_sql` and the
+    :func:`install` wrapper run."""
+    rewritten = rewrite_spatial_predicates(
+        rewrite_spatial_join(rewrite_extent_agg(rewrite_convexhull_agg(sql))))
+    if rewritten != sql:
+        try:
+            return run(rewritten, *args, **kwargs)
+        except Exception:
+            pass
+    return run(sql, *args, **kwargs)
+
+
 def spatial_sql(spark: SparkSession, sql: str) -> DataFrame:
     """Run a raw SQL string with spatial-filter pushdown.
 
@@ -1070,14 +1085,7 @@ def spatial_sql(spark: SparkSession, sql: str) -> DataFrame:
     doesn't analyze (e.g. the predicate's column is a binary geometry,
     not an extent struct). Recognized geometry×geometry JOIN predicates
     route to the PBSM grid join first (:func:`rewrite_spatial_join`)."""
-    rewritten = rewrite_spatial_predicates(
-        rewrite_spatial_join(rewrite_extent_agg(rewrite_convexhull_agg(sql))))
-    if rewritten != sql:
-        try:
-            return spark.sql(rewritten)
-        except Exception:
-            pass
-    return spark.sql(sql)
+    return _run_rewritten(spark.sql, sql)
 
 
 _ORIGINAL_ATTR = "_geomesa_hive_spark_original_sql"
@@ -1101,13 +1109,7 @@ def install(spark: SparkSession) -> SparkSession:
 
     def _sql(query, *args, **kwargs):
         if isinstance(query, str):
-            rewritten = rewrite_spatial_predicates(
-                rewrite_spatial_join(rewrite_extent_agg(rewrite_convexhull_agg(query))))
-            if rewritten != query:
-                try:
-                    return original(rewritten, *args, **kwargs)
-                except Exception:
-                    pass
+            return _run_rewritten(original, query, *args, **kwargs)
         return original(query, *args, **kwargs)
 
     setattr(spark, _ORIGINAL_ATTR, original)

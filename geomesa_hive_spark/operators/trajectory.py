@@ -157,8 +157,8 @@ def hausdorff_join(
 
     All d² terms are exact double products of input coords, and
     min/max are order-independent, so the result is deterministic
-    under any partitioning — what lets a DuckDB oracle replay it
-    exactly (the contract query's brute-force pair join).
+    under any partitioning — a brute-force pair join replays it
+    exactly.
     """
     from pyspark.sql.functions import pandas_udf
 

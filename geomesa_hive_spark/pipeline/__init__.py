@@ -8,14 +8,11 @@ Arrow-batched pandas UDFs for genuinely non-SQL kernels (minhash
 signatures, simhash, hyperplane LSH)."""
 
 from geomesa_hive_spark.pipeline import (
-    bpe,
     dedup,
-    graph,
     multimodal,
-    packing,
     sampling,
     similarity,
     text,
 )
 
-__all__ = ["bpe", "dedup", "graph", "packing", "sampling", "similarity", "text", "multimodal"]
+__all__ = ["dedup", "sampling", "similarity", "text", "multimodal"]

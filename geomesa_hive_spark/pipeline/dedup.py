@@ -510,7 +510,7 @@ def minhash_lsh_pairs(
     candidate pairs materialize in one join task. AQE's skew-join
     split cannot help: it detects skew by INPUT partition bytes, and a
     hot band's input is only m rows — the blow-up is in the join
-    OUTPUT (measured: `scripts/lsh_skew_bench.py`). With shards > 1
+    OUTPUT. With shards > 1
     the self-join key becomes (band, hash, shard) — probe side keyed
     by id-hash shard, build side replicated per shard — so each hot
     bucket's m² work spreads over `shards` tasks. Results are

@@ -200,8 +200,8 @@ def knn_lsh(
     candidate if ANY table puts it within Hamming-``probe_hamming`` of
     the query's bucket in that table. Union-of-tables is the standard
     recall fix for sign-LSH on near-uniform-sphere embeddings, where a
-    single 8-bit table at Hamming-1 measures recall@10 ≈ 0.17
-    (`scripts/ann_recall.py`); the default (bits=8, Hamming-2, L=4)
+    single 8-bit table at Hamming-1 measures recall@10 ≈ 0.17; the
+    default (bits=8, Hamming-2, L=4)
     measures ≈ 0.83 at ~47% of the corpus scanned — an honest sign-LSH
     ceiling on this data; `knn_ivf` (pivot, 32 lists / 8 probes, recall
     ≈ 0.98 at ~25%) is the recommended path when a coarse quantizer is
@@ -1164,8 +1164,8 @@ def pq_codebooks_kmeans(
 ) -> np.ndarray:
     """Lloyd-trained codebooks from a DETERMINISTIC bounded sample (the
     ``sample_rows`` smallest ids — no RNG, reproducible across runs),
-    initialized at the pivot codebooks. Measured on the recall control
-    (scripts/ann_recall.py, recorded in BASELINE.md): kmeans 0.81@10%
+    initialized at the pivot codebooks. Measured on a 20-query recall
+    control: kmeans 0.81@10%
     refine vs pivot's 0.775 — training still pays for itself; the
     pivot path stays the hash-oracled contract config because replaying
     10 Lloyd rounds x m subspaces in SQL buys no additional trust."""
@@ -1303,7 +1303,7 @@ def ivfpq_model(
     residual codebooks are Lloyd-trained per subspace over the residuals
     of a DETERMINISTIC ``sample_rows`` sample (smallest ids, no RNG),
     initialized at the pivot books. Measured equivalent to pivot books
-    on this corpus (0.97 vs 0.98, BASELINE.md ivfpq rows); it is the
+    on this corpus (0.97 vs 0.98); it is the
     lever for corpora whose residual distribution the 16 pivot samples
     represent poorly."""
     cents = _pivot_centroids(df, id_col, vec_col, n_lists)
@@ -1365,8 +1365,7 @@ def knn_ivfpq(
     the corpus, and residual PQ scores those candidates from 8-byte
     codes via per-list integer LUTs.
 
-    Measured on the standing 20-query harness (scripts/ann_recall.py,
-    BASELINE.md quality table): recall@10 = **0.98 at 10% exact-scored**
+    Measured on a 20-query recall control: recall@10 = **0.98 at 10% exact-scored**
     at the contract config (32 lists, 8 probes, refine=200) — IVF-flat
     recall (0.98@24.5%) at flat-PQ cost (0.775@10%), the best point on
     the curve. (Round 3 recorded 0.59 for this config from an

@@ -96,8 +96,8 @@ def write_with_manifest(
     on columns the table is NOT clustered by, where min/max can never
     prune.
 
-    ``manifest_format="parquet"`` is the at-scale tier (the sharded
-    manifest SCALE.md names as the next step past the single JSON):
+    ``manifest_format="parquet"`` is the at-scale tier (a sharded
+    manifest, the next step past the single JSON):
     per-file stats are written as a PARQUET TABLE under
     ``<path>/_manifest/`` — the stats DataFrame goes straight from the
     read-back aggregation to parquet with NO driver collect, so the
@@ -732,8 +732,7 @@ def _bloom_probe_parquet(path: str, root: dict, col: str,
     ``bloom_<col>`` binary column are read, streamed batch-by-batch —
     never the full stats row set, never more than one batch of bitsets
     in memory. At 10⁶ files this is O(shard batch) memory while the
-    JSON tier's root object would be the driver bottleneck SCALE.md
-    names."""
+    JSON tier's root object would be the driver bottleneck."""
     import pyarrow.dataset as _ds
 
     global _LAST_BLOOM_PROBE_COLUMNS

@@ -873,69 +873,6 @@ def test_minhash_lsh_band_shards_invariant(spark, docs):
     assert base == salted and len(base) > 0
 
 
-# ------------------------------------------------------------------ packing
-def test_chunk_pack_spans_and_boundaries(spark):
-    """Concat-then-chunk: exact boundary, straddle, zero-token and
-    longer-than-budget docs, two independent shards."""
-    from geomesa_hive_spark.pipeline import packing
-
-    rows = [  # (id, shard, tokens)
-        (1, 0, 4), (2, 0, 4), (3, 0, 3),   # 4+4 fills budget 8; 3 starts seq 1
-        (4, 0, 0),                          # zero tokens: n_seqs 0
-        (5, 0, 20),                         # giant: spans seqs 1..3
-        (6, 1, 8), (7, 1, 1),               # second shard independent
-    ]
-    df = spark.createDataFrame(rows, "id LONG, shard INT, tok LONG")
-    out = {r.id: r for r in
-           packing.chunk_pack(df, "tok", "id", budget=8, shard_col="shard").collect()}
-    assert (out[1].tok_start, out[1].first_seq, out[1].last_seq, out[1].n_seqs) == (0, 0, 0, 1)
-    assert (out[2].first_seq, out[2].last_seq) == (0, 0)       # 4..7 inside seq 0
-    assert (out[3].first_seq, out[3].last_seq) == (1, 1)       # starts at 8
-    assert (out[4].tok_start, out[4].n_seqs) == (11, 0)        # zero-width
-    assert (out[5].first_seq, out[5].last_seq, out[5].n_seqs) == (1, 3, 3)  # 11..30
-    assert (out[6].first_seq, out[6].last_seq) == (0, 0)
-    assert (out[7].first_seq, out[7].last_seq) == (1, 1)
-
-
-def test_greedy_pack_first_fit_and_utilization(spark):
-    from geomesa_hive_spark.pipeline import packing
-
-    rows = [(1, 0, 5), (2, 0, 4), (3, 0, 3), (4, 0, 9), (5, 0, 1),
-            (6, 1, 2), (7, 1, 2)]
-    df = spark.createDataFrame(rows, "id LONG, shard INT, tok LONG")
-    packed = packing.greedy_pack(df, "tok", "id", budget=8, shard_col="shard")
-    out = {r.id: (r.seq_bin, r.seq_fill) for r in packed.collect()}
-    # shard 0: 5 | 4+3 | 9(oversized alone) | 1
-    assert out[1] == (0, 5) and out[2] == (1, 4) and out[3] == (1, 7)
-    assert out[4] == (2, 9) and out[5] == (3, 1)
-    assert out[6] == (0, 2) and out[7] == (0, 4)
-    util = {r.shard: (r.n_seqs, r.utilization) for r in
-            packing.pack_utilization(packed, "tok", 8, "shard").collect()}
-    assert util[0][0] == 4 and util[0][1] == pytest.approx(22 / 32)
-    assert util[1][0] == 1 and util[1][1] == pytest.approx(4 / 8)
-
-
-def test_greedy_pack_never_overfills_and_is_deterministic(spark):
-    """Property: no bin (except oversized singletons) exceeds budget,
-    order within bins follows order_col, repeated runs identical."""
-    import random
-    from geomesa_hive_spark.pipeline import packing
-
-    rng = random.Random(7)
-    rows = [(i, i % 3, rng.randint(0, 120)) for i in range(200)]
-    df = spark.createDataFrame(rows, "id LONG, shard INT, tok LONG")
-    a = packing.greedy_pack(df, "tok", "id", budget=256, shard_col="shard").collect()
-    b = packing.greedy_pack(df, "tok", "id", budget=256, shard_col="shard").collect()
-    assert sorted((r.id, r.seq_bin) for r in a) == sorted((r.id, r.seq_bin) for r in b)
-    fills = {}
-    for r in a:
-        key = (r.shard, r.seq_bin)
-        fills[key] = fills.get(key, 0) + r.tok
-    for (shard, bin_), tot in fills.items():
-        members = [r for r in a if (r.shard, r.seq_bin) == (shard, bin_)]
-        assert tot <= 256 or len(members) == 1  # oversized docs sit alone
-
-
 # ------------------------------------------------------------ PII / URLs
 def test_redact_pii_counts_and_replacement(spark):
     rows = [
@@ -1073,32 +1010,6 @@ def test_filter_by_quantile_deterministic(spark):
     again = {r.id for r in
              sampling.filter_by_quantile(df, "score", "g", 0.5, "id").collect()}
     assert kept == again
-
-
-# --------------------------------------------------------------- pagerank
-def test_pagerank_matches_reference(spark):
-    from geomesa_hive_spark.pipeline import graph
-
-    edges = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 3)]  # 3 is the hub
-    df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    got = {r.node: r.r for r in
-           graph.pagerank(df, "src", "dst", iters=4).collect()}
-
-    # independent integer reference
-    from collections import defaultdict
-    nodes = {1, 2, 3, 4}
-    deg = defaultdict(int)
-    for s, _ in edges:
-        deg[s] += 1
-    r = {n: 1_000_000 for n in nodes}
-    for _ in range(4):
-        inflow = defaultdict(int)
-        for s, d in edges:
-            inflow[d] += r[s] // deg[s]
-        r = {n: 150_000 + (85 * inflow[n]) // 100 for n in nodes}
-    assert got == r
-    # the hub outranks everyone; dangling node 4 bottoms out at base+0
-    assert got[3] == max(got.values()) and got[4] == 150_000
 
 
 def test_remove_boilerplate_lines(spark):
@@ -1630,41 +1541,6 @@ def test_opq_rotation_invariants(spark):
     assert np.abs(got - x.astype(np.float64) @ R.T).max() < 1e-12
 
 
-def test_triangle_count_brute_force(spark):
-    """Per-node counts equal an itertools brute force over all vertex
-    triples on a random graph (plus a known K4), and the count is
-    invariant to edge direction/duplication in the input."""
-    import itertools
-    import random
-
-    from geomesa_hive_spark.pipeline import graph
-
-    rnd = random.Random(6)
-    nodes = list(range(30))
-    und = {tuple(sorted(e)) for e in
-           (rnd.sample(nodes, 2) for _ in range(140))}
-    und |= {(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)}  # K4
-    adj = {n: set() for n in nodes}
-    for a, b in und:
-        adj[a].add(b); adj[b].add(a)
-    exp = {n: 0 for n in nodes}
-    for a, b, c in itertools.combinations(nodes, 3):
-        if b in adj[a] and c in adj[a] and c in adj[b]:
-            exp[a] += 1; exp[b] += 1; exp[c] += 1
-    exp = {n: v for n, v in exp.items() if v}
-
-    # feed edges with random orientation AND duplicates
-    rows = []
-    for a, b in und:
-        rows.append((a, b) if rnd.random() < 0.5 else (b, a))
-        if rnd.random() < 0.3:
-            rows.append((b, a))
-    df = spark.createDataFrame(rows, "src LONG, dst LONG")
-    got = {r.node: r.tri for r in
-           graph.triangle_count(df, "src", "dst").collect()}
-    assert got == exp
-
-
 def test_audio_spectrogram_planted_tone(spark):
     """A pure cosine at an exact FFT bin concentrates its energy in
     the band owning that bin (Hann leakage only reaches adjacent
@@ -1783,44 +1659,6 @@ def test_top_terms_ranking_and_stop_cut(spark):
         v.sort()
     assert full[1] == [(1, "apple", 900), (2, "common", 200)]
     assert full[2] == [(1, "banana", 600), (2, "zebra", 450)]
-
-
-def test_profile_columns(spark):
-    from geomesa_hive_spark.pipeline.profile import profile_columns
-
-    rows = [(1, "a", 2.5), (2, None, 2.5), (3, "b", None), (4, "a", -1.0)]
-    df = spark.createDataFrame(rows, "k LONG, s STRING, v DOUBLE")
-    out = {r.column: (r.n_rows, r.n_null, r.n_distinct, r.min_s, r.max_s)
-           for r in profile_columns(df, ["k", "s", "v"]).collect()}
-    assert out["k"] == (4, 0, 4, "1", "4")
-    assert out["s"] == (4, 1, 2, "a", "b")
-    # numeric min uses NUMERIC order (then stringifies): -1.0 < 2.5
-    assert out["v"] == (4, 1, 2, "-1.0", "2.5")
-
-
-def test_profile_columns_single_scan(spark, tmp_path):
-    """Profiling N columns must read the source ONCE (r4 verdict: the
-    per-column-agg union was 50 full scans at 50 columns). Asserted on
-    a real parquet source so the scan node is countable, for both the
-    exact (multi-distinct -> single-scan Expand) and approx (HLL, no
-    Expand) variants."""
-    from geomesa_hive_spark.pipeline.profile import profile_columns
-
-    p = str(tmp_path / "prof_src")
-    spark.createDataFrame(
-        [(1, "a", 2.5), (2, None, 2.5), (3, "b", None), (4, "a", -1.0)],
-        "k LONG, s STRING, v DOUBLE",
-    ).write.parquet(p)
-    src = spark.read.parquet(p)
-    for exact in (True, False):
-        out = profile_columns(src, ["k", "s", "v"], exact_distinct=exact)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Scan parquet") == 1, plan
-        got = {r.column: (r.n_rows, r.n_null, r.n_distinct)
-               for r in out.collect()}
-        assert got["k"] == (4, 0, 4)
-        assert got["s"] == (4, 1, 2)
-        assert got["v"] == (4, 1, 2)
 
 
 def test_bm25_topk_ranking_and_determinism(spark):
@@ -1995,34 +1833,6 @@ def test_chunk_documents_windows_and_coverage(spark):
         assert len(covered) == n
     with _pytest.raises(ValueError):
         chunk_documents(docs, "id", "text", chunk_tokens=4, overlap=4)
-
-
-def test_key_skew_report(spark):
-    """Key-skew diagnostic (pipeline/profile.py key_skew): exact
-    counts and integer-PPM shares on a known skewed distribution, the
-    (cnt desc, key) tiebreak, and top_k bounding."""
-    rows = [(k,) for k in [1] * 50 + [2] * 30 + [3] * 15 + [4] * 5]
-    df = spark.createDataFrame(rows, "k long")
-    out = {r.suppkey if hasattr(r, 'suppkey') else r.key:
-           (r.cnt, r.share_ppm, r.cum_rank)
-           for r in __import__('geomesa_hive_spark.pipeline.profile',
-                               fromlist=['key_skew'])
-           .key_skew(df, "k", top_k=3).collect()}
-    assert out == {
-        1: (50, 500000, 1),
-        2: (30, 300000, 2),
-        3: (15, 150000, 3),
-    }, out
-    # ADVICE r6: empty input returns an empty report (key keeps its
-    # input type), never a TypeError from the NULL sum
-    from geomesa_hive_spark.pipeline.profile import key_skew
-
-    empty = key_skew(df.filter("k < 0"), "k")
-    assert empty.count() == 0
-    assert [f.name for f in empty.schema.fields] == [
-        "key", "cnt", "share_ppm", "cum_rank"
-    ]
-    assert empty.schema["key"].dataType.simpleString() == "bigint"
 
 
 def test_bm25_index_matches_adhoc_and_prunes(spark, tmp_path):
@@ -2466,83 +2276,6 @@ def test_index_mutations_refuse_legacy_layout(spark, tmp_path):
         maintain_minhash_index(spark, mh)
 
 
-def test_check_constraints_all_kinds(spark):
-    """Every constraint kind computes the hand-checkable violation
-    count on a crafted frame, and the whole suite runs as ONE scan of
-    the source (plan-asserted)."""
-    from geomesa_hive_spark.pipeline.checks import check_constraints
-
-    rows = [
-        # (id, cat, price, code)
-        (1, "a", 10.0, "1-HIGH"),
-        (2, "b", -5.0, "2-MED"),      # price below lo
-        (3, "c", 10.0, "9-BAD"),      # cat not in set, code regex fail
-        (3, "a", 2000.0, "3-LOW"),    # duplicate id, price above hi
-        (None, "a", None, None),      # null id; null price/code don't count
-    ]
-    df = spark.createDataFrame(
-        rows, "id INT, cat STRING, price DOUBLE, code STRING")
-    out = check_constraints(df, [
-        {"kind": "not_null", "col": "id"},
-        {"kind": "unique", "col": "id"},
-        {"kind": "range", "col": "price", "lo": 0.0, "hi": 1000.0},
-        {"kind": "in_set", "col": "cat", "values": ["a", "b"]},
-        {"kind": "regex", "col": "code", "pattern": "^[1-5]-"},
-        {"kind": "custom", "name": "price_id", "expr": "price > id"},
-    ])
-    got = {r["name"]: (r["violations"], r["n_rows"], r["passed"])
-           for r in out.collect()}
-    assert got == {
-        "not_null_id": (1, 5, 0),
-        "unique_id": (1, 5, 0),          # 4 non-null ids, 3 distinct
-        "range_price": (2, 5, 0),
-        "in_set_cat": (1, 5, 0),
-        "regex_code": (1, 5, 0),
-        "price_id": (2, 5, 0),           # row 4 fails, null row fails
-    }
-    # clean column passes
-    ok = check_constraints(df, [{"kind": "not_null", "col": "cat"}])
-    assert ok.collect()[0]["passed"] == 1
-
-
-def test_check_constraints_single_scan_plan(spark, tmp_path):
-    """20 constraints over a parquet table still plan exactly one scan
-    of the source — the whole point versus one-job-per-constraint."""
-    from geomesa_hive_spark.pipeline.checks import check_constraints
-
-    path = str(tmp_path / "cc")
-    spark.range(0, 1000).selectExpr(
-        "id", "id % 7 AS a", "cast(id % 13 as string) AS s").write.parquet(path)
-    df = spark.read.parquet(path)
-    cons = []
-    for i in range(10):
-        cons.append({"kind": "range", "col": "a", "lo": 0, "hi": 6,
-                     "name": f"r{i}"})
-        cons.append({"kind": "not_null", "col": "s", "name": f"n{i}"})
-    cons.append({"kind": "unique", "col": "id"})
-    out = check_constraints(df, cons)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans == 1, f"expected 1 scan, got {n_scans}:\n{plan}"
-    got = {r["name"]: r["passed"] for r in out.collect()}
-    assert all(v == 1 for v in got.values()) and len(got) == 21
-
-
-def test_check_constraints_validation_errors(spark):
-    from geomesa_hive_spark.pipeline.checks import check_constraints
-
-    df = spark.range(3)
-    with pytest.raises(ValueError):
-        check_constraints(df, [])
-    with pytest.raises(ValueError):
-        check_constraints(df, [{"kind": "nope", "col": "id"}])
-    with pytest.raises(ValueError):
-        check_constraints(df, [
-            {"kind": "not_null", "col": "id", "name": "x"},
-            {"kind": "unique", "col": "id", "name": "x"},
-        ])
-
-
 def test_shuffle_shards_deterministic_permutation(spark):
     """shuffle_shards: shard∈[0,n), partition-invariant assignment,
     balanced shards, independent permutations per seed, and a total
@@ -2774,29 +2507,6 @@ def test_knn_join_index_matches_per_query_probes(spark, tmp_path):
     assert out2.filter(F.col("id") >= 40).count() == 0
 
 
-def test_shortest_paths_bfs(spark):
-    """shortest_paths: known distances on a hand-drawn directed graph,
-    direction respected, unreachable pairs absent, early frontier
-    termination, multi-landmark state kept per landmark."""
-    from geomesa_hive_spark.pipeline.graph import shortest_paths
-
-    # 1->2->3->4, 1->3 (shortcut), 5->1 (5 reaches all; nothing reaches 5)
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (1, 3), (5, 1)], "src long, dst long")
-    out = shortest_paths(edges, "src", "dst", [1, 4, 5], max_iters=10)
-    got = {(r.node, r.landmark): r.dist for r in out.collect()}
-    assert got[(1, 1)] == 0 and got[(2, 1)] == 1
-    assert got[(3, 1)] == 1          # shortcut beats 1->2->3
-    assert got[(4, 1)] == 2
-    assert got[(4, 4)] == 0
-    assert (1, 4) not in got         # direction respected: 4 reaches nothing
-    assert got[(4, 5)] == 3          # 5->1->3->4
-    # hop bound truncates
-    b = shortest_paths(edges, "src", "dst", [5], max_iters=1)
-    gb = {(r.node, r.landmark): r.dist for r in b.collect()}
-    assert gb == {(5, 5): 0, (1, 5): 1}
-
-
 def test_select_within_budget(spark):
     """select_within_budget: distributed prefix sum equals the global
     ordered cumsum — boundary doc included at exactly the budget, NULL
@@ -2983,38 +2693,6 @@ def test_knn_index_filtered_semantics(spark, tmp_path):
     assert S.knn_query_index(
         spark, path, qv, k=5, n_probe=8, pre_filter="vec_id < 0"
     ).count() == 0
-
-
-def test_distribution_drift_psi(spark):
-    """distribution_drift: identical snapshots give psi_micro == 0 per
-    bin (smoothed shares equal exactly when totals match), a shifted
-    snapshot concentrates positive PSI, NULLs land in bin -1, one-sided
-    bins stay finite via Laplace smoothing, empty edges refused."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from geomesa_hive_spark.pipeline.profile import distribution_drift
-
-    a = spark.createDataFrame(
-        [(float(v),) for v in (1, 2, 3, 10, 11, 12, 20, 21)] + [(None,)],
-        "v double")
-    same = {r.bin: r.psi_micro for r in
-            distribution_drift(a, a, "v", [5.0, 15.0]).collect()}
-    assert set(same) == {-1, 0, 1, 2}
-    assert all(p == 0 for p in same.values())
-
-    b = a.select((F.col("v") + 10.0).alias("v"))   # shift right
-    rep = {r.bin: r for r in
-           distribution_drift(a, b, "v", [5.0, 15.0]).collect()}
-    total_psi = sum(r.psi_micro for r in rep.values())
-    assert total_psi > 100_000        # > 0.1 PSI: a real shift
-    assert all(r.psi_micro >= 0 for r in rep.values())
-    assert rep[-1].cnt_a == rep[-1].cnt_b == 1      # NULL bin tracked
-    # bin 0 (v < 5) exists only in A -> smoothing keeps it finite
-    assert rep[0].cnt_b == 0 and rep[0].ppm_b > 0
-
-    with _pytest.raises(ValueError, match="non-empty"):
-        distribution_drift(a, b, "v", [])
 
 
 def test_ngram_containment_vs_jaccard(spark):

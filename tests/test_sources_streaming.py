@@ -20,55 +20,6 @@ SF = "/root/testdata/sf0.001"
 
 
 # ---------------------------------------------------------------------------
-# sources
-# ---------------------------------------------------------------------------
-
-
-def test_read_csv_wkt_roundtrip(spark, tmp_path):
-    p = tmp_path / "polys.csv"
-    p.write_text(
-        "name,wkt\n"
-        'a,"POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"\n'
-        'b,"POINT (5 5)"\n'
-    )
-    df = sources.read_csv_wkt(spark, str(p), wkt_col="wkt")
-    rows = {r["name"]: r for r in df.collect()}
-    assert rows["a"]["bbox"]["xmax"] == 2.0
-    assert rows["b"]["bbox"]["xmin"] == 5.0
-    assert rows["a"]["geom"] is not None
-
-
-def test_read_geojson_lines(spark, tmp_path):
-    p = tmp_path / "geoms.jsonl"
-    p.write_text(
-        '{"type": "Point", "coordinates": [1.0, 2.0]}\n'
-        '{"type": "Polygon", "coordinates": [[[0,0],[4,0],[4,4],[0,4],[0,0]]]}\n'
-    )
-    df = sources.read_geojson_lines(spark, str(p))
-    got = sorted(r["bbox"]["xmax"] for r in df.collect())
-    assert got == [1.0, 4.0]
-
-
-def test_spatial_parquet_window_read(spark, tmp_path):
-    path = str(tmp_path / "sp")
-    base = spark.range(100).select(
-        F.col("id"),
-        ST.st_makepoint(
-            (F.col("id") % 10).cast("double"), (F.col("id") / 10).cast("double")
-        ).alias("geom"),
-    )
-    sources.write_spatial_parquet(base, path, zoom=4)
-    # window covering x in [0,3], y in [0,3] → ids with x%10<=3 and id<40
-    win = sources.read_spatial_parquet(spark, path, bbox=(-0.5, -0.5, 3.5, 3.5))
-    ids = {r["id"] for r in win.select("id").collect()}
-    expect = {i for i in range(100) if (i % 10) <= 3 and (i // 10) <= 3}
-    assert ids == expect
-    # bbox conjunction must reach the parquet scan as pushed filters
-    plan = win._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "xmin" in plan
-
-
-# ---------------------------------------------------------------------------
 # streaming
 # ---------------------------------------------------------------------------
 
@@ -2877,118 +2828,6 @@ def test_mor_pruned_snapshot_read(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="key_range"):
         read_snapshot(spark, path, "k", key_range=(1, 2, 3))
-
-
-def test_geoparquet_roundtrip(spark, tmp_path):
-    """GeoParquet 1.1 writer/reader: every file carries spec 'geo'
-    footer metadata (WKB encoding, exact per-file bbox, covering
-    declaration); windowed read ≡ coordinate-range filter; per-file
-    bbox is tight against that file's contents; plain parquet raises
-    on geoparquet_meta; missing geometry column raises."""
-    import json as _json
-
-    import pyarrow.parquet as _pq
-    import pytest as _pytest
-
-    from pyspark.sql import functions as F
-
-    from geomesa_hive_spark.functions.registry import register_all
-    from geomesa_hive_spark.sources.spatial_io import (
-        geoparquet_meta, read_geoparquet, write_geoparquet,
-    )
-
-    register_all(spark)
-    n = 4000
-    base = spark.range(0, n).select(
-        F.col("id").alias("k"),
-        (((F.col("id") * 7919) % 36000) / 100.0 - 180.0).alias("x"),
-        (((F.col("id") * 4799) % 18000) / 100.0 - 90.0).alias("y"),
-    )
-    df = base.withColumn("geom", F.call_function("st_makepoint", "x", "y"))
-    path = str(tmp_path / "gpq")
-    summ = write_geoparquet(df, path, "geom", geometry_types=["Point"],
-                            n_files=8)
-    assert sum(s["n_rows"] for s in summ) == n and len(summ) == 8
-
-    # every file: geo metadata present, per-file bbox EXACT vs contents
-    for s in summ:
-        sch = _pq.read_schema(s["file"])
-        geo = _json.loads((sch.metadata or {})[b"geo"])
-        assert geo["primary_column"] == "geom"
-        gcol = geo["columns"]["geom"]
-        assert gcol["encoding"] == "WKB"
-        assert gcol["covering"]["bbox"]["xmin"] == ["bbox", "xmin"]
-        t = _pq.read_table(s["file"], columns=["x", "y"])
-        xs, ys = t.column("x").to_pylist(), t.column("y").to_pylist()
-        assert gcol["bbox"] == [min(xs), min(ys), max(xs), max(ys)]
-        assert s["n_rows"] == len(xs)
-
-    m = geoparquet_meta(path)
-    assert m["version"] == "1.1.0"
-
-    win = (-60.005, 0.005, -10.005, 50.005)
-    got = read_geoparquet(spark, path, bbox=win)
-    exp = df.filter((F.col("x") >= win[0]) & (F.col("x") <= win[2])
-                    & (F.col("y") >= win[1]) & (F.col("y") <= win[3]))
-    assert sorted(r.k for r in got.collect()) == \
-           sorted(r.k for r in exp.collect())
-    assert read_geoparquet(spark, path).count() == n
-
-    # coarse-only read (exact=False) is a superset via the covering col
-    coarse = read_geoparquet(spark, path, bbox=win, exact=False)
-    assert coarse.count() >= got.count()
-
-    # spark's own reader scans the files natively
-    assert spark.read.parquet(path).count() == n
-
-    plain = str(tmp_path / "plain")
-    base.write.parquet(plain)
-    with _pytest.raises(ValueError, match="geo"):
-        geoparquet_meta(plain)
-    with _pytest.raises(ValueError, match="geometry column"):
-        write_geoparquet(base, str(tmp_path / "nope"), "geom")
-    # ADVICE r7: a pre-existing user 'bbox' column is refused loudly,
-    # never silently replaced by the covering struct
-    with _pytest.raises(ValueError, match="bbox"):
-        write_geoparquet(df.withColumn("bbox", F.lit(1)),
-                         str(tmp_path / "nope2"), "geom")
-
-
-def test_geoparquet_file_pruning(spark, tmp_path):
-    """prune_files=True cuts the file list on per-file footer bboxes:
-    fewer files read, identical results; empty window reads nothing;
-    a covering-free (GeoParquet-1.0-style) file without bbox is kept
-    (superset cut)."""
-    from pyspark.sql import functions as F
-
-    from geomesa_hive_spark.functions.registry import register_all
-    from geomesa_hive_spark.sources.spatial_io import (
-        read_geoparquet, write_geoparquet,
-    )
-
-    register_all(spark)
-    base = spark.range(0, 4000).select(
-        F.col("id").alias("k"),
-        (((F.col("id") * 7919) % 36000) / 100.0 - 180.0).alias("x"),
-        (((F.col("id") * 4799) % 18000) / 100.0 - 90.0).alias("y"),
-    )
-    df = base.withColumn("geom", F.call_function("st_makepoint", "x", "y"))
-    path = str(tmp_path / "gpqp")
-    write_geoparquet(df, path, "geom", n_files=12)
-
-    win = (-60.005, 0.005, -10.005, 50.005)
-    rep = {}
-    got = read_geoparquet(spark, path, bbox=win, prune_files=True,
-                          prune_report=rep)
-    assert 0 < rep["files_kept"] < rep["files_total"] == 12, rep
-    full = read_geoparquet(spark, path, bbox=win)
-    assert sorted(r.k for r in got.collect()) == \
-           sorted(r.k for r in full.collect())
-
-    rep2 = {}
-    nothing = read_geoparquet(spark, path, bbox=(200.0, 95.0, 210.0, 99.0),
-                              prune_files=True, prune_report=rep2)
-    assert rep2["files_kept"] == 0 and nothing.count() == 0
 
 
 def test_mor_timestamp_travel(spark, tmp_path):

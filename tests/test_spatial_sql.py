@@ -859,3 +859,30 @@ def test_join_rewrite_fall_throughs(spark):
         assert [(r.id, r.rid) for r in got] == [(2, 10)]
     finally:
         uninstall(spark)
+
+
+def test_install_and_spatial_sql_hand_spark_the_same_rewrite():
+    """install()'s wrapper and spatial_sql() run one rewrite chain: for a
+    window predicate, a PBSM join and an st_extent aggregate, both hand
+    spark.sql the same rewritten string."""
+    from geomesa_hive_spark.operators.spatial_sql import install
+
+    class CaptureSession:
+        def __init__(self):
+            self.seen = []
+
+        def sql(self, text):
+            self.seen.append(text)
+
+    queries = [
+        "SELECT id FROM t WHERE st_intersects(bbox, st_makeBBOX(0, 0, 1, 1))",
+        "SELECT z.id AS zid, count(*) AS n FROM pts p JOIN zones z "
+        "ON ST_Intersects(p.geom, z.geom) GROUP BY z.id",
+        "SELECT k, st_extent(g) AS e FROM t GROUP BY k",
+    ]
+    for q in queries:
+        direct, installed = CaptureSession(), install(CaptureSession())
+        spatial_sql(direct, q)
+        installed.sql(q)
+        assert len(direct.seen) == 1 and direct.seen[0] != q
+        assert installed.seen == direct.seen
