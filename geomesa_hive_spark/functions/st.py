@@ -500,6 +500,17 @@ def _extents_to_geoms(df: pd.DataFrame) -> list[Geometry | None]:
     return out
 
 
+def _point_extents_xy(df: pd.DataFrame):
+    """(x, y) of an extent batch whose every non-null extent is
+    degenerate (xmin == xmax and ymin == ymax — the bbox of a point),
+    NaN x for a null extent; None if any extent has area or length."""
+    xmin, ymin, xmax, ymax = _extent_cols(df)
+    null = np.isnan(xmin) | np.isnan(ymin) | np.isnan(xmax) | np.isnan(ymax)
+    if not (null | ((xmin == xmax) & (ymin == ymax))).all():
+        return None
+    return np.where(null, np.nan, xmin), ymin
+
+
 def _tight_bbox_intersects(a_cols, b_cols):
     ax0, ay0, ax1, ay1 = a_cols
     bx0, by0, bx1, by1 = b_cols
@@ -520,6 +531,10 @@ def _poly_predicate_udf(fn, extent_extent_fn, pip_includes_boundary: bool | None
     - extent/extent: vectorized numpy bbox comparison (tight form — the
       reference's loosened OR-form is documented-divergent, SURVEY §4.1 ⚠️)
     - point-batch vs constant geometry: vectorized PIP
+    - extent-batch vs constant geometry, intersects/disjoint only: when
+      every non-null extent of the batch is degenerate (xmin == xmax and
+      ymin == ymax — the bbox of a point), the same vectorized PIP on
+      (xmin, ymin); a batch with any other extent takes the per-row path
     - general: per-row DE-9IM via the kernel
     """
 
@@ -531,26 +546,20 @@ def _poly_predicate_udf(fn, extent_extent_fn, pip_includes_boundary: bool | None
             out = pd.Series(ok, dtype=object)
             out[isnull] = None
             return out
-        if a_ext:
-            ga = _extents_to_geoms(a)
-        else:
-            ga = None
-        if b_ext:
-            gb = _extents_to_geoms(b)
-        else:
-            gb = None
+        res = None
+        if a_ext != b_ext and fn.__name__ in ("intersects", "disjoint"):
+            ext, const = (a, b) if a_ext else (b, a)
+            res = _vec_const(lambda: _point_extents_xy(ext), const, swapped=b_ext)
         # vectorized points-vs-constant fast path (binary/binary only)
-        if not a_ext and not b_ext and pip_includes_boundary is not None:
+        elif not a_ext and not b_ext and pip_includes_boundary is not None:
             res = _vec_points_const(a, b, swapped=False)
             if res is None:
                 res = _vec_points_const(b, a, swapped=True)
-            if res is not None:
-                return res
+        if res is not None:
+            return res
         parse = parse_cache()
-        if ga is None:
-            ga = [parse(v) for v in a]
-        if gb is None:
-            gb = [parse(v) for v in b]
+        ga = _extents_to_geoms(a) if a_ext else [parse(v) for v in a]
+        gb = _extents_to_geoms(b) if b_ext else [parse(v) for v in b]
         return _series(
             [
                 None if x is None or y is None else bool(fn(x, y))
@@ -559,6 +568,15 @@ def _poly_predicate_udf(fn, extent_extent_fn, pip_includes_boundary: bool | None
         )
 
     def _vec_points_const(pts_side: pd.Series, const_side: pd.Series, swapped: bool):
+        return _vec_const(
+            lambda: wkb_array_to_points(pts_side.to_numpy(dtype=object)), const_side, swapped
+        )
+
+    def _vec_const(xy, const_side: pd.Series, swapped: bool):
+        """predicate(points, const) for a batch whose other side is one
+        constant geometry. ``xy()`` gives the points as (x, y) arrays (NaN
+        x: a NULL point), or None when they are not all points. None when
+        the other side varies or the predicate has no vectorized form."""
         first = None
         cv = const_side.to_numpy(dtype=object)
         for v in cv:
@@ -569,13 +587,12 @@ def _poly_predicate_udf(fn, extent_extent_fn, pip_includes_boundary: bool | None
                 elif fb != first:
                     return None
         if first is None:
-            return _series([None] * len(pts_side))
-        fp = wkb_array_to_points(pts_side.to_numpy(dtype=object))
+            return _series([None] * len(cv))
+        fp = xy()
         if fp is None:
             return None
         x, y = fp
-        const_g = from_wkb(first)
-        vals = _vec_eval(x, y, const_g, swapped)
+        vals = _vec_eval(x, y, from_wkb(first), swapped)
         if vals is None:
             return None
         out = pd.Series(vals, dtype=object)

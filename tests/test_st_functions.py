@@ -406,3 +406,105 @@ def test_linear_ref_sql_surface_nulls(spark):
     assert abs(r.f - 1.0 / 7.0) < 1e-12
     assert r.s == "LINESTRING (0 0, 3 0, 3 4)"
     assert all(getattr(r, f"n{i}") is None for i in range(1, 6))
+
+
+def _boundary_band(g):
+    """Points on every vertex and edge of ``g``'s rings, and at ±1e-12,
+    ±5e-8 and ±2e-7 off them (inside and outside the kernel's relative
+    boundary band, about 2e-8 at these coordinates)."""
+    import math
+
+    pts = []
+    for ring in [g.shell, *g.holes]:
+        for (x0, y0), (x1, y1) in zip(ring[:-1, :2], ring[1:, :2]):
+            dx, dy = x1 - x0, y1 - y0
+            ln = math.hypot(dx, dy)
+            nx, ny = -dy / ln, dx / ln
+            pts.append((x0, y0))
+            for d in (1e-12, 5e-8, 2e-7):
+                pts += [(x0 + d, y0 + d), (x0 - d, y0 - d)]
+            for t in (0.25, 0.5, 0.731):
+                ex, ey = x0 + t * dx, y0 + t * dy
+                pts.append((ex, ey))
+                for d in (1e-12, 5e-8, 2e-7):
+                    pts += [(ex + d * nx, ey + d * ny), (ex - d * nx, ey - d * ny)]
+    return pts
+
+
+def test_point_extent_fast_path_matches_point_path_and_kernel(spark, monkeypatch):
+    """st_intersects/st_disjoint of a batch of degenerate extents against
+    a constant geometry take the vectorized point path; it must agree,
+    row for row, with the point-WKB path and with the scalar kernel on
+    the boundary band of a convex literal and of a concave literal with
+    a hole. NULL extents and a NULL literal give NULL; a batch with one
+    extent that has area takes the per-row path."""
+    import numpy as np
+    import pandas as pd
+
+    from geomesa_hive_spark.functions import st
+    from geomesa_hive_spark.geom import algorithms as alg
+    from geomesa_hive_spark.geom import from_wkt, to_wkb, to_wkt
+    from geomesa_hive_spark.geom.core import Polygon
+    from geomesa_hive_spark.geom.wkb import points_to_wkb_array
+
+    calls = []
+    real_xy = st._point_extents_xy
+
+    def spy(df):
+        calls.append(real_xy(df))
+        return calls[-1]
+
+    monkeypatch.setattr(st, "_point_extents_xy", spy)
+    intersects, disjoint = st.SPEC["st_intersects"].func, st.SPEC["st_disjoint"].func
+    convex = from_wkt(
+        "POLYGON ((-73.98 40.71, -73.951 40.7157, -73.9381 40.739, -73.9433 40.7633, "
+        "-73.967 40.7769, -73.9942 40.7712, -74.0071 40.7479, -74.0019 40.7236, -73.98 40.71))"
+    )
+    concave = from_wkt(
+        "POLYGON ((-74.1 40.6, -73.9 40.6, -73.9 40.8, -73.97 40.8, -73.97 40.68, "
+        "-74.03 40.68, -74.03 40.8, -74.1 40.8, -74.1 40.6), "
+        "(-74.08 40.62, -74.05 40.62, -74.05 40.65, -74.08 40.65, -74.08 40.62))"
+    )
+    for w in (convex, concave):
+        pts = _boundary_band(w) + [tuple(w.shell[0, :2] + 0.01)]
+        x = np.array([p[0] for p in pts])
+        y = np.array([p[1] for p in pts])
+        x[np.arange(len(pts)) % 17 == 5] = np.nan  # a NULL extent
+        ymax = np.where(np.arange(len(pts)) % 17 == 9, np.nan, y)  # one NULL field
+        null = np.isnan(x) | np.isnan(ymax)
+        ext = pd.DataFrame({"xmin": x, "ymin": y, "xmax": x, "ymax": ymax})
+        lit = pd.Series([to_wkb(w)] * len(pts), dtype=object)
+        pt_wkb = pd.Series(points_to_wkb_array(x, y), dtype=object)
+        pt_wkb[null] = None
+        want = [
+            None if n else bool(alg.intersects(Polygon([[a, b]] * 5), w))
+            for a, b, n in zip(x, y, null)
+        ]
+        assert 0 < sum(v is True for v in want) < len(pts) - null.sum()
+        got = list(intersects(ext, lit))
+        assert calls[-1] is not None  # took the fast path
+        assert got == list(intersects(pt_wkb, lit)) == want
+        assert list(intersects(lit, ext)) == want
+        assert list(disjoint(ext, lit)) == [None if v is None else not v for v in want]
+        assert list(intersects(ext, pd.Series([None] * len(pts), dtype=object))) == [None] * len(pts)
+        # one extent with area: the whole batch goes per row, same answers
+        mixed = ext.copy()
+        mixed.loc[0, "xmax"] = mixed.loc[0, "xmin"] + 1e-3
+        got_mixed = list(intersects(mixed, lit))
+        assert calls[-1] is None
+        box = mixed.iloc[0]
+        assert got_mixed[0] == alg.intersects(
+            Polygon([[box.xmin, box.ymin], [box.xmax, box.ymin], [box.xmax, box.ymax],
+                     [box.xmin, box.ymax], [box.xmin, box.ymin]]), w)
+        assert got_mixed[1:] == want[1:]
+
+    # the same through Spark SQL: extent batches arrive as DataFrames
+    pts = [(float(a), float(b)) for a, b in _boundary_band(concave)]
+    spark.createDataFrame(pts, "x double, y double").createOrReplaceTempView("band_pts")
+    w = to_wkt(concave)
+    rows = spark.sql(
+        f"SELECT st_intersects(st_makeExtent(x, y, x, y), st_geomFromWKT('{w}')) AS e, "
+        f"st_intersects(st_makePoint(x, y), st_geomFromWKT('{w}')) AS p FROM band_pts"
+    ).collect()
+    assert [r.e for r in rows] == [r.p for r in rows]
+    assert any(r.e for r in rows) and not all(r.e for r in rows)
