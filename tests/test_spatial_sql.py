@@ -682,9 +682,18 @@ def test_convexhull_sql_two_phase(spark):
         "SELECT /* c */ k, st_convexhull(g) AS h FROM cvx_t GROUP BY k",
         "SELECT k, st_convexhull(g) AS h FROM cvx_t GROUP BY k "
         "UNION ALL SELECT 9, NULL",
+        "SELECT k, st_convexhull(g) AS h FROM cvx_t -- c\nGROUP BY k",
     ]
     for q in untouched:
         assert rewrite_convexhull_agg(q) == q, q
+    # a comment marker or an escaped quote inside a string literal is text
+    for lit in ("'x--y'", "'a\\'b'"):
+        assert rewrite_convexhull_agg(
+            f"SELECT k, st_convexhull(g) AS h FROM cvx_t WHERE s = {lit} GROUP BY k"
+        ) == (
+            "SELECT __gk0 AS k, st_convexhull(__ph0) AS h FROM (SELECT k AS __gk0, "
+            "st_convexhull(g) AS __ph0 FROM (SELECT *, spark_partition_id() AS __pid "
+            f"FROM cvx_t) cvx_t WHERE s = {lit} GROUP BY k, __pid) __cvx GROUP BY __gk0")
 
 
 def test_extent_agg_rewrite_native_and_identical(spark):
@@ -736,6 +745,15 @@ def test_extent_agg_rewrite_native_and_identical(spark):
                "GROUP BY k")
     assert rewrite_extent_agg(q_mixed) == q_mixed
     assert spark.sql(q_mixed).count() == 3
+
+    # '--' and an escaped quote inside literals are text; a real comment
+    # still falls through (the clause slices are pasted verbatim)
+    q_lit = "SELECT st_extent(g) AS e FROM ext_t WHERE 'x--y' <> 'a\\'b'"
+    assert rewrite_extent_agg(q_lit).endswith(
+        " AS e FROM (SELECT st_extentfromgeom(g) AS __bb0 FROM ext_t "
+        "WHERE 'x--y' <> 'a\\'b') __cvx")
+    q_com = "SELECT st_extent(g) AS e FROM ext_t WHERE k < 2 -- c"
+    assert rewrite_extent_agg(q_com) == q_com
 
     # all-null group → NULL on both paths
     spark.sql("SELECT 1 AS k, CAST(NULL AS BINARY) AS g") \
@@ -908,12 +926,118 @@ def test_rewrite_leaves_literals_and_comments_alone():
     assert rewrite_spatial_join(join) == join
 
 
+
+# every recognized predicate shape with the exact text it becomes, and the
+# shapes that stay as written; bbox is the extent column
+_PIN_SHAPES = (
+    ('st_intersects(bbox, st_makeBBOX(1, 2, 3, 4))',
+     '(bbox.xmin <= 3 AND bbox.xmax >= 1 AND bbox.ymin <= 4 AND bbox.ymax >= 2)'),
+    ('st_intersects(st_makeBBOX(1, 2, 3, 4), bbox)',
+     '(bbox.xmin <= 3 AND bbox.xmax >= 1 AND bbox.ymin <= 4 AND bbox.ymax >= 2)'),
+    ('st_intersects(bbox, st_makePoint(1, 2))',
+     '(bbox.xmin <= 1 AND bbox.xmax >= 1 AND bbox.ymin <= 2 AND bbox.ymax >= 2)'),
+    ('st_intersects(st_makePoint(1, 2), bbox)',
+     '(bbox.xmin <= 1 AND bbox.xmax >= 1 AND bbox.ymin <= 2 AND bbox.ymax >= 2)'),
+    ("st_intersects(bbox, st_geomFromWKT('POLYGON ((0 0, 4 0, 0 4, 0 0))'))",
+     "((bbox.xmin <= 4.0 AND bbox.xmax >= 0.0 AND bbox.ymin <= 4.0 AND bbox.ymax >= 0.0) AND st_intersects(bbox, st_geomFromWKT('POLYGON ((0 0, 4 0, 0 4, 0 0))')))"),
+    ("st_intersects(st_geomFromWKT('POLYGON ((0 0, 4 0, 0 4, 0 0))'), bbox)",
+     "((bbox.xmin <= 4.0 AND bbox.xmax >= 0.0 AND bbox.ymin <= 4.0 AND bbox.ymax >= 0.0) AND st_intersects(st_geomFromWKT('POLYGON ((0 0, 4 0, 0 4, 0 0))'), bbox))"),
+    ('st_intersects(bbox, st_extentFromGeom(st_makePoint(1, 2)))',
+     '(bbox.xmin <= 1 AND bbox.xmax >= 1 AND bbox.ymin <= 2 AND bbox.ymax >= 2)'),
+    ('st_intersects(st_extentFromGeom(st_makePoint(1, 2)), bbox)',
+     '(bbox.xmin <= 1 AND bbox.xmax >= 1 AND bbox.ymin <= 2 AND bbox.ymax >= 2)'),
+    ("st_intersects(bbox, st_extentFromGeom(st_geomFromWKT('LINESTRING (0 1, 3 5)')))",
+     '(bbox.xmin <= 3.0 AND bbox.xmax >= 0.0 AND bbox.ymin <= 5.0 AND bbox.ymax >= 1.0)'),
+    ("st_intersects(st_extentFromGeom(st_geomFromWKT('LINESTRING (0 1, 3 5)')), bbox)",
+     '(bbox.xmin <= 3.0 AND bbox.xmax >= 0.0 AND bbox.ymin <= 5.0 AND bbox.ymax >= 1.0)'),
+    ('st_contains(bbox, st_makeBBOX(1, 2, 3, 4))',
+     '(bbox.xmin <= 1 AND bbox.ymin <= 2 AND bbox.xmax >= 3 AND bbox.ymax >= 4)'),
+    ('st_contains(st_makeBBOX(1, 2, 3, 4), bbox)',
+     '(bbox.xmin >= 1 AND bbox.xmax <= 3 AND bbox.ymin >= 2 AND bbox.ymax <= 4)'),
+    ('st_contains(bbox, st_makePoint(1, 2))',
+     '((bbox.xmin <= 1 AND bbox.ymin <= 2 AND bbox.xmax >= 1 AND bbox.ymax >= 2) AND st_contains(bbox, st_makePoint(1, 2)))'),
+    ('st_contains(st_makePoint(1, 2), bbox)',
+     '((bbox.xmin >= 1 AND bbox.xmax <= 1 AND bbox.ymin >= 2 AND bbox.ymax <= 2) AND st_contains(st_makePoint(1, 2), bbox))'),
+    ("st_contains(bbox, st_geomFromWKT('POLYGON ((0 0, 4 0, 0 4, 0 0))'))",
+     "((bbox.xmin <= 0.0 AND bbox.ymin <= 0.0 AND bbox.xmax >= 4.0 AND bbox.ymax >= 4.0) AND st_contains(bbox, st_geomFromWKT('POLYGON ((0 0, 4 0, 0 4, 0 0))')))"),
+    ("st_contains(st_geomFromWKT('POLYGON ((0 0, 4 0, 0 4, 0 0))'), bbox)",
+     "((bbox.xmin >= 0.0 AND bbox.xmax <= 4.0 AND bbox.ymin >= 0.0 AND bbox.ymax <= 4.0) AND st_contains(st_geomFromWKT('POLYGON ((0 0, 4 0, 0 4, 0 0))'), bbox))"),
+    ('st_contains(bbox, st_extentFromGeom(st_makePoint(1, 2)))',
+     '(bbox.xmin <= 1 AND bbox.ymin <= 2 AND bbox.xmax >= 1 AND bbox.ymax >= 2)'),
+    ('st_contains(st_extentFromGeom(st_makePoint(1, 2)), bbox)',
+     '(bbox.xmin >= 1 AND bbox.xmax <= 1 AND bbox.ymin >= 2 AND bbox.ymax <= 2)'),
+    ("st_contains(bbox, st_extentFromGeom(st_geomFromWKT('LINESTRING (0 1, 3 5)')))",
+     '(bbox.xmin <= 0.0 AND bbox.ymin <= 1.0 AND bbox.xmax >= 3.0 AND bbox.ymax >= 5.0)'),
+    ("st_contains(st_extentFromGeom(st_geomFromWKT('LINESTRING (0 1, 3 5)')), bbox)",
+     '(bbox.xmin >= 0.0 AND bbox.xmax <= 3.0 AND bbox.ymin >= 1.0 AND bbox.ymax <= 5.0)'),
+    ('st_within(bbox, st_makeBBOX(1, 2, 3, 4))',
+     '(bbox.xmin >= 1 AND bbox.xmax <= 3 AND bbox.ymin >= 2 AND bbox.ymax <= 4)'),
+    ('st_within(st_makeBBOX(1, 2, 3, 4), bbox)',
+     '(bbox.xmin <= 1 AND bbox.ymin <= 2 AND bbox.xmax >= 3 AND bbox.ymax >= 4)'),
+    ('st_within(bbox, st_makePoint(1, 2))',
+     '((bbox.xmin >= 1 AND bbox.xmax <= 1 AND bbox.ymin >= 2 AND bbox.ymax <= 2) AND st_within(bbox, st_makePoint(1, 2)))'),
+    ('st_within(st_makePoint(1, 2), bbox)',
+     '((bbox.xmin <= 1 AND bbox.ymin <= 2 AND bbox.xmax >= 1 AND bbox.ymax >= 2) AND st_within(st_makePoint(1, 2), bbox))'),
+    ("st_within(bbox, st_geomFromWKT('POLYGON ((0 0, 4 0, 0 4, 0 0))'))",
+     "((bbox.xmin >= 0.0 AND bbox.xmax <= 4.0 AND bbox.ymin >= 0.0 AND bbox.ymax <= 4.0) AND st_within(bbox, st_geomFromWKT('POLYGON ((0 0, 4 0, 0 4, 0 0))')))"),
+    ("st_within(st_geomFromWKT('POLYGON ((0 0, 4 0, 0 4, 0 0))'), bbox)",
+     "((bbox.xmin <= 0.0 AND bbox.ymin <= 0.0 AND bbox.xmax >= 4.0 AND bbox.ymax >= 4.0) AND st_within(st_geomFromWKT('POLYGON ((0 0, 4 0, 0 4, 0 0))'), bbox))"),
+    ('st_within(bbox, st_extentFromGeom(st_makePoint(1, 2)))',
+     '(bbox.xmin >= 1 AND bbox.xmax <= 1 AND bbox.ymin >= 2 AND bbox.ymax <= 2)'),
+    ('st_within(st_extentFromGeom(st_makePoint(1, 2)), bbox)',
+     '(bbox.xmin <= 1 AND bbox.ymin <= 2 AND bbox.xmax >= 1 AND bbox.ymax >= 2)'),
+    ("st_within(bbox, st_extentFromGeom(st_geomFromWKT('LINESTRING (0 1, 3 5)')))",
+     '(bbox.xmin >= 0.0 AND bbox.xmax <= 3.0 AND bbox.ymin >= 1.0 AND bbox.ymax <= 5.0)'),
+    ("st_within(st_extentFromGeom(st_geomFromWKT('LINESTRING (0 1, 3 5)')), bbox)",
+     '(bbox.xmin <= 0.0 AND bbox.ymin <= 1.0 AND bbox.xmax >= 3.0 AND bbox.ymax >= 5.0)'),
+    ('st_dwithin(bbox, st_makePoint(1, 2), 0.5)',
+     '((bbox.xmin <= 1.5 AND bbox.xmax >= 0.5 AND bbox.ymin <= 2.5 AND bbox.ymax >= 1.5) AND st_dwithin(bbox, st_makePoint(1, 2), 0.5))'),
+    ('st_dwithin(st_makePoint(1, 2), bbox, 0.5)',
+     '((bbox.xmin <= 1.5 AND bbox.xmax >= 0.5 AND bbox.ymin <= 2.5 AND bbox.ymax >= 1.5) AND st_dwithin(st_makePoint(1, 2), bbox, 0.5))'),
+    ('st_dwithin(bbox, st_makeBBOX(1, 2, 3, 4), 0.5)',
+     '((bbox.xmin <= 3.5 AND bbox.xmax >= 0.5 AND bbox.ymin <= 4.5 AND bbox.ymax >= 1.5) AND st_dwithin(bbox, st_makeBBOX(1, 2, 3, 4), 0.5))'),
+    ('st_dwithin(st_makeBBOX(1, 2, 3, 4), bbox, 0.5)',
+     '((bbox.xmin <= 3.5 AND bbox.xmax >= 0.5 AND bbox.ymin <= 4.5 AND bbox.ymax >= 1.5) AND st_dwithin(st_makeBBOX(1, 2, 3, 4), bbox, 0.5))'),
+    ("st_dwithin(bbox, st_geomFromWKT('POINT (3 1)'), 0.5)",
+     "((bbox.xmin <= 3.5 AND bbox.xmax >= 2.5 AND bbox.ymin <= 1.5 AND bbox.ymax >= 0.5) AND st_dwithin(bbox, st_geomFromWKT('POINT (3 1)'), 0.5))"),
+    ("st_dwithin(st_geomFromWKT('POINT (3 1)'), bbox, 0.5)",
+     "((bbox.xmin <= 3.5 AND bbox.xmax >= 2.5 AND bbox.ymin <= 1.5 AND bbox.ymax >= 0.5) AND st_dwithin(st_geomFromWKT('POINT (3 1)'), bbox, 0.5))"),
+)
+_PIN_UNTOUCHED = (
+    "st_dwithin(bbox, st_makePoint(1, 2), -1)",                      # negative d
+    "st_intersects(bbox, st_geomFromWKT('NOPE'))",                   # WKT does not parse
+    "st_dwithin(bbox, st_extentFromGeom(st_makePoint(1, 2)), 1)",    # extent under dwithin
+    "st_intersects(f(bbox), st_makeBBOX(1, 2, 3, 4))",               # not an identifier
+    "st_intersects(bbox, st_makePoint(1, 2, 3))",                    # 3-argument point
+)
+
+
+def test_predicate_rewrite_pins_every_shape():
+    """Each literal kind in both argument orders under intersects,
+    contains and within, dwithin over a point, a box and WKT, and the
+    fall-throughs, all as exact text; a typer that finds the column is
+    no extent leaves every one as written."""
+    from geomesa_hive_spark.operators.spatial_sql import _rewrite_predicates
+
+    for sql, want in _PIN_SHAPES:
+        assert rewrite_spatial_predicates(sql) == want, sql
+    for sql in _PIN_UNTOUCHED:
+        assert rewrite_spatial_predicates(sql) == sql, sql
+    for sql in [s for s, _ in _PIN_SHAPES] + list(_PIN_UNTOUCHED):
+        assert _rewrite_predicates(sql, lambda col: False) == sql, sql
+
+
 _SPAN_PREDS = (
     "st_intersects(bbox, st_makeBBOX(0, 0, 1, 1))",
     "ST_Within(t.bbox, ST_MakeExtent(1.5, 2, 3, 4))",
     "st_contains(st_geomFromWKT('POLYGON ((0 0, 4 0, 0 4, 0 0))'), bbox)",
     "st_dwithin(bbox, st_makePoint(1, 2), 0.5)",
     "ST_Intersects(geom, ST_GeomFromWKT('POINT (1 1)'))",
+    "st_intersects(st_makePoint(1, 2), bbox)",
+    "ST_Within(bbox, st_extentFromGeom(st_makePoint(1, 2)))",
+    "st_contains(bbox, st_extentFromGeom(st_geomFromWKT('POINT (3 1)')))",
+    "st_dwithin(bbox, st_makeBBOX(0, 0, 1, 1), 0.25)",
+    "st_dwithin(st_geomFromWKT('POINT (1 1)'), t.bbox, 2)",
 )
 
 
@@ -1066,16 +1190,42 @@ def test_spatial_sql_geom_shape_analyzes_once_with_pushdown(spark, tmp_path, mon
     assert out.collect()[0].n > 0
 
 
-def test_spatial_sql_untyped_cte_column_still_falls_back(spark):
+def test_spatial_sql_untyped_cte_column_still_falls_back(spark, capfd, caplog):
     """A CTE's column cannot be typed from the catalog, so it gets the
     untyped rewrite; when that column is a binary geometry the rewritten
     text fails analysis and the untouched query answers — the one case
-    the fallback is kept for."""
+    the fallback is kept for. The handled failure logs one WARNING that
+    names the error condition, and no JVM stack reaches stderr."""
+    import logging
+
     from geomesa_hive_spark.operators.spatial_sql import _rewrite
 
     _grid(spark)
     raw = ("WITH c AS (SELECT id, geom AS g FROM sql_grid) SELECT id FROM c "
            "WHERE st_intersects(g, st_makeBBOX(2.5, 2.5, 5.5, 5.5)) ORDER BY id")
     assert "g.xmin" in _rewrite(spark, raw)
-    got = [r.id for r in spatial_sql(spark, raw).collect()]
+
+    class Keep(logging.Handler):
+        def emit(self, record):
+            kept.append(record)
+
+    # PySpark's query-error logger writes each analysis error, with its
+    # JVM stack, to the stderr it saw when it was made
+    kept, keep = [], Keep()
+    errors = logging.getLogger("SQLQueryContextLogger")
+    errors.addHandler(keep)
+    try:
+        capfd.readouterr()
+        with caplog.at_level(logging.WARNING):
+            got = [r.id for r in spatial_sql(spark, raw).collect()]
+        assert "at org.apache.spark" not in capfd.readouterr().err
+        assert kept == []
+        warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+        assert len(warnings) == 1 and "INVALID_EXTRACT_BASE_FIELD_TYPE" in warnings[0].getMessage()
+        # a failure of the query as written still raises and logs
+        with pytest.raises(Exception, match="UNRESOLVED_COLUMN"):
+            spatial_sql(spark, raw.replace("SELECT id FROM c", "SELECT nope FROM c"))
+        assert len(kept) == 1
+    finally:
+        errors.removeHandler(keep)
     assert got == [r.id for r in spark.sql(raw).collect()] and len(got) == 9
