@@ -32,6 +32,13 @@ Arrow-batched pandas UDFs.
 
 __version__ = "0.1.0"
 
+import sys as _sys
+
+if "pyspark.worker_util" in _sys.modules:  # inside a Spark Python worker
+    from geomesa_hive_spark import _worker
+
+    _worker.install()
+
 
 def register_all(spark):
     """Register every ST_* SQL function on the session (lazy import so the

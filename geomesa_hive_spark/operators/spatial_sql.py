@@ -67,6 +67,7 @@ stack, is dropped for the rewritten attempt only.
 from __future__ import annotations
 
 import logging
+import math
 import re
 import threading
 
@@ -245,8 +246,10 @@ def _wkt_geom(lit: str):
 # - a geometry literal's envelope is only necessary, for all three;
 # - dwithin keeps it: per axis Chebyshev ≤ Euclidean distance, so the box
 #   grown by d is implied by distance ≤ d but is not exact (corner gaps).
-# An unparseable WKT, a negative d and a column the typed rewrite finds
-# is no extent leave the call as written.
+# An unparseable WKT, a negative d, a column the typed rewrite finds is
+# no extent and bounds that are not all finite (an empty geometry's NaN,
+# an overflowing number or d; Spark would read ``nan``/``inf`` as column
+# names) leave the call as written.
 
 _PRED_CALL = re.compile(
     r"\b(st_intersects|st_contains|st_within|st_dwithin)\s*\(", re.IGNORECASE)
@@ -353,6 +356,8 @@ def _predicate(fn: str, args: list, call: str, is_extent):
     else:
         mode = _mode(fn, c == 0)
         keep = kind == "geometry" or (kind == "point" and mode != "intersects")
+    if not all(math.isfinite(float(b)) for b in bounds):
+        return None
     conj = _conj(col, *bounds, mode)
     return f"({conj} AND {call})" if keep else conj
 

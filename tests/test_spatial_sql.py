@@ -1009,6 +1009,8 @@ _PIN_UNTOUCHED = (
     "st_dwithin(bbox, st_extentFromGeom(st_makePoint(1, 2)), 1)",    # extent under dwithin
     "st_intersects(f(bbox), st_makeBBOX(1, 2, 3, 4))",               # not an identifier
     "st_intersects(bbox, st_makePoint(1, 2, 3))",                    # 3-argument point
+    "st_intersects(bbox, st_geomFromWKT('POINT EMPTY'))",            # NaN bounds
+    "st_dwithin(bbox, st_makePoint(0, 0), 1e400)",                   # infinite d
 )
 
 
@@ -1188,6 +1190,21 @@ def test_spatial_sql_geom_shape_analyzes_once_with_pushdown(spark, tmp_path, mon
     assert "st_geomfromwkt" not in out._jdf.queryExecution().executedPlan().toString().lower()
     assert out.collect() == spark.sql(sql).collect()
     assert out.collect()[0].n > 0
+
+
+def test_spatial_sql_non_finite_literal_keeps_the_other_pushdown(spark, tmp_path):
+    """An empty geometry literal has NaN bounds: its call stays as
+    written, so the rewritten text still analyzes and the other term's
+    bbox comparisons still reach the scan's PushedFilters."""
+    _grid(spark).write.mode("overwrite").parquet(str(tmp_path / "grid_pq_empty"))
+    spark.read.parquet(str(tmp_path / "grid_pq_empty")).createOrReplaceTempView("sql_grid_empty")
+    sql = ("SELECT count(*) AS n FROM sql_grid_empty WHERE st_intersects(bbox, st_makeBBOX(2.5, 2.5, 5.5, 5.5)) "
+           "AND st_intersects(bbox, st_geomFromWKT('POINT EMPTY'))")
+    out = spatial_sql(spark, sql)
+    pushed = _pushed_filters(out)
+    assert all(f"{c}(bbox.{f},5.5)" in pushed for c, f in (("LessThanOrEqual", "xmin"), ("LessThanOrEqual", "ymin")))
+    assert all(f"{c}(bbox.{f},2.5)" in pushed for c, f in (("GreaterThanOrEqual", "xmax"), ("GreaterThanOrEqual", "ymax")))
+    assert out.collect() == spark.sql(sql).collect()
 
 
 def test_spatial_sql_untyped_cte_column_still_falls_back(spark, capfd, caplog):

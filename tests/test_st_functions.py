@@ -508,3 +508,27 @@ def test_point_extent_fast_path_matches_point_path_and_kernel(spark, monkeypatch
     ).collect()
     assert [r.e for r in rows] == [r.p for r in rows]
     assert any(r.e for r in rows) and not all(r.e for r in rows)
+
+
+def test_zip_directory_reuse_is_installed_in_workers_only(spark):
+    """The package wraps ``zipimporter.invalidate_caches`` in the Python
+    workers that unpickle its UDFs, and leaves this (driver) process's
+    method stock."""
+    import zipimport
+
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    assert one(spark, "st_x(st_makePoint(1.5, 2))") == 1.5
+    assert not hasattr(zipimport.zipimporter.invalidate_caches, "geomesa_reuses_zip_directory")
+
+    @pandas_udf("boolean")
+    def wrapped(ids: pd.Series) -> pd.Series:
+        import zipimport
+
+        import geomesa_hive_spark  # noqa: F401
+
+        method = zipimport.zipimporter.invalidate_caches
+        return pd.Series(getattr(method, "geomesa_reuses_zip_directory", False), index=ids.index)
+
+    assert [r.w for r in spark.range(4).repartition(2).select(wrapped("id").alias("w")).collect()] == [True] * 4
