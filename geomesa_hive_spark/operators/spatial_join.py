@@ -3,7 +3,11 @@
 The reference has no join operator at all — its users fall back to a
 Cartesian ``ST_Intersects`` filter, which dies at scale. This is the
 standard partition-based spatial-merge join (PBSM / GeoSpark-style)
-re-expressed in DataFrame ops so every stage is a stock Spark shuffle:
+re-expressed in Spark SQL expressions so every stage is a stock Spark
+shuffle. Each plan piece is defined once, as SQL text (``cells_sql``,
+``grown_sql``, ``on_sql``): the DataFrame joins here run it through
+``F.expr``, and the SQL join rewrite (``spatial_sql.rewrite_spatial_join``)
+splices the same text into the query, so both surfaces plan one join:
 
 1. each side's geometry bbox is exploded to the fixed-grid cells it
    overlaps (native ``sequence``/``transform``/``explode`` expressions —
@@ -28,6 +32,8 @@ AQE skew-join splitting since stage 2 is a plain shuffled hash join.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -41,9 +47,10 @@ __all__ = [
 # grids down to ~1.7e-7° cells or projected-meter grids to ±2^30 m —
 # while (ix + OFFSET) * STRIDE + (iy + OFFSET) < 2^62 stays a positive
 # long. Indices outside that range raise at runtime (assert_true in
-# _cells) instead of silently aliasing far-apart cells.
+# cells_sql) instead of silently aliasing far-apart cells.
 _OFFSET = 1 << 30
 _STRIDE = 1 << 31
+_BOUNDS = ("xmin", "ymin", "xmax", "ymax")
 
 _PREDICATES = {
     "intersects": "st_intersects",
@@ -57,54 +64,92 @@ _PREDICATES = {
 }
 
 
-def _cells(bbox: Column, cell_size: float) -> Column:
-    """Array of encoded cell ids the bbox [xmin..xmax]×[ymin..ymax] overlaps.
+# ---------------------------------------------------------------------------
+# the PBSM core, as SQL text
+# ---------------------------------------------------------------------------
+# One definition of each plan piece. The DataFrame joins below run it
+# through F.expr; rewrite_spatial_join (operators/spatial_sql.py) splices
+# the same text into the query. A left side carries __l_bbox and
+# __l_cell (plus __l_ebox, the grown box its cells come from, in the
+# distance joins); a right side carries __r_bbox and __r_cell.
 
-    Null/empty geometries (NaN bounds) yield NULL, which ``explode``
-    drops — null never joins, matching SQL join semantics."""
-    cs = F.lit(float(cell_size))
-    ix0 = F.floor(bbox["xmin"] / cs).cast("long")
-    ix1 = F.floor(bbox["xmax"] / cs).cast("long")
-    iy0 = F.floor(bbox["ymin"] / cs).cast("long")
-    iy1 = F.floor(bbox["ymax"] / cs).cast("long")
-    grid = F.flatten(
-        F.transform(
-            F.sequence(ix0, ix1),
-            lambda ix: F.transform(
-                F.sequence(iy0, iy1),
-                lambda iy: (ix + F.lit(_OFFSET)) * F.lit(_STRIDE) + iy + F.lit(_OFFSET),
-            ),
-        )
-    )
-    # encoding-capacity guard: indices at/over ±OFFSET would alias
-    # distinct cells (silently merging far-apart geometry) — raise
-    in_range = (
-        (ix0 > F.lit(-_OFFSET))
-        & (ix1 < F.lit(_OFFSET))
-        & (iy0 > F.lit(-_OFFSET))
-        & (iy1 < F.lit(_OFFSET))
-    )
-    ok = F.when(F.isnan(bbox["xmin"]), F.lit(True)).otherwise(in_range)
-    guard = F.assert_true(
-        ok,
-        F.lit(
-            "spatial_join: grid index exceeds encoding capacity "
-            f"(|coord/cell_size| must stay < {_OFFSET}); increase cell_size"
-        ),
-    )
-    return F.when(guard.isNull() & ~F.isnan(bbox["xmin"]), grid)
+def _num(v: float) -> str:
+    """A double literal (an infinity has none, so it is cast from text)."""
+    v = float(v)
+    return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
 
 
-def _prepared(df: DataFrame, geom_col: str, bbox_col: str | None, side: str, cell_size: float) -> DataFrame:
-    bbox = (
-        F.col(bbox_col)
-        if bbox_col
-        else F.call_function("st_extentfromgeom", F.col(geom_col))
+def _index(v: str, cs: float) -> str:
+    """Grid index of the coordinate expression ``v``."""
+    return f"CAST(floor({v} / {_num(cs)}) AS BIGINT)"
+
+
+def _cell_id(ix: str, iy: str) -> str:
+    return f"({ix} + {_OFFSET}L) * {_STRIDE}L + {iy} + {_OFFSET}L"
+
+
+def cells_sql(box: str, cs: float) -> str:
+    """ARRAY<BIGINT> of the encoded cells the struct ``box`` overlaps.
+
+    A box with a NULL or NaN in any bound (a null or empty geometry) has
+    no extent: NULL, which explode drops, so it never joins. Indices at
+    or past the encoding capacity raise instead of aliasing cells."""
+    ix0, iy0, ix1, iy1 = (_index(f"{box}.{c}", cs) for c in _BOUNDS)
+    no_extent = " OR ".join(f"{box}.{c} IS NULL OR isnan({box}.{c})" for c in _BOUNDS)
+    in_range = (f"{ix0} > {-_OFFSET}L AND {ix1} < {_OFFSET}L AND "
+                f"{iy0} > {-_OFFSET}L AND {iy1} < {_OFFSET}L")
+    grid = (f"flatten(transform(sequence({ix0}, {ix1}), __ix -> "
+            f"transform(sequence({iy0}, {iy1}), __iy -> {_cell_id('__ix', '__iy')})))")
+    return (
+        f"CASE WHEN {no_extent} THEN CAST(NULL AS ARRAY<BIGINT>) "
+        f"WHEN assert_true({in_range}, 'spatial join: grid index exceeds encoding "
+        f"capacity (|coord/cell_size| must stay < {_OFFSET}); increase cell_size') "
+        f"IS NULL THEN {grid} END"
     )
-    pref = f"__{side}"
-    out = df.withColumn(f"{pref}_bbox", bbox)
-    out = out.withColumn(f"{pref}_cell", F.explode(_cells(F.col(f"{pref}_bbox"), cell_size)))
-    return out
+
+
+def grown_sql(box: str, d: float) -> str:
+    """The struct ``box`` grown by ``d`` on every side."""
+    d = _num(d)
+    return (f"named_struct('xmin', {box}.xmin - {d}, 'ymin', {box}.ymin - {d}, "
+            f"'xmax', {box}.xmax + {d}, 'ymax', {box}.ymax + {d})")
+
+
+def on_sql(left: str, right: str, cs: float, lbox: str = "__l_bbox", d: float | None = None) -> str:
+    """The ON conjunction of the sides qualified ``left`` and ``right``: cell
+    equi-key; overlap of the left box ``lbox`` with the right bbox;
+    reference-point dedup (a pair is kept only in the cell that owns the
+    lower-left corner of the two boxes' intersection, so a pair sharing
+    several cells meets once, with no global distinct); and, given
+    ``d``, the dwithin prune gapx² + gapy² <= d² on the unexpanded
+    bboxes."""
+    lb, rb, ub = f"{left}.{lbox}", f"{right}.__r_bbox", f"{left}.__l_bbox"
+    overlap = (f"{lb}.xmin <= {rb}.xmax AND {lb}.xmax >= {rb}.xmin AND "
+               f"{lb}.ymin <= {rb}.ymax AND {lb}.ymax >= {rb}.ymin")
+    ref = _cell_id(_index(f"greatest({lb}.xmin, {rb}.xmin)", cs),
+                   _index(f"greatest({lb}.ymin, {rb}.ymin)", cs))
+    conds = [f"{left}.__l_cell = {right}.__r_cell", overlap, f"{left}.__l_cell = {ref}"]
+    if d is not None:
+        gx, gy = (f"greatest(0.0D, greatest({ub}.{c}min, {rb}.{c}min) - least({ub}.{c}max, {rb}.{c}max))"
+                  for c in "xy")
+        conds.append(f"{gx} * {gx} + {gy} * {gy} <= {_num(float(d) * float(d))}")
+    return " AND ".join(conds)
+
+
+def _boxed(df: DataFrame, geom: str, bbox: str | None, side: str) -> DataFrame:
+    """``df`` plus its bbox as __<side>_bbox: the stored one, else derived."""
+    box = F.col(bbox) if bbox else F.call_function("st_extentfromgeom", F.col(geom))
+    return df.withColumn(f"__{side}_bbox", box)
+
+
+def _exploded(df: DataFrame, box: str, side: str, cs: float) -> DataFrame:
+    """One row per grid cell of the column ``box``, as __<side>_cell."""
+    return df.withColumn(f"__{side}_cell", F.explode(F.expr(cells_sql(box, cs))))
+
+
+def _pair(fn: str, left_geom: str, right_geom: str) -> Column:
+    """``fn`` over the two sides' geometries of a ``__l``/``__r`` join."""
+    return F.call_function(fn, F.col(f"__l.{left_geom}"), F.col(f"__r.{right_geom}"))
 
 
 def spatial_join(
@@ -168,8 +213,9 @@ def spatial_join(
             "salt > 1 with broadcast_right: the broadcast path has no "
             "shuffle to skew — drop one of the two"
         )
-    a = _prepared(left, left_geom, left_bbox, "l", cell_size)
-    b = _prepared(right, right_geom, right_bbox, "r", cell_size)
+    a = _exploded(_boxed(left, left_geom, left_bbox, "l"), "__l_bbox", "l", cell_size)
+    b = _exploded(_boxed(right, right_geom, right_bbox, "r"), "__r_bbox", "r", cell_size)
+    on = on_sql("__l", "__r", cell_size)
     if salt > 1:
         # deterministic per-row shard over ALL left columns (not just
         # the geometry: stacked identical points would otherwise share
@@ -184,37 +230,13 @@ def spatial_join(
             "__r_salt",
             F.explode(F.array(*[F.lit(i) for i in range(salt)])),
         )
+        on += " AND __l.__l_salt = __r.__r_salt"
+    b = b.alias("__r")
     if broadcast_right:
         b = F.broadcast(b)
-
-    cond = a["__l_cell"] == b["__r_cell"]
-    if salt > 1:
-        cond = cond & (a["__l_salt"] == b["__r_salt"])
-    joined = a.join(b, cond)
-
-    la, ra = F.col("__l_bbox"), F.col("__r_bbox")
-    overlap = (
-        (la["xmin"] <= ra["xmax"])
-        & (la["xmax"] >= ra["xmin"])
-        & (la["ymin"] <= ra["ymax"])
-        & (la["ymax"] >= ra["ymin"])
-    )
-    # reference-point dedup: keep the pair only in the cell that owns the
-    # lower-left corner of the bbox intersection
-    cs = F.lit(float(cell_size))
-    rx = F.greatest(la["xmin"], ra["xmin"])
-    ry = F.greatest(la["ymin"], ra["ymin"])
-    ref_cell = (
-        (F.floor(rx / cs).cast("long") + F.lit(_OFFSET)) * F.lit(_STRIDE)
-        + F.floor(ry / cs).cast("long")
-        + F.lit(_OFFSET)
-    )
-    cand = joined.filter(overlap & (F.col("__l_cell") == ref_cell))
-
+    cand = a.alias("__l").join(b, F.expr(on))
     if exact:
-        cand = cand.filter(
-            F.call_function(_PREDICATES[predicate], a[left_geom], b[right_geom])
-        )
+        cand = cand.filter(_pair(_PREDICATES[predicate], left_geom, right_geom))
     drop = ["__l_bbox", "__l_cell", "__r_bbox", "__r_cell"]
     if salt > 1:
         drop += ["__l_salt", "__r_salt"]
@@ -352,51 +374,18 @@ def distance_join(
     _check_dist_col(dist_col, left, right)
     cs = float(cell_size) if cell_size is not None else max(d, 1.0)
 
-    lb = (
-        F.col(left_bbox)
-        if left_bbox
-        else F.call_function("st_extentfromgeom", F.col(left_geom))
-    )
-    a = left.withColumn("__l_bbox", lb)
-    ebox = F.struct(
-        (F.col("__l_bbox")["xmin"] - F.lit(d)).alias("xmin"),
-        (F.col("__l_bbox")["ymin"] - F.lit(d)).alias("ymin"),
-        (F.col("__l_bbox")["xmax"] + F.lit(d)).alias("xmax"),
-        (F.col("__l_bbox")["ymax"] + F.lit(d)).alias("ymax"),
-    )
-    a = a.withColumn("__l_ebox", ebox)
-    a = a.withColumn("__l_cell", F.explode(_cells(F.col("__l_ebox"), cs)))
-    b = _prepared(right, right_geom, right_bbox, "r", cs)
+    a = _boxed(left, left_geom, left_bbox, "l")
+    a = _exploded(a.withColumn("__l_ebox", F.expr(grown_sql("__l_bbox", d))), "__l_ebox", "l", cs)
+    b = _exploded(_boxed(right, right_geom, right_bbox, "r"), "__r_bbox", "r", cs)
+    cand = a.alias("__l").join(b.alias("__r"), F.expr(on_sql("__l", "__r", cs, "__l_ebox", d)))
+    return _within(cand, "st_distance", left_geom, right_geom, d, dist_col)
 
-    joined = a.join(b, a["__l_cell"] == b["__r_cell"])
-    ea, la, ra = F.col("__l_ebox"), F.col("__l_bbox"), F.col("__r_bbox")
-    overlap = (
-        (ea["xmin"] <= ra["xmax"])
-        & (ea["xmax"] >= ra["xmin"])
-        & (ea["ymin"] <= ra["ymax"])
-        & (ea["ymax"] >= ra["ymin"])
-    )
-    csl = F.lit(cs)
-    rx = F.greatest(ea["xmin"], ra["xmin"])
-    ry = F.greatest(ea["ymin"], ra["ymin"])
-    ref_cell = (
-        (F.floor(rx / csl).cast("long") + F.lit(_OFFSET)) * F.lit(_STRIDE)
-        + F.floor(ry / csl).cast("long")
-        + F.lit(_OFFSET)
-    )
-    gapx = F.greatest(
-        F.lit(0.0), F.greatest(la["xmin"], ra["xmin"]) - F.least(la["xmax"], ra["xmax"])
-    )
-    gapy = F.greatest(
-        F.lit(0.0), F.greatest(la["ymin"], ra["ymin"]) - F.least(la["ymax"], ra["ymax"])
-    )
-    cand = joined.filter(
-        overlap
-        & (F.col("__l_cell") == ref_cell)
-        & (gapx * gapx + gapy * gapy <= F.lit(d * d))
-    )
-    dist = F.call_function("st_distance", a[left_geom], b[right_geom])
-    cand = cand.withColumn("__dist", dist).filter(F.col("__dist") <= F.lit(d))
+
+def _within(cand: DataFrame, fn: str, left_geom: str, right_geom: str, d: float,
+            dist_col: str | None) -> DataFrame:
+    """The exact distance refine of a distance join's candidates, its
+    distance kept as ``dist_col`` (or dropped when None)."""
+    cand = cand.withColumn("__dist", _pair(fn, left_geom, right_geom)).filter(F.col("__dist") <= F.lit(d))
     drop = ["__l_bbox", "__l_ebox", "__l_cell", "__r_bbox", "__r_cell"]
     if dist_col:
         return cand.withColumnRenamed("__dist", dist_col).drop(*drop)
@@ -440,8 +429,6 @@ def distance_join_sphere(
 
     The exact ``st_distanceSphere`` pandas UDF runs last on
     bbox-confirmed candidates."""
-    import math
-
     d = float(meters)
     if d < 0:
         raise ValueError("distance must be >= 0")
@@ -451,12 +438,7 @@ def distance_join_sphere(
     sin_half = math.sin(min(d / (2.0 * R), math.pi / 2.0))
     cs = float(cell_size) if cell_size is not None else max(dlat * 2.0, 1.0)
 
-    lb = (
-        F.col(left_bbox)
-        if left_bbox
-        else F.call_function("st_extentfromgeom", F.col(left_geom))
-    )
-    a = left.withColumn("__l_bbox", lb)
+    a = _boxed(left, left_geom, left_bbox, "l")
     y0 = F.col("__l_bbox")["ymin"] - F.lit(dlat)
     y1 = F.col("__l_bbox")["ymax"] + F.lit(dlat)
     # smallest cos|φ| over the EXPANDED band; envelope goes full-range
@@ -487,30 +469,7 @@ def distance_join_sphere(
         (ex1 + F.col("__off")).alias("xmax"),
         y1.alias("ymax"),
     )
-    a = a.withColumn("__l_ebox", ebox)
-    a = a.withColumn("__l_cell", F.explode(_cells(F.col("__l_ebox"), cs)))
-    b = _prepared(right, right_geom, right_bbox, "r", cs)
-
-    joined = a.join(b, a["__l_cell"] == b["__r_cell"])
-    ea, ra = F.col("__l_ebox"), F.col("__r_bbox")
-    overlap = (
-        (ea["xmin"] <= ra["xmax"])
-        & (ea["xmax"] >= ra["xmin"])
-        & (ea["ymin"] <= ra["ymax"])
-        & (ea["ymax"] >= ra["ymin"])
-    )
-    csl = F.lit(cs)
-    rx = F.greatest(ea["xmin"], ra["xmin"])
-    ry = F.greatest(ea["ymin"], ra["ymin"])
-    ref_cell = (
-        (F.floor(rx / csl).cast("long") + F.lit(_OFFSET)) * F.lit(_STRIDE)
-        + F.floor(ry / csl).cast("long")
-        + F.lit(_OFFSET)
-    )
-    cand = joined.filter(overlap & (F.col("__l_cell") == ref_cell))
-    dist = F.call_function("st_distancesphere", a[left_geom], b[right_geom])
-    cand = cand.withColumn("__dist", dist).filter(F.col("__dist") <= F.lit(d))
-    drop = ["__l_bbox", "__l_ebox", "__l_cell", "__r_bbox", "__r_cell", "__off"]
-    if dist_col:
-        return cand.withColumnRenamed("__dist", dist_col).drop(*drop)
-    return cand.drop("__dist", *drop)
+    a = _exploded(a.withColumn("__l_ebox", ebox).drop("__off"), "__l_ebox", "l", cs)
+    b = _exploded(_boxed(right, right_geom, right_bbox, "r"), "__r_bbox", "r", cs)
+    cand = a.alias("__l").join(b.alias("__r"), F.expr(on_sql("__l", "__r", cs, "__l_ebox")))
+    return _within(cand, "st_distancesphere", left_geom, right_geom, d, dist_col)

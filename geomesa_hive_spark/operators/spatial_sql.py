@@ -76,6 +76,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from geomesa_hive_spark.functions.st import EXTENT_TYPE
+from geomesa_hive_spark.operators.spatial_join import cells_sql, grown_sql, on_sql
 
 __all__ = [
     "spatial_sql", "rewrite_spatial_predicates", "rewrite_spatial_join",
@@ -403,15 +404,18 @@ def _rewrite_predicates(sql: str, is_extent) -> str:
 # that dies at 100 TB. The reference has the same hole (its rules match
 # Filter(HiveGenericUDF) only, SpatialFilterPushdownRules.scala:35-38);
 # this rewrite EXTENDS the surface: a recognized geometry×geometry JOIN
-# predicate is re-expressed as the PBSM grid join of
-# operators/spatial_join.py in SQL TEXT — each side exploded to the
-# fixed-grid cells its bbox overlaps, equi-joined on cell id (a plain
-# shuffled hash join), bbox-overlap prefilter + reference-point dedup in
-# the ON conjunction, the ORIGINAL predicate kept verbatim as the exact
-# filter. st_dwithin(a.g, b.g, d) gets the distance_join form: the
-# FIRST table's bbox expands by d before cell explosion (one-sided —
+# predicate is re-expressed as the PBSM grid join, spliced in from the
+# one core in operators/spatial_join.py (cells_sql, grown_sql, on_sql:
+# the same text spatial_join and distance_join run) — each side exploded
+# to the fixed-grid cells its bbox overlaps, equi-joined on cell id (a
+# plain shuffled hash join), bbox-overlap prefilter + reference-point
+# dedup in the ON conjunction, the ORIGINAL predicate kept verbatim as
+# the exact filter. st_dwithin(a.g, b.g, d) gets the distance_join form:
+# the FIRST table's bbox grows by d before cell explosion (one-sided —
 # sufficient, half the fan-out), the bbox-GAP test gapx²+gapy²≤d² prunes
-# on the unexpanded boxes, and the original st_dwithin runs last.
+# on the unexpanded boxes, and the original st_dwithin runs last. This
+# module keeps only what the text path needs: the FROM/predicate
+# matchers, the head/tail/star soundness checks and the derived tables.
 #
 # Soundness envelope (anything outside falls through UNCHANGED):
 # - both predicate args must be alias-qualified columns of the two
@@ -428,8 +432,6 @@ def _rewrite_predicates(sql: str, is_extent) -> str:
 #   predicate makes the result exact. Trailing AND conjuncts in the ON
 #   clause compose untouched.
 
-_J_OFFSET = 1 << 30
-_J_STRIDE = 1 << 31
 _J_PREDS = ("st_intersects|st_contains|st_within|st_covers|st_crosses"
             "|st_touches|st_overlaps|st_equals")
 _NOT_KW = (r"(?!(?:INNER|JOIN|LEFT|RIGHT|FULL|CROSS|ON|WHERE|GROUP|ORDER"
@@ -521,38 +523,6 @@ def _j_norm(seg: str) -> str:
     return seg.strip("`").lower()
 
 
-def _j_cells_sql(bbox: str, cs: float) -> str:
-    """SQL-text twin of spatial_join._cells: the encoded grid cells the
-    bbox overlaps. NULL/NaN bounds (null or empty geometry) yield NULL,
-    which explode drops — null never joins; indices past the encoding
-    capacity raise via assert_true instead of aliasing far-apart cells."""
-    csl = f"{float(cs)!r}D"
-    ix0 = f"CAST(floor({bbox}.xmin / {csl}) AS BIGINT)"
-    ix1 = f"CAST(floor({bbox}.xmax / {csl}) AS BIGINT)"
-    iy0 = f"CAST(floor({bbox}.ymin / {csl}) AS BIGINT)"
-    iy1 = f"CAST(floor({bbox}.ymax / {csl}) AS BIGINT)"
-    grid = (
-        f"flatten(transform(sequence({ix0}, {ix1}), ix -> "
-        f"transform(sequence({iy0}, {iy1}), iy -> "
-        f"(ix + {_J_OFFSET}L) * {_J_STRIDE}L + iy + {_J_OFFSET}L)))"
-    )
-    in_range = (
-        f"{ix0} > {-_J_OFFSET}L AND {ix1} < {_J_OFFSET}L AND "
-        f"{iy0} > {-_J_OFFSET}L AND {iy1} < {_J_OFFSET}L"
-    )
-    bad = " OR ".join(
-        f"{bbox}.{c} IS NULL OR isnan({bbox}.{c})"
-        for c in ("xmin", "ymin", "xmax", "ymax")
-    )
-    return (
-        f"CASE WHEN {bad} "
-        f"THEN CAST(NULL AS ARRAY<BIGINT>) "
-        f"WHEN assert_true({in_range}, 'spatial join rewrite: grid index "
-        f"exceeds encoding capacity; increase cell_size') IS NULL "
-        f"THEN {grid} END"
-    )
-
-
 def _j_side(tbl: str, alias: str, geom: str, side: str, cs: float,
             expand: float | None = None) -> str:
     """One join side as a derived table: bbox (+d-expanded ebox for
@@ -560,56 +530,10 @@ def _j_side(tbl: str, alias: str, geom: str, side: str, cs: float,
     every qualified reference in the rest of the query still resolves."""
     b = f"__{side}_bbox"
     inner = f"(SELECT *, st_extentFromGeom({geom}) AS {b} FROM {tbl}) __sj_{side}0"
-    cell_src = b
     if expand is not None:
-        e = f"__{side}_ebox"
-        d = f"{float(expand)!r}D"
-        inner = (
-            f"(SELECT *, named_struct("
-            f"'xmin', {b}.xmin - {d}, 'ymin', {b}.ymin - {d}, "
-            f"'xmax', {b}.xmax + {d}, 'ymax', {b}.ymax + {d}) AS {e} "
-            f"FROM {inner}) __sj_{side}1"
-        )
-        cell_src = e
-    return (
-        f"(SELECT *, explode({_j_cells_sql(cell_src, cs)}) "
-        f"AS __{side}_cell FROM {inner}) {alias}"
-    )
-
-
-def _j_on(a1: str, a2: str, cs: float, dwithin_d: float | None = None) -> str:
-    """The PBSM ON conjunction: cell equi-key, bbox overlap, reference-
-    point dedup (pair kept only in the cell owning the lower-left corner
-    of the bbox intersection), and for dwithin the bbox-gap prune on the
-    UNEXPANDED boxes."""
-    lb = f"{a1}.__l_ebox" if dwithin_d is not None else f"{a1}.__l_bbox"
-    rb = f"{a2}.__r_bbox"
-    csl = f"{float(cs)!r}D"
-    overlap = (
-        f"{lb}.xmin <= {rb}.xmax AND {lb}.xmax >= {rb}.xmin AND "
-        f"{lb}.ymin <= {rb}.ymax AND {lb}.ymax >= {rb}.ymin"
-    )
-    rx = f"greatest({lb}.xmin, {rb}.xmin)"
-    ry = f"greatest({lb}.ymin, {rb}.ymin)"
-    refcell = (
-        f"(CAST(floor({rx} / {csl}) AS BIGINT) + {_J_OFFSET}L) "
-        f"* {_J_STRIDE}L + CAST(floor({ry} / {csl}) AS BIGINT) "
-        f"+ {_J_OFFSET}L"
-    )
-    conds = [
-        f"{a1}.__l_cell = {a2}.__r_cell",
-        overlap,
-        f"{a1}.__l_cell = {refcell}",
-    ]
-    if dwithin_d is not None:
-        ub = f"{a1}.__l_bbox"
-        gapx = (f"greatest(0.0D, greatest({ub}.xmin, {rb}.xmin) "
-                f"- least({ub}.xmax, {rb}.xmax))")
-        gapy = (f"greatest(0.0D, greatest({ub}.ymin, {rb}.ymin) "
-                f"- least({ub}.ymax, {rb}.ymax))")
-        d2 = f"{float(dwithin_d) * float(dwithin_d)!r}D"
-        conds.append(f"({gapx}) * ({gapx}) + ({gapy}) * ({gapy}) <= {d2}")
-    return " AND ".join(conds)
+        inner = f"(SELECT *, {grown_sql(b, expand)} AS __{side}_ebox FROM {inner}) __sj_{side}1"
+        b = f"__{side}_ebox"
+    return f"(SELECT *, explode({cells_sql(b, cs)}) AS __{side}_cell FROM {inner}) {alias}"
 
 
 def rewrite_spatial_join(sql: str, cell_size: float = 1.0) -> str:
@@ -668,7 +592,7 @@ def rewrite_spatial_join(sql: str, cell_size: float = 1.0) -> str:
         cs = max(float(d), float(cell_size)) if d is not None else float(cell_size)
         left = _j_side(f.group("t1"), a1, g_l, "l", cs, expand=d)
         right = _j_side(f.group("t2"), a2, g_r, "r", cs)
-        on = _j_on(a1, a2, cs, dwithin_d=d)
+        on = on_sql(a1, a2, cs, "__l_bbox" if d is None else "__l_ebox", d)
         rep = f"FROM {left} JOIN {right} ON {on} AND {head}{p.group('pred')}"
         if fm.re is _J_FROM_COMMA:
             rep += " WHERE TRUE"

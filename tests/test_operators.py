@@ -302,6 +302,46 @@ def test_spatial_join_capacity_guard(spark):
     with pytest.raises(Exception, match="encoding capacity"):
         spatial_join(far("lid"), far("rid"), left_geom="geom", right_geom="geom",
                      cell_size=1.0).collect()
+    # the SQL join rewrite builds its cells from the same core: same guard
+    from geomesa_hive_spark.operators.spatial_sql import spatial_sql
+
+    far("lid").createOrReplaceTempView("cap_far")
+    with pytest.raises(Exception, match="spatial join: grid index exceeds encoding capacity"):
+        spatial_sql(spark, "SELECT a.lid FROM cap_far a JOIN cap_far b "
+                           "ON ST_Intersects(a.geom, b.geom)").collect()
+
+
+def test_spatial_join_drops_stored_bbox_without_extent(spark):
+    """A stored bbox with a NULL or NaN in any bound has no extent: its row
+    joins nothing, on either side of spatial_join and distance_join, even
+    where the geometry itself would match. A NaN bound must not reach the
+    cell range or the overlap test: floor(NaN) casts to 0, and Spark
+    orders NaN above every double, so both would pass the row."""
+    from geomesa_hive_spark.functions.registry import register_all
+    from geomesa_hive_spark.operators.spatial_join import (
+        distance_join, spatial_join,
+    )
+
+    register_all(spark)
+    wkb = bytearray(to_wkb(from_wkt("POINT (0.5 0.5)")))
+    box = (0.5, 0.5, 0.5, 0.5)
+    rows = [(0, wkb, box)]
+    for i in range(4):
+        for bad in (None, float("nan")):
+            rows.append((len(rows), wkb, tuple(bad if j == i else v for j, v in enumerate(box))))
+    schema = "id INT, geom BINARY, bbox STRUCT<xmin: DOUBLE, ymin: DOUBLE, xmax: DOUBLE, ymax: DOUBLE>"
+    pts = spark.createDataFrame(rows, schema)
+    one = spark.createDataFrame(rows[:1], schema).select(
+        F.col("id").alias("oid"), F.col("geom").alias("ogeom"), F.col("bbox").alias("obox"))
+    runs = {
+        "spatial_join": lambda a, b, **kw: spatial_join(a, b, cell_size=0.001, **kw),
+        "distance_join": lambda a, b, **kw: distance_join(a, b, 0.1, **kw),
+    }
+    for name, run in runs.items():
+        got = run(pts, one, left_geom="geom", right_geom="ogeom", left_bbox="bbox", right_bbox="obox")
+        assert sorted(r.id for r in got.collect()) == [0], name
+        got = run(one, pts, left_geom="ogeom", right_geom="geom", left_bbox="obox", right_bbox="bbox")
+        assert sorted(r.id for r in got.collect()) == [0], name
 
 
 def test_asof_join(spark):

@@ -580,6 +580,35 @@ def test_join_rewrite_dwithin_matches_cartesian(spark):
     assert got3 == want3 and len(got3) > 5
 
 
+def test_join_rewrite_and_operators_return_the_same_pairs(spark):
+    """The SQL join rewrite and the DataFrame joins run one PBSM core: on
+    the same inputs, plus a NULL and an empty geometry, they return the
+    same pairs, each once."""
+    from geomesa_hive_spark.operators.spatial_join import distance_join, spatial_join
+    from geomesa_hive_spark.operators.spatial_sql import rewrite_spatial_join
+
+    pts, boxes = _join_views(spark)
+    odd = spark.sql(
+        "SELECT 400L AS pid, 0.0D AS px, 0.0D AS py, CAST(NULL AS BINARY) AS geom "
+        "UNION ALL SELECT 401L, 0.0D, 0.0D, st_geomFromWKT('POINT EMPTY')"
+    )
+    pts = pts.unionByName(odd)
+    pts.createOrReplaceTempView("sjr_pts_odd")
+    cases = [
+        ("st_intersects(p.geom, b.pgeom)",
+         spatial_join(pts, boxes, predicate="intersects", left_geom="geom", right_geom="pgeom")),
+        ("st_dwithin(p.geom, b.pgeom, 0.5)",
+         distance_join(pts, boxes, 0.5, left_geom="geom", right_geom="pgeom")),
+    ]
+    for pred, api in cases:
+        q = f"SELECT p.pid AS pid, b.bid AS bid FROM sjr_pts_odd p JOIN sjr_boxes b ON {pred}"
+        assert rewrite_spatial_join(q) != q, pred
+        got = [(r.pid, r.bid) for r in spatial_sql(spark, q).collect()]
+        want = [(r.pid, r.bid) for r in api.select("pid", "bid").collect()]
+        assert len(got) == len(set(got)) and len(want) == len(set(want)), pred
+        assert set(got) == set(want) and len(got) > 50, (pred, len(got), len(want))
+
+
 def test_join_rewrite_comma_and_head_conjuncts(spark):
     """Round 14: the PostGIS comma-join idiom (FROM a, b WHERE st_*)
     and leading AND-composed conjuncts before the predicate (both ON
@@ -837,9 +866,9 @@ def test_join_rewrite_fall_throughs(spark):
     # round-14 ADVICE: a degenerate extent with finite xmin but NaN in
     # ANY other bound must yield NULL cells (dropped by explode), not
     # spurious grid cells via NaN→0 bigint casts
-    from geomesa_hive_spark.operators.spatial_sql import _j_cells_sql
+    from geomesa_hive_spark.operators.spatial_join import cells_sql
 
-    cells_expr = _j_cells_sql("b", 1.0)
+    cells_expr = cells_sql("b", 1.0)
     for bad in ("ymin", "xmax", "ymax"):
         fields = {"xmin": "0.1D", "ymin": "0.1D",
                   "xmax": "2.3D", "ymax": "2.3D"}
