@@ -10,8 +10,13 @@ columns mean a window query touches only the row groups it must.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from geomesa_hive_spark.functions.st import SPEC
 
 __all__ = ["add_z2_columns", "write_spatially_partitioned"]
 
@@ -23,13 +28,43 @@ def add_z2_columns(
     bbox: bool = True,
 ) -> DataFrame:
     """Add ``z2`` (coarse partition key via st_partitionCentroid) and a
-    prunable ``bbox`` extent struct derived from ``geom_col``."""
-    out = df.withColumn(
-        "z2", F.call_function("st_partitioncentroid", F.col(geom_col), F.lit(zoom))
-    )
+    prunable ``bbox`` extent struct derived from ``geom_col``.
+
+    Calls the ``SPEC`` UDF objects rather than the session's registered
+    names, so it works on a session that never ran ``register_all`` (it
+    used to need one); each object pickles its function once per
+    process."""
+    geom = F.col(geom_col)
+    out = df.withColumn("z2", SPEC["st_partitioncentroid"](geom, F.lit(zoom)))
     if bbox:
-        out = out.withColumn("bbox", F.call_function("st_extentfromgeom", F.col(geom_col)))
+        # Spark's CollapseProject counts a Python UDF over plain columns as
+        # cheap and inlines it into a one-argument Python UDF that reads its
+        # result, where the two chain and the inner one runs a second time
+        # per row (``st_geomFromWKT(wkt) AS geom`` would parse each WKT
+        # twice). Behind the CASE the extent UDF reads the evaluated column.
+        out = out.withColumn("bbox", SPEC["st_extentfromgeom"](F.when(geom.isNotNull(), geom)))
     return out
+
+
+@contextmanager
+def _z2_clustered(keyed: DataFrame, key: str, num_files: int | None):
+    """The one Z2 clustering step of every writer: ``repartitionByRange``
+    on ``key`` then ``sortWithinPartitions``, over ``keyed`` (the
+    writer's input with its Z2 key column added) persisted so the range
+    sampler and the shuffle read one evaluation of its ST_* columns.
+
+    Yields the clustered frame for the caller's sink. The cache is
+    released (blocking) when the block exits, written or raised; a plan
+    the caller had already cached is used as it is and left cached."""
+    owned = keyed.storageLevel == StorageLevel.NONE
+    if owned:
+        keyed = keyed.persist()
+    try:
+        parts = keyed.repartitionByRange(num_files, key) if num_files else keyed.repartitionByRange(key)
+        yield parts.sortWithinPartitions(key)
+    finally:
+        if owned:
+            keyed.unpersist(blocking=True)
 
 
 def write_spatially_partitioned(
@@ -55,13 +90,8 @@ def write_spatially_partitioned(
     collapses small datasets into one or two files — and scan pruning
     can never skip more than (files × row groups) granules.
     """
-    enriched = add_z2_columns(df, geom_col, zoom=zoom)
-    clustered = (
-        enriched.repartitionByRange(num_files, "z2")
-        if num_files
-        else enriched.repartitionByRange("z2")
-    ).sortWithinPartitions("z2")
-    writer = clustered.write.mode(mode)
-    if partition_dirs:
-        writer = writer.partitionBy("z2")
-    writer.parquet(path)
+    with _z2_clustered(add_z2_columns(df, geom_col, zoom=zoom), "z2", num_files) as clustered:
+        writer = clustered.write.mode(mode)
+        if partition_dirs:
+            writer = writer.partitionBy("z2")
+        writer.parquet(path)

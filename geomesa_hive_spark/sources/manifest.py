@@ -578,27 +578,15 @@ def write_window_manifest(
     (spatial-index/sql/createUDFs.sql st_partitionCentroid) serve
     exactly this layout role; here the key feeds file-level stats that
     a plain parquet reader can prune with."""
-    from geomesa_hive_spark.functions.registry import register_all
+    from geomesa_hive_spark.functions.st import SPEC
+    from geomesa_hive_spark.operators.partitioning import _z2_clustered
 
-    register_all(df.sparkSession)
     if "__z2" in df.columns:
         raise ValueError("__z2 is reserved by write_window_manifest")
-    keyed = df.withColumn(
-        "__z2",
-        F.call_function(
-            "st_partitioncentroid",
-            F.call_function("st_makepoint",
-                            F.col(x_col).cast("double"),
-                            F.col(y_col).cast("double")),
-            F.lit(int(zoom)),
-        ),
-    )
-    clustered = (
-        keyed.repartitionByRange(int(n_files), "__z2")
-        .sortWithinPartitions("__z2")
-        .drop("__z2")
-    )
-    clustered.write.mode("overwrite").parquet(path)
+    point = SPEC["st_makepoint"](F.col(x_col).cast("double"), F.col(y_col).cast("double"))
+    keyed = df.withColumn("__z2", SPEC["st_partitioncentroid"](point, F.lit(int(zoom))))
+    with _z2_clustered(keyed, "__z2", int(n_files)) as clustered:
+        clustered.drop("__z2").write.mode("overwrite").parquet(path)
     return _finish_manifest(
         df.sparkSession, path, [x_col, y_col], "z2-window",
         None, 0, 0,

@@ -163,15 +163,18 @@ def write_geoparquet(
     ``{file, n_rows, xmin, ymin, xmax, ymax}``.
 
     ``crs`` is embedded verbatim (PROJJSON per spec; omitted = spec
-    default OGC:CRS84, which matches the repo's lon/lat convention)."""
+    default OGC:CRS84, which matches the repo's lon/lat convention).
+
+    Clustering is the shared Z2 step (``operators.partitioning``): the
+    z2 key and bbox are evaluated once per row, and the session needs no
+    ``register_all``. The writer no longer registers the ST_* surface
+    as a side effect, so it also no longer replaces an ``st_*`` name
+    the caller re-registered."""
     import json as _json
     import os as _os
 
-    from geomesa_hive_spark.functions.registry import register_all
-    from geomesa_hive_spark.operators.partitioning import add_z2_columns
+    from geomesa_hive_spark.operators.partitioning import _z2_clustered, add_z2_columns
 
-    spark = df.sparkSession
-    register_all(spark)
     if geom_col not in df.columns:
         raise ValueError(f"geometry column {geom_col!r} not in DataFrame")
     if "bbox" in df.columns:
@@ -185,19 +188,6 @@ def write_geoparquet(
             "under that name"
         )
     data_cols = list(df.columns)
-    enriched = add_z2_columns(df.select(*data_cols), geom_col, zoom=zoom)
-    clustered = (
-        enriched.repartitionByRange(int(n_files), "z2")
-        .sortWithinPartitions("z2")
-        .drop("z2")
-        .select(
-            *data_cols,
-            F.col("bbox.xmin").alias("__bx0"),
-            F.col("bbox.ymin").alias("__by0"),
-            F.col("bbox.xmax").alias("__bx1"),
-            F.col("bbox.ymax").alias("__by1"),
-        )
-    )
     gtypes = list(geometry_types) if geometry_types else []
     crs_val = crs
 
@@ -271,11 +261,18 @@ def write_geoparquet(
             ]
         )
 
-    summaries = clustered.mapInPandas(
-        _write_part,
-        schema="file string, n_rows long, xmin double, ymin double, "
-               "xmax double, ymax double",
-    ).collect()
+    with _z2_clustered(add_z2_columns(df, geom_col, zoom=zoom), "z2", int(n_files)) as clustered:
+        summaries = clustered.select(
+            *data_cols,
+            F.col("bbox.xmin").alias("__bx0"),
+            F.col("bbox.ymin").alias("__by0"),
+            F.col("bbox.xmax").alias("__bx1"),
+            F.col("bbox.ymax").alias("__by1"),
+        ).mapInPandas(
+            _write_part,
+            schema="file string, n_rows long, xmin double, ymin double, "
+                   "xmax double, ymax double",
+        ).collect()
     return sorted((r.asDict() for r in summaries), key=lambda d: d["file"])
 
 

@@ -4,6 +4,7 @@ the GeoParquet 1.1 writer/reader with per-file footer pruning."""
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from geomesa_hive_spark import sources
@@ -164,3 +165,72 @@ def test_geoparquet_file_pruning(spark, tmp_path):
     nothing = read_geoparquet(spark, path, bbox=(200.0, 95.0, 210.0, 99.0),
                               prune_files=True, prune_report=rep2)
     assert rep2["files_kept"] == 0 and nothing.count() == 0
+
+
+def test_z2_writers_evaluate_once_on_bare_session(spark, tmp_path):
+    """Both Z2 writers evaluate their input's columns once per row (the
+    range sampler and the shuffle read one persisted evaluation), run on
+    a session with no ST_* names registered, register none, and leave no
+    cached data behind, after a write or a sink that raised. What the
+    caller cached stays cached."""
+    import pytest as _pytest
+    from pyspark import StorageLevel
+    from pyspark.errors import PythonException
+    from pyspark.sql.functions import pandas_udf
+
+    from geomesa_hive_spark.functions.st import SPEC
+    from geomesa_hive_spark.operators.partitioning import add_z2_columns, write_spatially_partitioned
+    from geomesa_hive_spark.sources.spatial_io import write_geoparquet
+
+    s2 = spark.newSession()
+    n = 2000
+    make_point = SPEC["st_makepoint"].func
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+
+    def counted():
+        acc = spark.sparkContext.accumulator(0)
+
+        @pandas_udf("binary")
+        def geom(x: pd.Series, y: pd.Series) -> pd.Series:
+            acc.add(len(x))
+            return make_point(x, y)
+
+        xy = s2.range(n).select(
+            F.col("id"),
+            (((F.col("id") * 7919) % 36000) / 100.0 - 180.0).alias("x"),
+            (((F.col("id") * 4799) % 18000) / 100.0 - 90.0).alias("y"),
+        )
+        return xy.withColumn("geom", geom("x", "y")), acc
+
+    df, acc = counted()
+    summ = write_geoparquet(df, str(tmp_path / "gpq"), "geom", n_files=4)
+    assert sum(s["n_rows"] for s in summ) == n
+    assert acc.value == n
+
+    df, acc = counted()
+    write_spatially_partitioned(df, str(tmp_path / "z2"), "geom", num_files=4)
+    assert s2.read.parquet(str(tmp_path / "z2")).count() == n
+    assert acc.value == n
+
+    assert not s2.catalog.functionExists("st_intersects")
+    assert set(persisted().keys()) == before
+
+    # the sink raises after the enrichment was cached: a file where the
+    # GeoParquet directory should go
+    blocked = tmp_path / "blocked"
+    blocked.write_text("")
+    with _pytest.raises(PythonException, match="FileExistsError"):
+        write_geoparquet(counted()[0], str(blocked), "geom", n_files=4)
+    assert set(persisted().keys()) == before
+
+    # the caller's caches, of the input and of the very plan the writer
+    # persists, are left as they were
+    mine = counted()[0].cache()
+    keyed = add_z2_columns(mine, "geom").cache()
+    keyed.count()
+    write_spatially_partitioned(mine, str(tmp_path / "z2c"), "geom", num_files=4)
+    assert StorageLevel.NONE not in (mine.storageLevel, keyed.storageLevel)
+    keyed.unpersist(blocking=True)
+    mine.unpersist(blocking=True)
+    assert set(persisted().keys()) == before
