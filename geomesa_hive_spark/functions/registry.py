@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from geomesa_hive_spark.functions.st import ALIASES, SPEC
+from geomesa_hive_spark.functions.st import ALIASES, SPEC, SqlFunction
 
 __all__ = ["register_all", "registered_names"]
 
@@ -23,32 +23,11 @@ def registered_names() -> list[str]:
 
 def register_all(spark: SparkSession) -> list[str]:
     """Register every ST_* function on the session. Returns the names."""
-    # st_makeExtent is pure arithmetic: registered as a Spark SQL UDF
-    # (CREATE TEMPORARY FUNCTION ... RETURN) instead of the pandas UDF in
-    # SPEC — it inlines as a named_struct expression, no Python hop,
-    # stays inside whole-stage codegen, and composes with the pushdown
-    # rewrites. (Spark refuses to replace a Python UDF with a SQL UDF,
-    # so the name is skipped in the loop, never double-registered.) The
-    # CASE keeps null-in→null-out (a bare named_struct would produce a
-    # struct of nulls instead of null).
-    for name, udf in SPEC.items():
-        if name != "st_makeextent":
-            spark.udf.register(name, udf)
-    for alias, target in ALIASES.items():
-        if target != "st_makeextent":
-            spark.udf.register(alias, SPEC[target])
-    spark.sql(
-        """
-        CREATE OR REPLACE TEMPORARY FUNCTION st_makeExtent(
-            xmin DOUBLE, ymin DOUBLE, xmax DOUBLE, ymax DOUBLE)
-        RETURNS STRUCT<xmin: DOUBLE, ymin: DOUBLE, xmax: DOUBLE, ymax: DOUBLE>
-        RETURN CASE
-          WHEN xmin IS NULL OR ymin IS NULL OR xmax IS NULL OR ymax IS NULL
-          THEN NULL
-          ELSE named_struct('xmin', xmin, 'ymin', ymin, 'xmax', xmax, 'ymax', ymax)
-        END
-        """
-    )
+    for name, entry in [*SPEC.items(), *((a, SPEC[t]) for a, t in ALIASES.items())]:
+        if isinstance(entry, SqlFunction):
+            spark.sql(entry.ddl(name))
+        else:
+            spark.udf.register(name, entry)
     # the framework's one aggregate (ST_ConvexHull.scala:24-38)
     from geomesa_hive_spark.operators.convex_hull_agg import (
         register_convex_hull_udaf, register_extent_udaf)

@@ -6,6 +6,11 @@ plus the 9 index names of ``spatial-index/sql/createUDFs.sql:1-9``
 extents are ``struct<xmin,ymin,xmax,ymax:double>``; per-row semantics
 follow JTS 1.18 via the numpy kernel.
 
+Each per-row function is a declaration: its kernel, its argument kinds
+and its return type, built by :func:`udf_core.st_udf`, which derives null
+handling, numeric coercion, WKB decode/encode and the all-points path.
+The few UDFs written by hand say why next to their ``pandas_udf`` call.
+
 The index-module ``st_intersects``/``st_contains`` polymorphism
 (Extent|Geometry on either side — ``spatial-index/.../ST_Intersects.scala:26-44``)
 is implemented by runtime dispatch on the Arrow batch type: a struct
@@ -16,7 +21,9 @@ point-vs-literal predicates run through the vectorized PIP kernel.
 
 from __future__ import annotations
 
+import functools
 import math
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -27,12 +34,13 @@ from pyspark.sql.functions import pandas_udf
 from geomesa_hive_spark.geom import algorithms as alg
 from geomesa_hive_spark.geom import clip as clip_mod
 from geomesa_hive_spark.geom import geodesy, geohash, twkb
+from geomesa_hive_spark.geom import linear as lin
+from geomesa_hive_spark.geom import projections as proj
 from geomesa_hive_spark.geom.core import (
     Geometry,
     GeometryCollection,
     LineString,
     MultiLineString,
-    MultiPoint,
     MultiPolygon,
     Point,
     Polygon,
@@ -47,11 +55,13 @@ from geomesa_hive_spark.geom.wkb import (
 from geomesa_hive_spark.geom.wkt import from_wkt, to_wkt
 from geomesa_hive_spark.geom import z2 as z2_mod
 from geomesa_hive_spark.functions.udf_core import (
-    g2g_udf,
-    g2scalar_udf,
-    geoms_of,
+    BYTES,
+    GEOM,
+    NUM,
+    TEXT,
     numeric_series,
     parse_cache,
+    st_udf,
 )
 
 EXTENT_TYPE = T.StructType(
@@ -67,6 +77,11 @@ Z2_TYPE = T.StructType(
     [T.StructField("min", T.LongType()), T.StructField("max", T.LongType())]
 )
 
+# argument kinds of the hand-written UDFs that the builder has no use for
+EXTENT, GEOMS = "extent", "geoms"  # extent struct; array of point WKB
+
+BIN = T.BinaryType()
+
 SPEC: dict[str, object] = {}
 ALIASES: dict[str, str] = {
     # createUDFs.sql aliases
@@ -78,7 +93,11 @@ ALIASES: dict[str, str] = {
 }
 
 
-def _reg(name: str, udf) -> None:
+def _reg(name: str, udf, *kinds) -> None:
+    """Add ``udf`` to the table; ``kinds`` declares the argument kinds of
+    a hand-written UDF (a built one carries its own)."""
+    if kinds:
+        udf.kinds = kinds
     SPEC[name.lower()] = udf
 
 
@@ -86,128 +105,68 @@ def _series(vals) -> pd.Series:
     return pd.Series(vals, dtype=object)
 
 
+def _box(xmin, ymin, xmax, ymax) -> Polygon:
+    return Polygon([[xmin, ymin], [xmax, ymin], [xmax, ymax], [xmin, ymax], [xmin, ymin]])
+
+
 # ---------------------------------------------------------------------------
 # constructors
 # ---------------------------------------------------------------------------
 
 
-def _from_text_udf(caster=None):
-    def impl(s: pd.Series) -> pd.Series:
-        out = []
-        for v in s:
-            if v is None:
-                out.append(None)
-                continue
-            try:
-                g = from_wkt(v)
-            except Exception:
-                out.append(None)
-                continue
-            if caster is not None:
-                g = caster(g)
-            out.append(None if g is None else to_wkb(g))
-        return _series(out)
-
-    return pandas_udf(impl, T.BinaryType())
+def _wkt_or_none(v):
+    try:
+        return from_wkt(v)
+    except Exception:
+        return None
 
 
-def _type_filter(*types):
-    def cast(g):
-        return g if g is not None and g.geom_type in types else None
-
-    return cast
-
-
-_reg("st_geomfromwkt", _from_text_udf())
-_reg("st_pointfromtext", _from_text_udf(_type_filter("Point")))
-_reg("st_linefromtext", _from_text_udf(_type_filter("LineString")))
-_reg("st_polygonfromtext", _from_text_udf(_type_filter("Polygon")))
-_reg("st_mlinefromtext", _from_text_udf(_type_filter("MultiLineString")))
-_reg("st_mpointfromtext", _from_text_udf(_type_filter("MultiPoint")))
-_reg("st_mpolyfromtext", _from_text_udf(_type_filter("MultiPolygon")))
+def _wkb_or_none(v):
+    try:
+        return from_wkb(bytes(v))
+    except Exception:
+        return None
 
 
-def _geom_from_wkb(s: pd.Series) -> pd.Series:
-    out = []
-    for v in s:
-        if v is None:
-            out.append(None)
-            continue
-        try:
-            g = from_wkb(bytes(v))
-        except Exception:
-            out.append(None)
-            continue
-        out.append(to_wkb(g))  # canonical little-endian re-encode
-    return _series(out)
+def _of_type(parse, geom_type: str):
+    """``parse`` narrowed to one geometry type; another type is NULL."""
+
+    def kernel(v):
+        g = parse(v)
+        return g if g is not None and g.geom_type == geom_type else None
+
+    return kernel
 
 
-_reg("st_geomfromwkb", pandas_udf(_geom_from_wkb, T.BinaryType()))
+def _geojson_wkb(v):
+    try:
+        return to_wkb(from_geojson(v))
+    except Exception:
+        return None
 
 
-def _point_from_wkb(s: pd.Series) -> pd.Series:
-    out = []
-    for v in s:
-        if v is None:
-            out.append(None)
-            continue
-        try:
-            g = from_wkb(bytes(v))
-        except Exception:
-            out.append(None)
-            continue
-        out.append(to_wkb(g) if g.geom_type == "Point" else None)
-    return _series(out)
-
-
-_reg("st_pointfromwkb", pandas_udf(_point_from_wkb, T.BinaryType()))
-
-
-def _geom_from_geojson(s: pd.Series) -> pd.Series:
-    out = []
-    for v in s:
-        if v is None:
-            out.append(None)
-            continue
-        try:
-            out.append(to_wkb(from_geojson(v)))
-        except Exception:
-            out.append(None)
-    return _series(out)
-
-
-_reg("st_geomfromgeojson", pandas_udf(_geom_from_geojson, T.BinaryType()))
-
-
-def _geom_from_geohash(s: pd.Series, prec: pd.Series) -> pd.Series:
-    out = []
-    p = numeric_series(prec)
-    for v, bits in zip(s, p):
-        if v is None or math.isnan(bits):
-            out.append(None)
-            continue
-        xmin, ymin, xmax, ymax = geohash.decode_bbox(v, int(bits))
-        ring = [[xmin, ymin], [xmax, ymin], [xmax, ymax], [xmin, ymax], [xmin, ymin]]
-        out.append(to_wkb(Polygon(ring)))
-    return _series(out)
-
-
-_reg("st_geomfromgeohash", pandas_udf(_geom_from_geohash, T.BinaryType()))
-
-
-def _point_from_geohash(s: pd.Series, prec: pd.Series) -> pd.Series:
-    out = []
-    p = numeric_series(prec)
-    for v, bits in zip(s, p):
-        if v is None or math.isnan(bits):
-            out.append(None)
-            continue
-        lon, lat = geohash.decode_point(v, int(bits))
-        out.append(to_wkb(Point([[lon, lat]])))
-    return _series(out)
-
-
-_reg("st_pointfromgeohash", pandas_udf(_point_from_geohash, T.BinaryType()))
+_reg("st_geomfromwkt", st_udf(_wkt_or_none, [TEXT], BIN))
+for _name, _type in (
+    ("st_pointfromtext", "Point"),
+    ("st_linefromtext", "LineString"),
+    ("st_polygonfromtext", "Polygon"),
+    ("st_mlinefromtext", "MultiLineString"),
+    ("st_mpointfromtext", "MultiPoint"),
+    ("st_mpolyfromtext", "MultiPolygon"),
+):
+    _reg(_name, st_udf(_of_type(_wkt_or_none, _type), [TEXT], BIN))
+# the WKB re-encode is canonical little-endian
+_reg("st_geomfromwkb", st_udf(_wkb_or_none, [BYTES], BIN))
+_reg("st_pointfromwkb", st_udf(_of_type(_wkb_or_none, "Point"), [BYTES], BIN))
+_reg("st_geomfromgeojson", st_udf(_geojson_wkb, [TEXT], BIN))
+_reg(
+    "st_geomfromgeohash",
+    st_udf(lambda v, bits: _box(*geohash.decode_bbox(v, int(bits))), [TEXT, NUM], BIN),
+)
+_reg(
+    "st_pointfromgeohash",
+    st_udf(lambda v, bits: Point([geohash.decode_point(v, int(bits))]), [TEXT, NUM], BIN),
+)
 
 
 def _make_point(x: pd.Series, y: pd.Series) -> pd.Series:
@@ -220,21 +179,12 @@ def _make_point(x: pd.Series, y: pd.Series) -> pd.Series:
     return out
 
 
-_reg("st_makepoint", pandas_udf(_make_point, T.BinaryType()))
-
-
-def _make_point_m(x: pd.Series, y: pd.Series, m: pd.Series) -> pd.Series:
-    xs, ys, ms = numeric_series(x), numeric_series(y), numeric_series(m)
-    out = []
-    for xi, yi, mi in zip(xs, ys, ms):
-        if math.isnan(xi) or math.isnan(yi) or math.isnan(mi):
-            out.append(None)
-        else:
-            out.append(to_wkb(Point([[xi, yi, mi]], has_m=True)))
-    return _series(out)
-
-
-_reg("st_makepointm", pandas_udf(_make_point_m, T.BinaryType()))
+# hand-written: one vectorized WKB encode for the whole batch
+_reg("st_makepoint", pandas_udf(_make_point, BIN), NUM, NUM)
+_reg(
+    "st_makepointm",
+    st_udf(lambda x, y, m: Point([[x, y, m]], has_m=True), [NUM, NUM, NUM], BIN),
+)
 
 
 def _make_line(arr: pd.Series) -> pd.Series:
@@ -261,7 +211,8 @@ def _make_line(arr: pd.Series) -> pd.Series:
     return _series(out)
 
 
-_reg("st_makeline", pandas_udf(_make_line, T.BinaryType()))
+# hand-written: the argument is an array of points
+_reg("st_makeline", pandas_udf(_make_line, BIN), GEOMS)
 
 
 def _make_polygon_fn(g: Geometry):
@@ -275,74 +226,40 @@ def _make_polygon_fn(g: Geometry):
     return Polygon(c)
 
 
-_reg("st_makepolygon", g2g_udf(_make_polygon_fn))
+def _make_box2d(g1: Geometry, g2: Geometry):
+    if g1.is_empty or g2.is_empty:
+        return None
+    return _box(min(g1.x, g2.x), min(g1.y, g2.y), max(g1.x, g2.x), max(g1.y, g2.y))
 
 
-def _box_wkb(xmin, ymin, xmax, ymax) -> bytes:
-    ring = [[xmin, ymin], [xmax, ymin], [xmax, ymax], [xmin, ymax], [xmin, ymin]]
-    return to_wkb(Polygon(ring))
-
-
-def _make_bbox(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-    a, b, c, d = (numeric_series(v) for v in (xmin, ymin, xmax, ymax))
-    out = []
-    for vals in zip(a, b, c, d):
-        if any(math.isnan(v) for v in vals):
-            out.append(None)
-        else:
-            out.append(_box_wkb(*vals))
-    return _series(out)
-
-
-_reg("st_makebbox", pandas_udf(_make_bbox, T.BinaryType()))
-
-
-def _make_box2d(p1: pd.Series, p2: pd.Series) -> pd.Series:
-    parse = parse_cache()
-    out = []
-    for b1, b2 in zip(p1, p2):
-        g1, g2 = parse(b1), parse(b2)
-        if g1 is None or g2 is None or g1.is_empty or g2.is_empty:
-            out.append(None)
-        else:
-            out.append(
-                _box_wkb(
-                    min(g1.x, g2.x), min(g1.y, g2.y), max(g1.x, g2.x), max(g1.y, g2.y)
-                )
-            )
-    return _series(out)
-
-
-_reg("st_makebox2d", pandas_udf(_make_box2d, T.BinaryType()))
-
-
-def _byte_array(s: pd.Series) -> pd.Series:
-    return _series([None if v is None else v.encode("utf-8") for v in s])
-
-
-_reg("st_bytearray", pandas_udf(_byte_array, T.BinaryType()))
+_reg("st_makepolygon", st_udf(_make_polygon_fn, [GEOM], BIN))
+_reg("st_makebbox", st_udf(_box, [NUM, NUM, NUM, NUM], BIN))
+_reg("st_makebox2d", st_udf(_make_box2d, [GEOM, GEOM], BIN))
+_reg("st_bytearray", st_udf(lambda v: v.encode("utf-8"), [TEXT], BIN))
 
 
 # ---------------------------------------------------------------------------
 # accessors
 # ---------------------------------------------------------------------------
 
-_reg("st_boundary", g2g_udf(alg.boundary))
-_reg("st_envelope", g2g_udf(alg.envelope))
+_reg("st_boundary", st_udf(alg.boundary, [GEOM], BIN))
+_reg("st_envelope", st_udf(alg.envelope, [GEOM], BIN))
 _reg(
     "st_coorddim",
-    g2scalar_udf(lambda g: int(2 + g.has_z + g.has_m), T.IntegerType()),
+    st_udf(lambda g: int(2 + g.has_z + g.has_m), [GEOM], T.IntegerType()),
 )
 _reg(
     "st_dimension",
-    g2scalar_udf(lambda g: int(g.dimension) if g.dimension >= 0 else 0, T.IntegerType()),
+    st_udf(lambda g: int(g.dimension) if g.dimension >= 0 else 0, [GEOM], T.IntegerType()),
 )
 _reg(
     "st_exteriorring",
-    g2g_udf(
+    st_udf(
         lambda g: LineString(g.shell)
         if g.geom_type == "Polygon" and not g.is_empty
-        else None
+        else None,
+        [GEOM],
+        BIN,
     ),
 )
 
@@ -374,51 +291,37 @@ def _point_n(g: Geometry, n: float):
     return None
 
 
-def _gn_udf(fn):
-    def impl(s: pd.Series, n: pd.Series) -> pd.Series:
-        parse = parse_cache()
-        ns = numeric_series(n)
-        out = []
-        for b, ni in zip(s, ns):
-            g = parse(b)
-            if g is None or math.isnan(ni):
-                out.append(None)
-                continue
-            r = fn(g, ni)
-            out.append(None if r is None else to_wkb(r))
-        return _series(out)
-
-    return pandas_udf(impl, T.BinaryType())
-
-
-_reg("st_geometryn", _gn_udf(_geometry_n))
-_reg("st_interiorringn", _gn_udf(_interior_ring_n))
-_reg("st_pointn", _gn_udf(_point_n))
+_reg("st_geometryn", st_udf(_geometry_n, [GEOM, NUM], BIN))
+_reg("st_interiorringn", st_udf(_interior_ring_n, [GEOM, NUM], BIN))
+_reg("st_pointn", st_udf(_point_n, [GEOM, NUM], BIN))
 
 _reg(
     "st_icclosed",  # sic: reference createUDFs.sql:43 registers the typo'd name
-    g2scalar_udf(
+    st_udf(
         lambda g: bool(g.is_closed) if g.geom_type == "LineString" else True,
+        [GEOM],
         T.BooleanType(),
     ),
 )
 _reg(
     "st_iscollection",
-    g2scalar_udf(
+    st_udf(
         lambda g: g.geom_type
         in ("MultiPoint", "MultiLineString", "MultiPolygon", "GeometryCollection"),
+        [GEOM],
         T.BooleanType(),
     ),
 )
-_reg("st_isempty", g2scalar_udf(lambda g: bool(g.is_empty), T.BooleanType()))
+_reg("st_isempty", st_udf(lambda g: bool(g.is_empty), [GEOM], T.BooleanType()))
 _reg(
     "st_isring",
-    g2scalar_udf(
+    st_udf(
         lambda g: bool(g.is_ring) if g.geom_type == "LineString" else None,
+        [GEOM],
         T.BooleanType(),
     ),
 )
-_reg("st_issimple", g2scalar_udf(lambda g: bool(alg.is_simple(g)), T.BooleanType()))
+_reg("st_issimple", st_udf(lambda g: bool(alg.is_simple(g)), [GEOM], T.BooleanType()))
 
 
 def _is_valid(g: Geometry) -> bool:
@@ -446,29 +349,25 @@ def _is_valid(g: Geometry) -> bool:
     return all(_is_valid(p) for p in g.geometries())
 
 
-_reg("st_isvalid", g2scalar_udf(_is_valid, T.BooleanType()))
+_reg("st_isvalid", st_udf(_is_valid, [GEOM], T.BooleanType()))
 _reg(
     "st_numgeometries",
-    g2scalar_udf(lambda g: int(len(g.geometries())), T.IntegerType()),
+    st_udf(lambda g: int(len(g.geometries())), [GEOM], T.IntegerType()),
 )
 _reg(
     "st_numpoints",
-    g2scalar_udf(lambda g: int(alg.all_coords(g).shape[0]), T.IntegerType()),
+    st_udf(lambda g: int(alg.all_coords(g).shape[0]), [GEOM], T.IntegerType()),
 )
 
 
 def _xy_udf(idx: int):
     # reference returns float32 (ST_X.scala:25) — match for hash parity
-    def fast(x, y):
-        v = (x if idx == 0 else y).astype(np.float32)
-        return [None if math.isnan(fv) else float(np.float32(fv)) for fv in v]
-
     def fn(g):
         if g.geom_type == "Point" and not g.is_empty:
             return float(np.float32(g.coords[0, idx]))
         return None
 
-    return g2scalar_udf(fn, T.FloatType(), point_fast=fast)
+    return st_udf(fn, [GEOM], T.FloatType(), points=lambda *xy: xy[idx].astype(np.float32))
 
 
 _reg("st_x", _xy_udf(0))
@@ -621,7 +520,12 @@ def _poly_predicate_udf(fn, extent_extent_fn, pip_includes_boundary: bool | None
             return alg.points_in_polygon_vec(x, y, const_g, include_boundary=False)
         return None
 
-    return pandas_udf(impl, T.BooleanType())
+
+    # hand-written: either argument may be an extent struct, and the
+    # point-batch and extent-batch paths test against one constant
+    udf = pandas_udf(impl, T.BooleanType())
+    udf.kinds = (GEOM, GEOM)
+    return udf
 
 
 _reg(
@@ -653,45 +557,21 @@ for _name, _fn in (
     _reg(_name, _poly_predicate_udf(_fn, None, None))
 
 
-def _relate_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    parse = parse_cache()
-    out = []
-    for ba, bb in zip(a, b):
-        ga, gb = parse(ba), parse(bb)
-        out.append(None if ga is None or gb is None else alg.relate(ga, gb))
-    return _series(out)
-
-
-_reg("st_relate", pandas_udf(_relate_udf, T.StringType()))
-
-
-def _relate_bool(a: pd.Series, b: pd.Series, pat: pd.Series) -> pd.Series:
-    parse = parse_cache()
-    out = []
-    for ba, bb, p in zip(a, b, pat):
-        ga, gb = parse(ba), parse(bb)
-        if ga is None or gb is None or p is None:
-            out.append(None)
-        else:
-            out.append(bool(alg.relate_pattern(ga, gb, p)))
-    return _series(out)
-
-
-_reg("st_relatebool", pandas_udf(_relate_bool, T.BooleanType()))
+_reg("st_relate", st_udf(alg.relate, [GEOM, GEOM], T.StringType()))
+_reg(
+    "st_relatebool",
+    st_udf(lambda a, b, p: bool(alg.relate_pattern(a, b, p)), [GEOM, GEOM, TEXT], T.BooleanType()),
+)
 
 
 # ---------------------------------------------------------------------------
 # measures
 # ---------------------------------------------------------------------------
 
-_reg("st_area", g2scalar_udf(lambda g: float(alg.area(g)), T.DoubleType()))
-_reg("st_length", g2scalar_udf(lambda g: float(alg.length(g)), T.DoubleType()))
-_reg("st_centroid", g2g_udf(alg.centroid))
-def _closest_point_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _gg2geom(a, b, alg.closest_point)
-
-
-_reg("st_closestpoint", pandas_udf(_closest_point_udf, T.BinaryType()))
+_reg("st_area", st_udf(lambda g: float(alg.area(g)), [GEOM], T.DoubleType()))
+_reg("st_length", st_udf(lambda g: float(alg.length(g)), [GEOM], T.DoubleType()))
+_reg("st_centroid", st_udf(alg.centroid, [GEOM], BIN))
+_reg("st_closestpoint", st_udf(alg.closest_point, [GEOM, GEOM], BIN))
 
 
 # linear referencing (round 14, geom/linear.py — the PostGIS
@@ -703,62 +583,25 @@ _reg("st_closestpoint", pandas_udf(_closest_point_udf, T.BinaryType()))
 # convention for type-mismatched geometry args).
 
 
-def _line_interpolate_udf(g: pd.Series, f: pd.Series) -> pd.Series:
-    from geomesa_hive_spark.geom import linear as lin
-
-    parse = parse_cache()
-    out = []
-    for bg, fv in zip(g, f):
-        gl = parse(bg)
-        # pd.isna, not `is None`: a SQL NULL in the float64 fraction
-        # series arrives as NaN (caught by the round-14 verify probe —
-        # `is None` let NaN flow into the interpolation)
-        if gl is None or pd.isna(fv) or gl.geom_type != "LineString" \
-                or gl.is_empty:
-            out.append(None)
-        else:
-            p = lin.line_interpolate_point(gl.coords, float(fv))
-            out.append(to_wkb(Point(np.array([p]))))
-    return _series(out)
+def _is_line(g: Geometry) -> bool:
+    return g.geom_type == "LineString" and not g.is_empty
 
 
-def _line_locate_udf(g: pd.Series, p: pd.Series) -> pd.Series:
-    from geomesa_hive_spark.geom import linear as lin
-
-    parse = parse_cache()
-    out = []
-    for bg, bp in zip(g, p):
-        gl, gp = parse(bg), parse(bp)
-        if (gl is None or gp is None or gl.geom_type != "LineString"
-                or gp.geom_type != "Point" or gl.is_empty
-                or gp.is_empty):
-            out.append(None)
-        else:
-            out.append(float(lin.line_locate_point(gl.coords,
-                                                   gp.coords[0])))
-    return _series(out)
+def _line_interpolate(g: Geometry, f: float):
+    return Point(np.array([lin.line_interpolate_point(g.coords, f)])) if _is_line(g) else None
 
 
-def _line_substring_udf(g: pd.Series, f0: pd.Series,
-                        f1: pd.Series) -> pd.Series:
-    from geomesa_hive_spark.geom import linear as lin
+def _line_locate(g: Geometry, p: Geometry):
+    if not _is_line(g) or p.geom_type != "Point" or p.is_empty:
+        return None
+    return float(lin.line_locate_point(g.coords, p.coords[0]))
 
-    parse = parse_cache()
-    out = []
-    for bg, a, b in zip(g, f0, f1):
-        gl = parse(bg)
-        if gl is None or pd.isna(a) or pd.isna(b) \
-                or gl.geom_type != "LineString" or gl.is_empty:
-            out.append(None)
-        else:
-            cs = lin.line_substring(gl.coords, float(a), float(b))
-            out.append(to_wkb(LineString(cs)))
-    return _series(out)
+
+def _line_substring(g: Geometry, f0: float, f1: float):
+    return LineString(lin.line_substring(g.coords, f0, f1)) if _is_line(g) else None
 
 
 def _segmentize_geom(g, d):
-    from geomesa_hive_spark.geom import linear as lin
-
     t = g.geom_type
     if t == "Point" or g.is_empty:
         return g
@@ -776,60 +619,23 @@ def _segmentize_geom(g, d):
     return g
 
 
-def _segmentize_udf(g: pd.Series, d: pd.Series) -> pd.Series:
-    parse = parse_cache()
-    out = []
-    for bg, dv in zip(g, d):
-        gl = parse(bg)
-        if gl is None or pd.isna(dv):
-            out.append(None)
-        else:
-            out.append(to_wkb(_segmentize_geom(gl, float(dv))))
-    return _series(out)
+_reg("st_segmentize", st_udf(_segmentize_geom, [GEOM, NUM], BIN))
+_reg("st_lineinterpolatepoint", st_udf(_line_interpolate, [GEOM, NUM], BIN))
+_reg("st_linelocatepoint", st_udf(_line_locate, [GEOM, GEOM], T.DoubleType()))
+_reg("st_linesubstring", st_udf(_line_substring, [GEOM, NUM, NUM], BIN))
 
 
-_reg("st_segmentize", pandas_udf(_segmentize_udf, T.BinaryType()))
-
-
-_reg("st_lineinterpolatepoint",
-     pandas_udf(_line_interpolate_udf, T.BinaryType()))
-_reg("st_linelocatepoint", pandas_udf(_line_locate_udf, T.DoubleType()))
-_reg("st_linesubstring", pandas_udf(_line_substring_udf, T.BinaryType()))
-
-
-def _gg2geom(a: pd.Series, b: pd.Series, fn) -> pd.Series:
-    parse = parse_cache()
-    out = []
-    for ba, bb in zip(a, b):
-        ga, gb = parse(ba), parse(bb)
-        if ga is None or gb is None:
-            out.append(None)
-        else:
-            r = fn(ga, gb)
-            out.append(None if r is None else to_wkb(r))
-    return _series(out)
-
-
-def _distance_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    # vectorized fast path: both sides plain points
-    fa = wkb_array_to_points(a.to_numpy(dtype=object))
-    fb = wkb_array_to_points(b.to_numpy(dtype=object))
-    if fa is not None and fb is not None:
-        ax, ay = fa
-        bx, by = fb
-        d = np.hypot(ax - bx, ay - by)
-        out = pd.Series(d, dtype=object)
-        out[np.isnan(d)] = None
-        return out
-    parse = parse_cache()
-    out = []
-    for ba, bb in zip(a, b):
-        ga, gb = parse(ba), parse(bb)
-        out.append(None if ga is None or gb is None else float(alg.distance(ga, gb)))
-    return _series(out)
-
-
-_reg("st_distance", pandas_udf(_distance_udf, T.DoubleType()))
+# Point-to-point measures: the kernel on any pair, and on an all-points
+# batch the same measure on the coordinate arrays.
+_reg(
+    "st_distance",
+    st_udf(
+        lambda a, b: float(alg.distance(a, b)),
+        [GEOM, GEOM],
+        T.DoubleType(),
+        points=lambda ax, ay, bx, by: np.hypot(ax - bx, ay - by),
+    ),
+)
 
 
 def _dwithin_udf(a: pd.Series, b: pd.Series, d: pd.Series) -> pd.Series:
@@ -856,75 +662,47 @@ def _dwithin_udf(a: pd.Series, b: pd.Series, d: pd.Series) -> pd.Series:
     )
 
 
-_reg("st_dwithin", pandas_udf(_dwithin_udf, T.BooleanType()))
+# hand-written: either argument may be an extent struct
+_reg("st_dwithin", pandas_udf(_dwithin_udf, T.BooleanType()), GEOM, GEOM, NUM)
 
 
-def _distance_sphere_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    fa = wkb_array_to_points(a.to_numpy(dtype=object))
-    fb = wkb_array_to_points(b.to_numpy(dtype=object))
-    if fa is not None and fb is not None:
-        ax, ay = fa
-        bx, by = fb
-        d = geodesy.haversine_m(ax, ay, bx, by)
-        out = pd.Series(d, dtype=object)
-        out[np.isnan(np.asarray(d))] = None
-        return out
-    parse = parse_cache()
-    out = []
-    for ba, bb in zip(a, b):
-        ga, gb = parse(ba), parse(bb)
-        out.append(
-            None if ga is None or gb is None else float(geodesy.distance_sphere(ga, gb))
-        )
-    return _series(out)
-
-
-def _distance_spheroid_udf(a: pd.Series, b: pd.Series) -> pd.Series:
+def _distance_spheroid(a: Geometry, b: Geometry):
     """True WGS84 ellipsoidal distance (Vincenty inverse, fixed
     iterations — geom/geodesy.py vincenty_m). Until round 6 this name
     aliased the SPHERE kernel, a silent ≤0.5% wrong answer vs the
     PostGIS ST_DistanceSpheroid semantics the name promises. Non-point
     geometries measure between the planar closest points, the same
     convention distance_sphere documents."""
-    fa = wkb_array_to_points(a.to_numpy(dtype=object))
-    fb = wkb_array_to_points(b.to_numpy(dtype=object))
-    if fa is not None and fb is not None:
-        ax, ay = fa
-        bx, by = fb
-        d = geodesy.vincenty_m(ax, ay, bx, by)
-        out = pd.Series(d, dtype=object)
-        out[np.isnan(np.asarray(d))] = None
-        return out
-    from geomesa_hive_spark.geom import algorithms as _alg
-
-    parse = parse_cache()
-    out = []
-    for ba, bb in zip(a, b):
-        ga, gb = parse(ba), parse(bb)
-        if ga is None or gb is None:
-            out.append(None)
-        elif ga.is_empty or gb.is_empty:
-            out.append(None)
-        elif _alg.intersects(ga, gb):
-            out.append(0.0)
-        else:
-            _, ax, ay = _alg._closest_pair(ga, gb)
-            _, bx, by = _alg._closest_pair(gb, ga)
-            out.append(float(geodesy.vincenty_m(
-                np.array([ax]), np.array([ay]),
-                np.array([bx]), np.array([by]))[0]))
-    return _series(out)
+    if a.is_empty or b.is_empty:
+        return None
+    if alg.intersects(a, b):
+        return 0.0
+    _, ax, ay = alg._closest_pair(a, b)
+    _, bx, by = alg._closest_pair(b, a)
+    return float(geodesy.vincenty_m(
+        np.array([ax]), np.array([ay]), np.array([bx]), np.array([by]))[0])
 
 
-_reg("st_distancespheroid", pandas_udf(_distance_spheroid_udf, T.DoubleType()))
-_reg("st_distancesphere", pandas_udf(_distance_sphere_udf, T.DoubleType()))
+_reg(
+    "st_distancespheroid",
+    st_udf(_distance_spheroid, [GEOM, GEOM], T.DoubleType(), points=geodesy.vincenty_m),
+)
+_reg(
+    "st_distancesphere",
+    st_udf(
+        lambda a, b: float(geodesy.distance_sphere(a, b)),
+        [GEOM, GEOM],
+        T.DoubleType(),
+        points=geodesy.haversine_m,
+    ),
+)
 _reg(
     "st_lengthsphere",
-    g2scalar_udf(lambda g: float(geodesy.length_sphere(g)), T.DoubleType()),
+    st_udf(lambda g: float(geodesy.length_sphere(g)), [GEOM], T.DoubleType()),
 )
 _reg(
     "st_lengthspheroid",
-    g2scalar_udf(lambda g: float(geodesy.length_spheroid(g)), T.DoubleType()),
+    st_udf(lambda g: float(geodesy.length_spheroid(g)), [GEOM], T.DoubleType()),
 )
 # round 13: WGS84 ellipsoidal polygon area in m² (PostGIS geography
 # ST_Area's role — the one commonly-hit geography measure with no
@@ -932,83 +710,49 @@ _reg(
 # edge semantics, exact on meridian/parallel quadrangles.
 _reg(
     "st_areaspheroid",
-    g2scalar_udf(lambda g: float(geodesy.area_spheroid(g)), T.DoubleType()),
+    st_udf(lambda g: float(geodesy.area_spheroid(g)), [GEOM], T.DoubleType()),
 )
 
 
-def _azimuth_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """PostGIS-style spherical forward azimuth in RADIANS clockwise
-    from north, NULL for coincident points (PostGIS returns NULL when
-    the points are equal): the closed-form
-    atan2(sin Δλ·cos φ2, cos φ1·sin φ2 − sin φ1·cos φ2·cos Δλ),
-    normalized to [0, 2π)."""
-    fa = wkb_array_to_points(a.to_numpy(dtype=object))
-    fb = wkb_array_to_points(b.to_numpy(dtype=object))
-    if fa is not None and fb is not None:
-        ax, ay = fa
-        bx, by = fb
-        l1, p1 = np.radians(ax), np.radians(ay)
-        l2, p2 = np.radians(bx), np.radians(by)
-        dl = l2 - l1
-        az = np.arctan2(
-            np.sin(dl) * np.cos(p2),
-            np.cos(p1) * np.sin(p2) - np.sin(p1) * np.cos(p2) * np.cos(dl),
-        )
-        az = np.where(az < 0.0, az + 2.0 * math.pi, az)
-        same = (ax == bx) & (ay == by)
-        out = pd.Series(az, dtype=object)
-        out[same | np.isnan(az)] = None
-        return out
-    parse = parse_cache()
-    out = []
-    for ba, bb in zip(a, b):
-        ga, gb = parse(ba), parse(bb)
-        if (ga is None or gb is None or ga.geom_type != "Point"
-                or gb.geom_type != "Point" or ga.is_empty or gb.is_empty):
-            out.append(None)
-            continue
-        (ax, ay), (bx, by) = ga.coords[0], gb.coords[0]
-        if ax == bx and ay == by:
-            out.append(None)
-            continue
-        dl = math.radians(bx - ax)
-        az = math.atan2(
-            math.sin(dl) * math.cos(math.radians(by)),
-            math.cos(math.radians(ay)) * math.sin(math.radians(by))
-            - math.sin(math.radians(ay)) * math.cos(math.radians(by))
-            * math.cos(dl),
-        )
-        out.append(az + 2.0 * math.pi if az < 0.0 else az)
-    return _series(out)
+# PostGIS-style spherical forward azimuth in RADIANS clockwise from north,
+# NULL for coincident points (PostGIS returns NULL when the points are
+# equal): the closed-form
+# atan2(sin Δλ·cos φ2, cos φ1·sin φ2 − sin φ1·cos φ2·cos Δλ),
+# normalized to [0, 2π).
 
 
-_reg("st_azimuth", pandas_udf(_azimuth_udf, T.DoubleType()))
-def _difference_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _gg2geom(a, b, clip_mod.difference)
+def _azimuth(a: Geometry, b: Geometry):
+    if a.geom_type != "Point" or b.geom_type != "Point" or a.is_empty or b.is_empty:
+        return None
+    (ax, ay), (bx, by) = a.coords[0], b.coords[0]
+    if ax == bx and ay == by:
+        return None
+    dl = math.radians(bx - ax)
+    az = math.atan2(
+        math.sin(dl) * math.cos(math.radians(by)),
+        math.cos(math.radians(ay)) * math.sin(math.radians(by))
+        - math.sin(math.radians(ay)) * math.cos(math.radians(by))
+        * math.cos(dl),
+    )
+    return az + 2.0 * math.pi if az < 0.0 else az
 
 
-def _intersection_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _gg2geom(a, b, clip_mod.intersection)
+def _azimuth_points(ax, ay, bx, by):
+    l1, p1 = np.radians(ax), np.radians(ay)
+    l2, p2 = np.radians(bx), np.radians(by)
+    dl = l2 - l1
+    az = np.arctan2(
+        np.sin(dl) * np.cos(p2),
+        np.cos(p1) * np.sin(p2) - np.sin(p1) * np.cos(p2) * np.cos(dl),
+    )
+    az = np.where(az < 0.0, az + 2.0 * math.pi, az)
+    return np.where((ax == bx) & (ay == by), np.nan, az)
 
 
-_reg("st_difference", pandas_udf(_difference_udf, T.BinaryType()))
-_reg("st_intersection", pandas_udf(_intersection_udf, T.BinaryType()))
-
-
-def _translate_udf(s: pd.Series, dx: pd.Series, dy: pd.Series) -> pd.Series:
-    parse = parse_cache()
-    xs, ys = numeric_series(dx), numeric_series(dy)
-    out = []
-    for b, xi, yi in zip(s, xs, ys):
-        g = parse(b)
-        if g is None or math.isnan(xi) or math.isnan(yi):
-            out.append(None)
-        else:
-            out.append(to_wkb(alg.translate(g, xi, yi)))
-    return _series(out)
-
-
-_reg("st_translate", pandas_udf(_translate_udf, T.BinaryType()))
+_reg("st_azimuth", st_udf(_azimuth, [GEOM, GEOM], T.DoubleType(), points=_azimuth_points))
+_reg("st_difference", st_udf(clip_mod.difference, [GEOM, GEOM], BIN))
+_reg("st_intersection", st_udf(clip_mod.intersection, [GEOM, GEOM], BIN))
+_reg("st_translate", st_udf(alg.translate, [GEOM, NUM, NUM], BIN))
 
 
 # ---------------------------------------------------------------------------
@@ -1046,53 +790,32 @@ def _antimeridian_safe(g: Geometry) -> Geometry:
     return GeometryCollection(parts)
 
 
-_reg("st_antimeridiansafegeom", g2g_udf(_antimeridian_safe))
+def _buffer_point(g: Geometry, r: float):
+    if g.geom_type != "Point" or g.is_empty:
+        return None
+    return geodesy.buffer_point(g, r)
 
 
-def _buffer_point_udf(s: pd.Series, r: pd.Series) -> pd.Series:
-    parse = parse_cache()
-    rs = numeric_series(r)
-    out = []
-    for b, ri in zip(s, rs):
-        g = parse(b)
-        if g is None or math.isnan(ri) or g.geom_type != "Point" or g.is_empty:
-            out.append(None)
-        else:
-            out.append(to_wkb(geodesy.buffer_point(g, float(ri))))
-    return _series(out)
-
-
-_reg("st_bufferpoint", pandas_udf(_buffer_point_udf, T.BinaryType()))
-
-
-def _simplify_udf(preserve: bool):
-    def impl(s: pd.Series, tol: pd.Series) -> pd.Series:
-        parse = parse_cache()
-        ts = numeric_series(tol)
-        out = []
-        for b, ti in zip(s, ts):
-            g = parse(b)
-            if g is None or math.isnan(ti):
-                out.append(None)
-            else:
-                out.append(to_wkb(alg.simplify(g, float(ti), preserve_topology=preserve)))
-        return _series(out)
-
-    return pandas_udf(impl, T.BinaryType())
-
-
-_reg("st_simplify", _simplify_udf(False))
-_reg("st_simplifypreservetopology", _simplify_udf(True))
+_reg("st_antimeridiansafegeom", st_udf(_antimeridian_safe, [GEOM], BIN))
+_reg("st_bufferpoint", st_udf(_buffer_point, [GEOM, NUM], BIN))
+_reg(
+    "st_simplify",
+    st_udf(lambda g, t: alg.simplify(g, t, preserve_topology=False), [GEOM, NUM], BIN),
+)
+_reg(
+    "st_simplifypreservetopology",
+    st_udf(lambda g, t: alg.simplify(g, t, preserve_topology=True), [GEOM, NUM], BIN),
+)
 
 
 # ---------------------------------------------------------------------------
 # output / encodings
 # ---------------------------------------------------------------------------
 
-_reg("st_astext", g2scalar_udf(to_wkt, T.StringType()))
-_reg("st_asbinary", g2scalar_udf(to_wkb, T.BinaryType()))
-_reg("st_astwkb", g2scalar_udf(twkb.to_twkb, T.BinaryType()))
-_reg("st_asgeojson", g2scalar_udf(to_geojson, T.StringType()))
+_reg("st_astext", st_udf(to_wkt, [GEOM], T.StringType()))
+_reg("st_asbinary", st_udf(to_wkb, [GEOM], BIN))
+_reg("st_astwkb", st_udf(twkb.to_twkb, [GEOM], BIN))
+_reg("st_asgeojson", st_udf(to_geojson, [GEOM], T.StringType()))
 
 
 def _dms(value: float, pos: str, neg: str) -> str:
@@ -1110,40 +833,28 @@ def _as_latlon_text(g: Geometry):
     return f"{_dms(g.y, 'N', 'S')} {_dms(g.x, 'E', 'W')}"
 
 
-_reg("st_aslatlontext", g2scalar_udf(_as_latlon_text, T.StringType()))
+def _as_geohash(g: Geometry, bits: float):
+    if g.is_empty:
+        return None
+    ip = (g.x, g.y) if g.geom_type == "Point" else alg._interior_point(g)
+    return None if ip is None else geohash.encode(ip[1], ip[0], int(bits))
 
 
-def _as_geohash(s: pd.Series, prec: pd.Series) -> pd.Series:
-    parse = parse_cache()
-    ps = numeric_series(prec)
-    out = []
-    for b, bits in zip(s, ps):
-        g = parse(b)
-        if g is None or math.isnan(bits) or g.is_empty:
-            out.append(None)
-            continue
-        ip = (g.x, g.y) if g.geom_type == "Point" else alg._interior_point(g)
-        if ip is None:
-            out.append(None)
-        else:
-            out.append(geohash.encode(ip[1], ip[0], int(bits)))
-    return _series(out)
-
-
-_reg("st_asgeohash", pandas_udf(_as_geohash, T.StringType()))
+_reg("st_aslatlontext", st_udf(_as_latlon_text, [GEOM], T.StringType()))
+_reg("st_asgeohash", st_udf(_as_geohash, [GEOM, NUM], T.StringType()))
 
 
 # ---------------------------------------------------------------------------
 # casts
 # ---------------------------------------------------------------------------
 
-_reg("st_casttogeometry", g2g_udf(lambda g: g))
-_reg("st_casttopoint", g2g_udf(lambda g: g if g.geom_type == "Point" else None))
+_reg("st_casttogeometry", st_udf(lambda g: g, [GEOM], BIN))
+_reg("st_casttopoint", st_udf(lambda g: g if g.geom_type == "Point" else None, [GEOM], BIN))
 _reg(
     "st_casttolinestring",
-    g2g_udf(lambda g: g if g.geom_type == "LineString" else None),
+    st_udf(lambda g: g if g.geom_type == "LineString" else None, [GEOM], BIN),
 )
-_reg("st_casttopolygon", g2g_udf(lambda g: g if g.geom_type == "Polygon" else None))
+_reg("st_casttopolygon", st_udf(lambda g: g if g.geom_type == "Polygon" else None, [GEOM], BIN))
 
 
 def _is_geom_field(s: pd.Series) -> pd.Series:
@@ -1171,7 +882,8 @@ def _is_geom_field(s: pd.Series) -> pd.Series:
     return _series(out)
 
 
-_reg("st_isgeomfield", pandas_udf(_is_geom_field, T.BooleanType()))
+# hand-written: a NULL argument gives FALSE, not NULL
+_reg("st_isgeomfield", pandas_udf(_is_geom_field, T.BooleanType()), TEXT)
 
 
 # ---------------------------------------------------------------------------
@@ -1179,26 +891,44 @@ _reg("st_isgeomfield", pandas_udf(_is_geom_field, T.BooleanType()))
 # ---------------------------------------------------------------------------
 
 
-def _make_extent(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "xmin": numeric_series(xmin),
-            "ymin": numeric_series(ymin),
-            "xmax": numeric_series(xmax),
-            "ymax": numeric_series(ymax),
-        }
-    )
+@dataclass(frozen=True)
+class SqlFunction:
+    """A function registered as a Spark SQL body rather than a Python UDF:
+    Spark inlines it as an expression, so it stays inside whole-stage
+    codegen and composes with the pushdown rewrites."""
+
+    params: str
+    returns: str
+    body: str
+    kinds: tuple
+
+    def ddl(self, name: str) -> str:
+        return (
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({self.params}) "
+            f"RETURNS {self.returns} RETURN {self.body}"
+        )
 
 
-_reg("st_makeextent", pandas_udf(_make_extent, EXTENT_TYPE))
+# pure arithmetic; the CASE keeps null-in→null-out (a bare named_struct
+# of NULL arguments is a struct of NULL fields, not NULL)
+_reg(
+    "st_makeextent",
+    SqlFunction(
+        "xmin DOUBLE, ymin DOUBLE, xmax DOUBLE, ymax DOUBLE",
+        "STRUCT<xmin: DOUBLE, ymin: DOUBLE, xmax: DOUBLE, ymax: DOUBLE>",
+        "CASE WHEN xmin IS NULL OR ymin IS NULL OR xmax IS NULL OR ymax IS NULL THEN NULL "
+        "ELSE named_struct('xmin', xmin, 'ymin', ymin, 'xmax', xmax, 'ymax', ymax) END",
+        (NUM, NUM, NUM, NUM),
+    ),
+)
 
 
-def _extent_from_geom(s: pd.Series) -> pd.DataFrame:
-    vals = s.to_numpy(dtype=object)
+def _bounds_of(vals) -> np.ndarray:
+    """(n, 4) bounds of a WKB batch, NaN rows for NULL or empty."""
     fp = wkb_array_to_points(vals)
     if fp is not None:
         x, y = fp
-        return pd.DataFrame({"xmin": x, "ymin": y, "xmax": x, "ymax": y})
+        return np.column_stack([x, y, x, y])
     parse = parse_cache()
     rows = []
     for b in vals:
@@ -1207,25 +937,26 @@ def _extent_from_geom(s: pd.Series) -> pd.DataFrame:
             rows.append((np.nan, np.nan, np.nan, np.nan))
         else:
             rows.append(g.bounds)
-    a = np.asarray(rows, dtype=np.float64)
+    return np.asarray(rows, dtype=np.float64)
+
+
+def _extent_from_geom(s: pd.Series) -> pd.DataFrame:
+    a = _bounds_of(s.to_numpy(dtype=object))
     return pd.DataFrame({"xmin": a[:, 0], "ymin": a[:, 1], "xmax": a[:, 2], "ymax": a[:, 3]})
 
 
-_reg("st_extentfromgeom", pandas_udf(_extent_from_geom, EXTENT_TYPE))
+# hand-written: the struct result is built from one bounds array
+_reg("st_extentfromgeom", pandas_udf(_extent_from_geom, EXTENT_TYPE), GEOM)
 
 
 def _extent_to_geom(df: pd.Series) -> pd.Series:
     xmin, ymin, xmax, ymax = _extent_cols(df)
-    out = []
-    for a, b, c, d in zip(xmin, ymin, xmax, ymax):
-        if math.isnan(a):
-            out.append(None)
-        else:
-            out.append(_box_wkb(a, b, c, d))
-    return _series(out)
+    return _series([None if math.isnan(a) else to_wkb(_box(a, b, c, d))
+                    for a, b, c, d in zip(xmin, ymin, xmax, ymax)])
 
 
-_reg("st_extenttogeom", pandas_udf(_extent_to_geom, T.BinaryType()))
+# hand-written: the argument is an extent struct
+_reg("st_extenttogeom", pandas_udf(_extent_to_geom, BIN), EXTENT)
 
 
 _CRS_PROJ4 = {
@@ -1234,19 +965,12 @@ _CRS_PROJ4 = {
 }
 
 
-def _crs_from_text(s: pd.Series) -> pd.Series:
-    out = []
-    for v in s:
-        if v is None:
-            out.append(None)
-        elif v.strip().startswith("+"):
-            out.append(v.strip())
-        else:
-            out.append(_CRS_PROJ4.get(v.strip().upper(), v.strip()))
-    return _series(out)
+def _crs_from_text(v: str) -> str:
+    v = v.strip()
+    return v if v.startswith("+") else _CRS_PROJ4.get(v.upper(), v)
 
 
-_reg("st_crsfromtext", pandas_udf(_crs_from_text, T.StringType()))
+_reg("st_crsfromtext", st_udf(_crs_from_text, [TEXT], T.StringType()))
 
 _R_MAJOR = 6378137.0
 
@@ -1275,228 +999,66 @@ def _transform_geom(g: Geometry, fn) -> Geometry:
     return type(g)([_transform_geom(p, fn) for p in g.geoms], has_z=g.has_z, has_m=g.has_m)
 
 
+# Reprojection routes through lon/lat: each parsed CRS (projections.parse_crs)
+# gives an inverse (projected → lon/lat) and a forward (lon/lat → projected).
+# A plain family calls proj.<family>_inverse/_forward with the parameters
+# after its name; a datum family slices the parameters up to its +towgs84
+# slot, whose value (when set) adds a Helmert shift on the family's
+# ellipsoid; anything else is UTM (zone, north).
+_PLAIN_FAMILIES = frozenset((
+    "lcc", "aea", "eqdc", "laea", "stere", "sinu", "merc", "eqc", "moll",
+    "eqearth", "cea", "wintri", "robin", "aeqd", "ortho", "eck4", "natearth",
+    "gnom", "hammer", "mill", "vandg", "igh",
+))
+_TOWGS84_SLOT = {"tmerc": 8, "cass": 7, "poly": 7, "krovak": 10, "somerc": 8, "sterea": 8, "omerc": 11}
+
+
+def _same(c):
+    return c
+
+
+def _projection(k):
+    """(inverse, forward) coordinate functions of a parsed CRS ``k``."""
+    fam = k[0]
+    if fam == "longlat":
+        return _same, _same
+    if fam == "webmerc":
+        return (lambda c: _reproject_coords(c, False)), (lambda c: _reproject_coords(c, True))
+    if fam in _PLAIN_FAMILIES or fam in _TOWGS84_SLOT:
+        inv, fwd = getattr(proj, fam + "_inverse"), getattr(proj, fam + "_forward")
+        n = _TOWGS84_SLOT.get(fam, len(k))
+        p, tw = k[1:n], k[n] if n < len(k) else None
+        if tw is None:
+            return (lambda c: inv(c, p)), (lambda c: fwd(c, p))
+        a, e2 = k[1], k[2]
+        return (
+            lambda c: proj.datum_to_wgs84(inv(c, p), a, e2, tw),
+            lambda c: fwd(proj.datum_from_wgs84(c, a, e2, tw), p),
+        )
+    return (lambda c: proj.utm_inverse(c, k[1], k[2])), (lambda c: proj.utm_forward(c, k[1], k[2]))
+
+
 def _coord_fn(fk, tk):
     """Coordinate-transform function for a (parsed-from, parsed-to) CRS
-    pair, routing through lon/lat as the hub. Raises ValueError for a
-    pair outside the supported registry — an unsupported *argument* is
-    an error (silent nulls lose data invisibly), unlike a null *input*
-    which stays null-in→null-out."""
-    from geomesa_hive_spark.geom import projections as proj
-
-    def to_ll(c):
-        if fk[0] == "longlat":
-            return c
-        if fk[0] == "webmerc":
-            return _reproject_coords(c, False)
-        if fk[0] == "lcc":
-            return proj.lcc_inverse(c, fk[1:])
-        if fk[0] == "aea":
-            return proj.aea_inverse(c, fk[1:])
-        if fk[0] == "eqdc":
-            return proj.eqdc_inverse(c, fk[1:])
-        if fk[0] == "laea":
-            return proj.laea_inverse(c, fk[1:])
-        if fk[0] == "stere":
-            return proj.stere_inverse(c, fk[1:])
-        if fk[0] == "sinu":
-            return proj.sinu_inverse(c, fk[1:])
-        if fk[0] == "merc":
-            return proj.merc_inverse(c, fk[1:])
-        if fk[0] == "eqc":
-            return proj.eqc_inverse(c, fk[1:])
-        if fk[0] == "moll":
-            return proj.moll_inverse(c, fk[1:])
-        if fk[0] == "eqearth":
-            return proj.eqearth_inverse(c, fk[1:])
-        if fk[0] == "cea":
-            return proj.cea_inverse(c, fk[1:])
-        if fk[0] == "wintri":
-            return proj.wintri_inverse(c, fk[1:])
-        if fk[0] == "robin":
-            return proj.robin_inverse(c, fk[1:])
-        if fk[0] == "aeqd":
-            return proj.aeqd_inverse(c, fk[1:])
-        if fk[0] == "ortho":
-            return proj.ortho_inverse(c, fk[1:])
-        if fk[0] == "eck4":
-            return proj.eck4_inverse(c, fk[1:])
-        if fk[0] == "natearth":
-            return proj.natearth_inverse(c, fk[1:])
-        if fk[0] == "gnom":
-            return proj.gnom_inverse(c, fk[1:])
-        if fk[0] == "hammer":
-            return proj.hammer_inverse(c, fk[1:])
-        if fk[0] == "mill":
-            return proj.mill_inverse(c, fk[1:])
-        if fk[0] == "vandg":
-            return proj.vandg_inverse(c, fk[1:])
-        if fk[0] == "igh":
-            return proj.igh_inverse(c, fk[1:])
-        if fk[0] == "tmerc":
-            a, e2 = fk[1], fk[2]
-            tw = fk[8]
-            ll = proj.tmerc_inverse(c, fk[1:8])
-            return proj.datum_to_wgs84(ll, a, e2, tw) if tw is not None else ll
-        if fk[0] == "cass":
-            a, e2 = fk[1], fk[2]
-            tw = fk[7]
-            ll = proj.cass_inverse(c, fk[1:7])
-            return proj.datum_to_wgs84(ll, a, e2, tw) if tw is not None else ll
-        if fk[0] == "poly":
-            a, e2 = fk[1], fk[2]
-            tw = fk[7]
-            ll = proj.poly_inverse(c, fk[1:7])
-            return proj.datum_to_wgs84(ll, a, e2, tw) if tw is not None else ll
-        if fk[0] == "krovak":
-            a, e2 = fk[1], fk[2]
-            tw = fk[10]
-            ll = proj.krovak_inverse(c, fk[1:10])
-            return proj.datum_to_wgs84(ll, a, e2, tw) if tw is not None else ll
-        if fk[0] == "somerc":
-            a, e2 = fk[1], fk[2]
-            tw = fk[8]
-            ll = proj.somerc_inverse(c, fk[1:8])
-            return proj.datum_to_wgs84(ll, a, e2, tw) if tw is not None else ll
-        if fk[0] == "sterea":
-            a, e2 = fk[1], fk[2]
-            tw = fk[8]
-            ll = proj.sterea_inverse(c, fk[1:8])
-            return proj.datum_to_wgs84(ll, a, e2, tw) if tw is not None else ll
-        if fk[0] == "omerc":
-            a, e2 = fk[1], fk[2]
-            tw = fk[11]
-            ll = proj.omerc_inverse(c, fk[1:11])
-            return proj.datum_to_wgs84(ll, a, e2, tw) if tw is not None else ll
-        return proj.utm_inverse(c, fk[1], fk[2])
-
-    def from_ll(c):
-        if tk[0] == "longlat":
-            return c
-        if tk[0] == "webmerc":
-            return _reproject_coords(c, True)
-        if tk[0] == "lcc":
-            return proj.lcc_forward(c, tk[1:])
-        if tk[0] == "aea":
-            return proj.aea_forward(c, tk[1:])
-        if tk[0] == "eqdc":
-            return proj.eqdc_forward(c, tk[1:])
-        if tk[0] == "laea":
-            return proj.laea_forward(c, tk[1:])
-        if tk[0] == "stere":
-            return proj.stere_forward(c, tk[1:])
-        if tk[0] == "sinu":
-            return proj.sinu_forward(c, tk[1:])
-        if tk[0] == "merc":
-            return proj.merc_forward(c, tk[1:])
-        if tk[0] == "eqc":
-            return proj.eqc_forward(c, tk[1:])
-        if tk[0] == "moll":
-            return proj.moll_forward(c, tk[1:])
-        if tk[0] == "eqearth":
-            return proj.eqearth_forward(c, tk[1:])
-        if tk[0] == "cea":
-            return proj.cea_forward(c, tk[1:])
-        if tk[0] == "wintri":
-            return proj.wintri_forward(c, tk[1:])
-        if tk[0] == "robin":
-            return proj.robin_forward(c, tk[1:])
-        if tk[0] == "aeqd":
-            return proj.aeqd_forward(c, tk[1:])
-        if tk[0] == "ortho":
-            return proj.ortho_forward(c, tk[1:])
-        if tk[0] == "eck4":
-            return proj.eck4_forward(c, tk[1:])
-        if tk[0] == "natearth":
-            return proj.natearth_forward(c, tk[1:])
-        if tk[0] == "gnom":
-            return proj.gnom_forward(c, tk[1:])
-        if tk[0] == "hammer":
-            return proj.hammer_forward(c, tk[1:])
-        if tk[0] == "mill":
-            return proj.mill_forward(c, tk[1:])
-        if tk[0] == "vandg":
-            return proj.vandg_forward(c, tk[1:])
-        if tk[0] == "igh":
-            return proj.igh_forward(c, tk[1:])
-        if tk[0] == "tmerc":
-            a, e2 = tk[1], tk[2]
-            tw = tk[8]
-            ll = proj.datum_from_wgs84(c, a, e2, tw) if tw is not None else c
-            return proj.tmerc_forward(ll, tk[1:8])
-        if tk[0] == "cass":
-            a, e2 = tk[1], tk[2]
-            tw = tk[7]
-            ll = proj.datum_from_wgs84(c, a, e2, tw) if tw is not None else c
-            return proj.cass_forward(ll, tk[1:7])
-        if tk[0] == "poly":
-            a, e2 = tk[1], tk[2]
-            tw = tk[7]
-            ll = proj.datum_from_wgs84(c, a, e2, tw) if tw is not None else c
-            return proj.poly_forward(ll, tk[1:7])
-        if tk[0] == "krovak":
-            a, e2 = tk[1], tk[2]
-            tw = tk[10]
-            ll = proj.datum_from_wgs84(c, a, e2, tw) if tw is not None else c
-            return proj.krovak_forward(ll, tk[1:10])
-        if tk[0] == "somerc":
-            a, e2 = tk[1], tk[2]
-            tw = tk[8]
-            ll = proj.datum_from_wgs84(c, a, e2, tw) if tw is not None else c
-            return proj.somerc_forward(ll, tk[1:8])
-        if tk[0] == "sterea":
-            a, e2 = tk[1], tk[2]
-            tw = tk[8]
-            ll = proj.datum_from_wgs84(c, a, e2, tw) if tw is not None else c
-            return proj.sterea_forward(ll, tk[1:8])
-        if tk[0] == "omerc":
-            a, e2 = tk[1], tk[2]
-            tw = tk[11]
-            ll = proj.datum_from_wgs84(c, a, e2, tw) if tw is not None else c
-            return proj.omerc_forward(ll, tk[1:11])
-        return proj.utm_forward(c, tk[1], tk[2])
-
+    pair, routing through lon/lat as the hub."""
     if fk == tk:
-        return lambda c: c
+        return _same
+    to_ll, from_ll = _projection(fk)[0], _projection(tk)[1]
     return lambda c: from_ll(to_ll(c))
 
 
-def _geom_reproject(s: pd.Series, f: pd.Series, t: pd.Series) -> pd.Series:
-    from geomesa_hive_spark.geom.projections import parse_crs
-
-    parse = parse_cache()
-    out = []
-    fn_cache: dict[tuple[str, str], object] = {}
-    for b, fc, tc in zip(s, f, t):
-        g = parse(b)
-        if g is None or fc is None or tc is None:
-            out.append(None)
-            continue
-        key = (fc, tc)
-        fn = fn_cache.get(key)
-        if fn is None:
-            fn = _coord_fn(parse_crs(fc), parse_crs(tc))  # raises if unsupported
-            fn_cache[key] = fn
-        out.append(to_wkb(_transform_geom(g, fn)))
-    return _series(out)
+@functools.lru_cache(maxsize=64)
+def _crs_pair_fn(fc: str, tc: str):
+    """Raises ValueError for a CRS outside the supported registry — an
+    unsupported *argument* is an error (silent nulls lose data
+    invisibly), unlike a null *input*, which stays null-in→null-out."""
+    return _coord_fn(proj.parse_crs(fc), proj.parse_crs(tc))
 
 
-_reg("st_geomreproject", pandas_udf(_geom_reproject, T.BinaryType()))
-
-
-def _bounds_of(vals) -> np.ndarray:
-    fp = wkb_array_to_points(vals)
-    if fp is not None:
-        x, y = fp
-        return np.column_stack([x, y, x, y])
-    parse = parse_cache()
-    rows = []
-    for b in vals:
-        g = parse(b)
-        if g is None or g.is_empty:
-            rows.append((np.nan, np.nan, np.nan, np.nan))
-        else:
-            rows.append(g.bounds)
-    return np.asarray(rows, dtype=np.float64)
+_reg(
+    "st_geomreproject",
+    st_udf(lambda g, fc, tc: _transform_geom(g, _crs_pair_fn(fc, tc)), [GEOM, TEXT, TEXT], BIN),
+)
 
 
 def _z2_latlon(s: pd.Series) -> pd.DataFrame:
@@ -1509,7 +1071,8 @@ def _z2_latlon(s: pd.Series) -> pd.DataFrame:
     return res
 
 
-_reg("st_z2latlon", pandas_udf(_z2_latlon, Z2_TYPE))
+# hand-written: the struct result is built from one bounds array
+_reg("st_z2latlon", pandas_udf(_z2_latlon, Z2_TYPE), GEOM)
 
 
 def _partition_centroid(
@@ -1560,4 +1123,5 @@ def _partition_centroid(
     return out
 
 
-_reg("st_partitioncentroid", pandas_udf(_partition_centroid, T.LongType()))
+# hand-written: the zoom and trailing options are one scalar per batch
+_reg("st_partitioncentroid", pandas_udf(_partition_centroid, T.LongType()), GEOM, NUM)

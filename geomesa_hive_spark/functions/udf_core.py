@@ -1,19 +1,27 @@
-"""Builders that turn kernel functions into Arrow-batched pandas UDFs.
+"""One builder that turns a per-row kernel into an Arrow-batched pandas UDF.
 
-Replaces the reference's typeclass UDF-derivation machinery
-(``core/src/main/scala/com/azavea/hiveless/HUDF.scala:25-40``) with the
-idiomatic PySpark equivalent. Shared semantics reproduced here:
+The PySpark form of the reference's typeclass UDF derivation
+(``core/src/main/scala/com/azavea/hiveless/HUDF.scala:25-40``). A function
+is declared as its kernel callable, its argument kinds and its Spark
+return type; :func:`st_udf` derives the rest, once for every ST_* name:
 
-- **null in ⇒ null out** for every argument (reference
-  ``HUDF.scala:31-39`` catches ``NullArgument`` → SQL NULL);
-- **numeric coercion** (int/decimal arguments accepted where doubles are
-  expected — ``HDeserializer.scala:150-186``) via pandas ``astype``;
-- per-batch **parse cache** so a literal geometry argument (arriving as a
-  constant column) is deserialized once per batch, not once per row.
+- **decoding by kind**: a ``GEOM`` argument is WKB, decoded once per
+  distinct value in a batch (:func:`parse_cache`, so a literal geometry
+  parses once per batch, not once per row); a ``NUM`` argument is widened
+  from int/decimal/double to float64 (``HDeserializer.scala:150-186``),
+  where NaN reads as NULL; ``TEXT`` and ``BYTES`` arguments reach the
+  kernel as they arrive;
+- **null in ⇒ null out**: a NULL in any argument gives NULL without
+  calling the kernel (``HUDF.scala:31-39``);
+- **the result**: a ``Geometry`` is encoded to WKB, ``None`` is NULL and
+  any other value passes through;
+- **an optional all-points path**: when every geometry argument of a
+  batch is plain 2-D point WKB, ``points(x0, y0, x1, y1, ...)`` runs on
+  the coordinate arrays (one ``frombuffer``, ``wkb.wkb_array_to_points``)
+  and a NaN in its float result is NULL.
 
-Vectorized fast paths: when a geometry column is all 2-D point WKB the
-batch is decoded with one ``frombuffer`` (``wkb.wkb_array_to_points``)
-and predicates/measures run as numpy array ops — the 100-TB hot path.
+Errors are the kernel's: a parser that maps malformed input to NULL does
+so inside its kernel, and a kernel that raises fails the batch.
 """
 
 from __future__ import annotations
@@ -23,29 +31,16 @@ from collections.abc import Callable
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from geomesa_hive_spark.geom import algorithms as alg
-from geomesa_hive_spark.geom.core import Geometry, Point
-from geomesa_hive_spark.geom.wkb import (
-    from_wkb,
-    points_to_wkb_array,
-    to_wkb,
-    wkb_array_to_points,
-)
+from geomesa_hive_spark.geom.core import Geometry
+from geomesa_hive_spark.geom.wkb import from_wkb, to_wkb, wkb_array_to_points
 
-__all__ = [
-    "parse_cache",
-    "geoms_of",
-    "wkbs_of",
-    "g2g_udf",
-    "g2scalar_udf",
-    "gg2scalar_udf",
-    "predicate_udf",
-    "numeric_series",
-]
+__all__ = ["GEOM", "NUM", "TEXT", "BYTES", "st_udf", "parse_cache", "numeric_series"]
+
+# argument kinds; TEXT and BYTES decode alike and differ only in the SQL
+# type a caller passes
+GEOM, NUM, TEXT, BYTES = "geom", "num", "text", "bytes"
 
 
 def parse_cache() -> Callable[[bytes | None], Geometry | None]:
@@ -66,18 +61,6 @@ def parse_cache() -> Callable[[bytes | None], Geometry | None]:
     return parse
 
 
-def geoms_of(s: pd.Series) -> list[Geometry | None]:
-    parse = parse_cache()
-    return [parse(b) for b in s]
-
-
-def wkbs_of(geoms) -> pd.Series:
-    return pd.Series(
-        [None if g is None or (hasattr(g, "is_empty") and g is None) else to_wkb(g) for g in geoms],
-        dtype=object,
-    )
-
-
 def numeric_series(s: pd.Series) -> np.ndarray:
     """Coerce int/decimal/float input to float64 (reference's numeric
     widening, ``HDeserializer.scala:150-186``); None → NaN."""
@@ -86,112 +69,62 @@ def numeric_series(s: pd.Series) -> np.ndarray:
     return s.to_numpy(dtype=np.float64, na_value=np.nan)
 
 
-# ---------------------------------------------------------------------------
-# UDF builders
-# ---------------------------------------------------------------------------
+def _decode(kind: str, col: pd.Series, parse):
+    """One argument column as kernel values, NULL as None. Geometries
+    decode lazily, so the rows parse and run in row order and a batch
+    fails on its first bad row, whichever argument holds it."""
+    if kind == GEOM:
+        return map(parse, col)
+    if kind == NUM:
+        a = numeric_series(col)
+        vals = a.tolist()
+        for i in np.flatnonzero(np.isnan(a)):
+            vals[i] = None
+        return vals
+    return col.tolist()
 
 
-def g2g_udf(fn: Callable[[Geometry], Geometry | None]):
-    """Geometry → Geometry (WKB→WKB) with null propagation."""
-
-    def impl(s: pd.Series) -> pd.Series:
-        parse = parse_cache()
-        out = []
-        for b in s:
-            g = parse(b)
-            if g is None:
-                out.append(None)
-                continue
-            r = fn(g)
-            out.append(None if r is None else to_wkb(r))
-        return pd.Series(out, dtype=object)
-
-    return pandas_udf(impl, T.BinaryType())
+def _encode(r):
+    return to_wkb(r) if isinstance(r, Geometry) else r
 
 
-def g2scalar_udf(fn, return_type, point_fast: Callable[[np.ndarray, np.ndarray], np.ndarray] | None = None):
-    """Geometry → scalar. ``point_fast(x, y)`` handles an all-points batch
-    vectorized (NaN slots = null)."""
-
-    def impl(s: pd.Series) -> pd.Series:
-        if point_fast is not None:
-            fp = wkb_array_to_points(s.to_numpy(dtype=object))
-            if fp is not None:
-                x, y = fp
-                vals = point_fast(x, y)
-                res = pd.Series(vals)
-                return res.where(~pd.isna(pd.Series(x)), None)
-        parse = parse_cache()
-        out = []
-        for b in s:
-            g = parse(b)
-            out.append(None if g is None else fn(g))
-        return pd.Series(out, dtype=object)
-
-    return pandas_udf(impl, return_type)
-
-
-def gg2scalar_udf(fn, return_type):
-    """(Geometry, Geometry) → scalar with null propagation."""
-
-    def impl(a: pd.Series, b: pd.Series) -> pd.Series:
-        parse = parse_cache()
-        out = []
-        for ba, bb in zip(a, b):
-            ga, gb = parse(ba), parse(bb)
-            out.append(None if ga is None or gb is None else fn(ga, gb))
-        return pd.Series(out, dtype=object)
-
-    return pandas_udf(impl, return_type)
-
-
-def predicate_udf(fn, vec_points_vs_const: Callable[[np.ndarray, np.ndarray, Geometry], np.ndarray] | None = None):
-    """(Geometry, Geometry) → Boolean.
-
-    Fast path: if one side is a batch of plain point WKB and the other is
-    a single distinct geometry (a literal), run the vectorized
-    points-vs-geometry kernel instead of per-row DE-9IM.
-    """
-
-    def impl(a: pd.Series, b: pd.Series) -> pd.Series:
-        av = a.to_numpy(dtype=object)
-        bv = b.to_numpy(dtype=object)
-        if vec_points_vs_const is not None:
-            res = _try_vec(av, bv, swap=False)
-            if res is None:
-                res = _try_vec(bv, av, swap=True)
-            if res is not None:
-                return res
-        parse = parse_cache()
-        out = []
-        for ba, bb in zip(av, bv):
-            ga, gb = parse(ba), parse(bb)
-            out.append(None if ga is None or gb is None else bool(fn(ga, gb)))
-        return pd.Series(out, dtype=object)
-
-    def _try_vec(pts_side, const_side, swap):
-        # constant side: all non-null values identical
-        first = None
-        for v in const_side:
-            if v is not None:
-                if first is None:
-                    first = bytes(v)
-                elif bytes(v) != first:
-                    return None
-        if first is None:
-            return pd.Series([None] * len(pts_side), dtype=object)
-        fp = wkb_array_to_points(pts_side)
+def _points_xy(cols) -> list[np.ndarray] | None:
+    """``[x0, y0, x1, y1, ...]`` when every column is plain point WKB
+    (NaN at a NULL), else None."""
+    xy: list[np.ndarray] = []
+    for c in cols:
+        fp = wkb_array_to_points(c.to_numpy(dtype=object))
         if fp is None:
             return None
-        x, y = fp
-        const_g = from_wkb(first)
-        vals = vec_points_vs_const(x, y, const_g, swap)
-        out = pd.Series(vals, dtype=object)
-        null_mask = pd.isna(x)
-        for i, v in enumerate(const_side):
-            if v is None:
-                null_mask[i] = True
-        out[null_mask] = None
-        return out
+        xy.extend(fp)
+    return xy
 
-    return pandas_udf(impl, T.BooleanType())
+
+def st_udf(kernel: Callable, kinds, return_type, points: Callable | None = None):
+    """The pandas UDF of ``kernel(*row)`` over arguments of ``kinds``.
+
+    ``points``, allowed only when every kind is ``GEOM``, is the
+    vectorized form of the kernel on all-point batches. The UDF carries
+    its kinds as ``.kinds``."""
+    kinds = tuple(kinds)
+    if points is not None and any(k != GEOM for k in kinds):
+        raise ValueError("the all-points path takes geometry arguments only")
+
+    def impl(*cols: pd.Series) -> pd.Series:
+        if len(cols) != len(kinds):
+            raise TypeError(f"{kernel.__name__} takes {len(kinds)} arguments, got {len(cols)}")
+        if points is not None:
+            xy = _points_xy(cols)
+            if xy is not None:
+                return pd.Series(np.asarray(points(*xy), dtype=np.float64))
+        parse = parse_cache()
+        args = [_decode(k, c, parse) for k, c in zip(kinds, cols)]
+        if len(args) == 1:
+            out = [None if v is None else _encode(kernel(v)) for v in args[0]]
+        else:
+            out = [None if None in row else _encode(kernel(*row)) for row in zip(*args)]
+        return pd.Series(out, dtype=object)
+
+    udf = pandas_udf(impl, return_type)
+    udf.kinds = kinds
+    return udf

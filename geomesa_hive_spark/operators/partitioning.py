@@ -13,7 +13,7 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from geomesa_hive_spark.functions.st import SPEC
@@ -37,13 +37,20 @@ def add_z2_columns(
     geom = F.col(geom_col)
     out = df.withColumn("z2", SPEC["st_partitioncentroid"](geom, F.lit(zoom)))
     if bbox:
-        # Spark's CollapseProject counts a Python UDF over plain columns as
-        # cheap and inlines it into a one-argument Python UDF that reads its
-        # result, where the two chain and the inner one runs a second time
-        # per row (``st_geomFromWKT(wkt) AS geom`` would parse each WKT
-        # twice). Behind the CASE the extent UDF reads the evaluated column.
-        out = out.withColumn("bbox", SPEC["st_extentfromgeom"](F.when(geom.isNotNull(), geom)))
+        out = out.withColumn("bbox", extent_of(geom))
     return out
+
+
+def extent_of(geom: Column) -> Column:
+    """``st_extentFromGeom(geom)`` for a ``geom`` column that may itself be
+    a geometry UDF's output.
+
+    Spark's CollapseProject counts a Python UDF over plain columns as
+    cheap and inlines it into a one-argument Python UDF that reads its
+    result, where the two chain and the inner one runs a second time per
+    row (``st_geomFromWKT(wkt) AS geom`` would parse each WKT twice).
+    Behind the CASE the extent UDF reads the evaluated column."""
+    return SPEC["st_extentfromgeom"](F.when(geom.isNotNull(), geom))
 
 
 @contextmanager

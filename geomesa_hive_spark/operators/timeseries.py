@@ -158,178 +158,3 @@ def cohort_retention(
         .groupBy("cohort", "offset")
         .agg(F.count("*").cast("long").alias("n_keys"))
     )
-
-
-def seasonal_decompose(
-    events: DataFrame,
-    key_col: str,
-    value_col: str,
-    ts_col: str = "ts",
-    half_window: int = 12,
-) -> DataFrame:
-    """Classical additive seasonal decomposition of a keyed hourly
-    series: ``value = trend + seasonal + residual`` with a centered
-    moving-average trend and hour-of-day seasonal means — the
-    moving-average decomposition behind STL's initialization, in an
-    integer-exact, SQL-replayable form.
-
-    Spec (every step replays in the oracle):
-    - hourly series: ``v_cents = Σ floor(value·100 + 0.5)`` per
-      (key, hour) — BIGINT, so the series itself is exact;
-    - trend at a point = mean of the (2·half_window+1) NEAREST PRESENT
-      rows (ROWS window, full windows only — edges get NULL trend);
-      computed as one BIGINT window sum / a folded double literal;
-    - seasonal = per (key, hour-of-day) mean of the detrended values,
-      with the detrended value carried as the EXACT integer
-      ``v_cents·W − window_sum`` (a double detrended sum would be
-      partition-order-dependent and break hash parity) — one BIGINT
-      aggregate, one double division;
-    - residual = v_cents − trend − seasonal (NULL at the edges).
-
-    Scale shape: one groupBy to the hourly grain (map-side combined),
-    one window over the (small) per-key series, one ≤ keys·24-row
-    seasonal aggregate broadcast back. The raw events are scanned
-    once; everything after is series-sized, not event-sized."""
-    from pyspark.sql import Window
-
-    W = 2 * int(half_window) + 1
-    hourly = (
-        events.groupBy(
-            F.col(key_col).alias("key"),
-            F.date_trunc("hour", F.col(ts_col)).alias("hour_ts"),
-        )
-        .agg(
-            F.sum(F.floor(F.col(value_col) * 100 + F.lit(0.5)))
-            .cast("long").alias("v_cents")
-        )
-    )
-    w = (
-        Window.partitionBy("key").orderBy("hour_ts")
-        .rowsBetween(-int(half_window), int(half_window))
-    )
-    sum_w = F.sum("v_cents").over(w)
-    cnt_w = F.count("v_cents").over(w)
-    base = hourly.select(
-        "key", "hour_ts", "v_cents",
-        F.hour("hour_ts").alias("hod"),
-        F.when(cnt_w == W, sum_w).alias("sum_w"),
-    )
-    # exact integer detrended: v_cents·W − sum_w (NULL at edges)
-    base = base.withColumn(
-        "du", (F.col("v_cents") * F.lit(W) - F.col("sum_w")).cast("long")
-    )
-    seas = base.groupBy("key", "hod").agg(
-        F.sum("du").cast("long").alias("s_sum"),
-        F.count("du").cast("long").alias("s_cnt"),
-    )
-    out = base.join(F.broadcast(seas), ["key", "hod"])
-    trend = F.col("sum_w").cast("double") / F.lit(float(W))
-    seasonal = F.when(
-        F.col("s_cnt") > 0,
-        F.col("s_sum").cast("double")
-        / (F.lit(float(W)) * F.col("s_cnt").cast("double")),
-    )
-    return out.select(
-        "key", "hour_ts", "hod", "v_cents",
-        trend.alias("trend"),
-        seasonal.alias("seasonal"),
-        (F.col("v_cents").cast("double") - trend - seasonal)
-        .alias("residual"),
-    )
-
-
-def autocorrelation(
-    events: DataFrame,
-    key_col: str,
-    value_col: str,
-    ts_col: str = "ts",
-    lags: tuple = (1, 24),
-) -> DataFrame:
-    """Sample autocorrelation of a keyed hourly series at the given
-    row lags — the seasonality/persistence diagnostic next to
-    :func:`seasonal_decompose` (lag 24 ≈ daily cycle on dense hourly
-    data; lags are ROW lags over the observed series, which coincide
-    with time lags when the series has no gaps).
-
-    ``r_k = Σ(x_t−x̄)(x_{t+k}−x̄) / Σ(x_t−x̄)²`` computed via the exact
-    integer algebra: the hourly series is BIGINT cents, and the five
-    per-(key, lag) sufficient statistics (Σx_t·x_{t+k}, the head/tail
-    sums over the paired range, n, Σx, Σx²) are all BIGINT sums —
-    order-independent — with the mean-centering expansion
-    ``num = Σxy − x̄·(Σhead+Σtail) + (n−k)·x̄²`` and
-    ``den = Σx² − n·x̄²`` evaluated in doubles with ONE fixed operation
-    order the oracle replays. One event scan to the hourly grain, one
-    lead() window pass per key carrying every lag at once, one
-    key-sized aggregate.
-
-    Magnitude bound: the Σx² / Σxy products multiply BIGINT cents in
-    Spark long arithmetic, which would WRAP silently on overflow while
-    the DuckDB oracle promotes — so the aggregate carries max(|x|) and
-    asserts ``n·max(|x|)² < 2^63`` (assert_true folded into x̄ so
-    Catalyst cannot prune it); out-of-range series fail loudly instead
-    of diverging cross-engine."""
-    from pyspark.sql import Window
-
-    hourly = (
-        events.groupBy(
-            F.col(key_col).alias("key"),
-            F.date_trunc("hour", F.col(ts_col)).alias("hour_ts"),
-        )
-        .agg(
-            F.sum(F.floor(F.col(value_col) * 100 + F.lit(0.5)))
-            .cast("long").alias("v")
-        )
-    )
-    w = Window.partitionBy("key").orderBy("hour_ts")
-    cols = [F.lead("v", int(k)).over(w).alias(f"lead_{k}") for k in lags]
-    base = hourly.select("key", "v", *cols)
-    aggs = [
-        F.count("*").cast("long").alias("n"),
-        F.sum("v").cast("long").alias("s"),
-        F.sum(F.col("v") * F.col("v")).cast("long").alias("sxx"),
-        F.max(F.abs(F.col("v"))).cast("double").alias("vmax"),
-    ]
-    for k in lags:
-        lk = F.col(f"lead_{k}")
-        aggs += [
-            F.sum(F.when(lk.isNotNull(), F.col("v") * lk))
-            .cast("long").alias(f"sxy_{k}"),
-            F.sum(F.when(lk.isNotNull(), F.col("v")))
-            .cast("long").alias(f"sh_{k}"),
-            F.sum(lk).cast("long").alias(f"st_{k}"),
-        ]
-    stats = base.groupBy("key").agg(*aggs)
-    # overflow guard: n·max(|v|)² must fit BIGINT or the long products
-    # above have already wrapped. assert_true yields NULL when the
-    # condition holds; adding coalesce(NULL, 0.0) into x̄ keeps the
-    # value bit-identical while making the check un-prunable.
-    ovf = F.coalesce(
-        F.assert_true(
-            F.col("vmax") * F.col("vmax") * F.col("n").cast("double")
-            < F.lit(9.2e18),
-            F.lit("autocorrelation: BIGINT overflow risk — "
-                  "n * max(|v_cents|)^2 exceeds 2^63"),
-        ),
-        F.lit(0.0),
-    )
-    xb = (F.col("s").cast("double") / F.col("n").cast("double")) + ovf
-    out = None
-    for k in lags:
-        k = int(k)
-        npairs = (F.col("n") - F.lit(k)).cast("double")
-        num = (
-            F.col(f"sxy_{k}").cast("double")
-            - xb * (F.col(f"sh_{k}") + F.col(f"st_{k}")).cast("double")
-            + npairs * xb * xb
-        )
-        den = (
-            F.col("sxx").cast("double")
-            - F.col("n").cast("double") * xb * xb
-        )
-        row = stats.select(
-            "key", F.lit(k).alias("lag"), "n",
-            F.when((F.col("n") > k) & (den != 0.0), num / den)
-            .alias("acf"),
-        )
-        out = row if out is None else out.unionByName(row)
-    return out

@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geomesa_hive_spark.functions import api as ST
-from geomesa_hive_spark.operators.partitioning import write_spatially_partitioned
+from geomesa_hive_spark.operators.partitioning import extent_of, write_spatially_partitioned
+from geomesa_hive_spark.operators.pushdown import intersects_pushdown
 
 __all__ = [
     "read_csv_wkt",
@@ -47,7 +48,7 @@ def read_csv_wkt(
     df = spark.read.option("header", str(header).lower()).options(**options).csv(path)
     out = df.withColumn(geom_col, ST.st_geomfromwkt(F.col(wkt_col)))
     if bbox_col:
-        out = out.withColumn(bbox_col, ST.st_extentfromgeom(F.col(geom_col)))
+        out = out.withColumn(bbox_col, extent_of(F.col(geom_col)))
     return out
 
 
@@ -66,7 +67,7 @@ def read_geojson_lines(
     df = spark.read.text(path).withColumnRenamed("value", "json")
     out = df.withColumn(geom_col, ST.st_geomfromgeojson(F.col("json")))
     if bbox_col:
-        out = out.withColumn(bbox_col, ST.st_extentfromgeom(F.col(geom_col)))
+        out = out.withColumn(bbox_col, extent_of(F.col(geom_col)))
     return out
 
 
@@ -80,29 +81,27 @@ def read_spatial_parquet(
 ) -> DataFrame:
     """Parquet scan with an optional spatial window.
 
-    When ``bbox`` is given, emits the tight native bbox conjunction on the
-    extent struct first (pushed to Parquet row-group stats — the observable
-    behavior of the reference's STIntersectsRule, SURVEY.md §4.1), then the
-    exact ``st_intersects`` UDF on the survivors when ``exact`` and a
-    geometry column exists. This is exactly the coarse-then-exact filter
-    shape that keeps a 100 TB window query from touching cold row groups.
+    When ``bbox`` is given, the window goes through
+    :func:`operators.pushdown.intersects_pushdown`: the tight native bbox
+    conjunction on the extent struct (pushed to Parquet row-group stats —
+    the observable behavior of the reference's STIntersectsRule, SURVEY.md
+    §4.1), then the exact ``st_intersects`` against a WKB window literal
+    on the survivors when ``exact`` and a geometry column exists. A file
+    with a geometry column and no extent column takes the exact predicate
+    even when ``exact`` is False (there is nothing coarser to filter on),
+    and a file with neither column raises ``ValueError``.
     """
     df = spark.read.parquet(path)
     if bbox is None:
         return df
-    xmin, ymin, xmax, ymax = bbox
     cols = set(df.columns)
-    if bbox_col in cols:
-        df = df.filter(ST.extent_intersects_bounds(bbox_col, xmin, ymin, xmax, ymax))
-    if exact and geom_col and geom_col in cols:
-        window_wkt = (
-            f"POLYGON (({xmin} {ymin}, {xmax} {ymin}, {xmax} {ymax}, "
-            f"{xmin} {ymax}, {xmin} {ymin}))"
-        )
-        df = df.filter(
-            ST.st_intersects(F.col(geom_col), ST.st_geomfromwkt(F.lit(window_wkt)))
-        )
-    return df
+    return intersects_pushdown(
+        df,
+        tuple(bbox),
+        geom_col=geom_col if geom_col in cols else None,
+        bbox_col=bbox_col if bbox_col in cols else None,
+        exact=exact,
+    )
 
 
 def write_spatial_parquet(

@@ -55,6 +55,66 @@ def test_spatial_parquet_window_read(spark, tmp_path):
     assert "PushedFilters: [" in plan and "xmin" in plan
 
 
+def test_readers_parse_each_geometry_once(spark, tmp_path):
+    """The readers' bbox reads the evaluated ``geom`` column: a counting
+    geometry UDF registered under the parser's name runs once per row
+    (Spark's CollapseProject would otherwise chain the parse into
+    ``st_extentFromGeom`` and run it twice)."""
+    from pyspark.sql.functions import pandas_udf
+
+    from geomesa_hive_spark.functions.st import SPEC
+
+    parsed = spark.sparkContext.accumulator(0)
+
+    def counted(name):
+        inner = SPEC[name].func
+
+        def parse(s: pd.Series) -> pd.Series:
+            parsed.add(len(s))
+            return inner(s)
+
+        return pandas_udf(parse, "binary")
+
+    csv = tmp_path / "g.csv"
+    csv.write_text("wkt\n" + "".join(f'"POINT ({i} {i})"\n' for i in range(5)))
+    lines = tmp_path / "g.jsonl"
+    lines.write_text("".join(f'{{"type": "Point", "coordinates": [{i}, 1]}}\n' for i in range(5)))
+    try:
+        spark.udf.register("st_geomfromwkt", counted("st_geomfromwkt"))
+        spark.udf.register("st_geomfromgeojson", counted("st_geomfromgeojson"))
+        rows = sources.read_csv_wkt(spark, str(csv)).collect()
+        assert sorted(r["bbox"]["xmin"] for r in rows) == [0, 1, 2, 3, 4]
+        assert parsed.value == 5
+        parsed.value = 0
+        rows = sources.read_geojson_lines(spark, str(lines)).collect()
+        assert sorted(r["bbox"]["xmin"] for r in rows) == [0, 1, 2, 3, 4]
+        assert parsed.value == 5
+    finally:
+        spark.udf.register("st_geomfromwkt", SPEC["st_geomfromwkt"])
+        spark.udf.register("st_geomfromgeojson", SPEC["st_geomfromgeojson"])
+
+
+def test_spatial_parquet_window_without_bbox_column(spark, tmp_path):
+    """A file with a geometry column and no extent column still filters on
+    the window when ``exact`` is False; a file with neither raises."""
+    import pytest as _pytest
+
+    geom_only = str(tmp_path / "geom_only")
+    spark.range(100).select(
+        F.col("id"),
+        ST.st_makepoint((F.col("id") % 10).cast("double"), (F.col("id") / 10).cast("double")).alias("geom"),
+    ).write.parquet(geom_only)
+    for exact in (True, False):
+        win = sources.read_spatial_parquet(spark, geom_only, bbox=(-0.5, -0.5, 3.5, 3.5), exact=exact)
+        assert {r["id"] for r in win.select("id").collect()} == {
+            i for i in range(100) if (i % 10) <= 3 and (i // 10) <= 3}
+    neither = str(tmp_path / "neither")
+    spark.range(10).write.parquet(neither)
+    with _pytest.raises(ValueError):
+        sources.read_spatial_parquet(spark, neither, bbox=(0, 0, 1, 1))
+    assert sources.read_spatial_parquet(spark, neither).count() == 10
+
+
 def test_geoparquet_roundtrip(spark, tmp_path):
     """GeoParquet 1.1 writer/reader: every file carries spec 'geo'
     footer metadata (WKB encoding, exact per-file bbox, covering

@@ -247,6 +247,8 @@ def test_reproject_unsupported_pair_raises(spark):
     assert one(spark, "st_geomReproject(NULL, 'EPSG:4326', 'EPSG:3857')") is None
 
 
+# untyped NULL literals through aliases and mixed-case spellings; the
+# sweep below covers every declared argument position with typed NULLs
 NULLARY = [
     "st_asText(NULL)",
     "st_area(NULL)",
@@ -263,6 +265,54 @@ NULLARY = [
 @pytest.mark.parametrize("expr", NULLARY)
 def test_null_in_null_out(spark, expr):
     assert one(spark, expr) is None
+
+
+def _null_sweep():
+    """One SQL case per function and argument position, generated from the
+    declared argument kinds: a typed NULL in that position (and NaN where
+    the argument is a number), a valid value everywhere else."""
+    from geomesa_hive_spark.functions.st import EXTENT, GEOMS, SPEC, SqlFunction
+    from geomesa_hive_spark.functions.udf_core import BYTES, GEOM, NUM, TEXT
+
+    value_null = {
+        GEOM: ("st_makePoint(1, 1)", "CAST(NULL AS BINARY)"),
+        NUM: ("1.0D", "CAST(NULL AS DOUBLE)"),
+        TEXT: ("'POINT (1 1)'", "CAST(NULL AS STRING)"),
+        BYTES: ("st_asBinary(st_makePoint(1, 1))", "CAST(NULL AS BINARY)"),
+        EXTENT: ("st_makeExtent(0.0D, 0.0D, 1.0D, 1.0D)",
+                 "CAST(NULL AS STRUCT<xmin: DOUBLE, ymin: DOUBLE, xmax: DOUBLE, ymax: DOUBLE>)"),
+        GEOMS: ("array(st_makePoint(0, 0), st_makePoint(1, 1))", "CAST(NULL AS ARRAY<BINARY>)"),
+    }
+    cases = []
+    for name, fn in sorted(SPEC.items()):
+        for i, kind in enumerate(fn.kinds):
+            nulls = [value_null[kind][1]]
+            # a SQL body keeps a NaN double as a value; the UDFs read it as NULL
+            if kind == NUM and not isinstance(fn, SqlFunction):
+                nulls.append("CAST('NaN' AS DOUBLE)")
+            for null in nulls:
+                args = [null if j == i else value_null[k][0] for j, k in enumerate(fn.kinds)]
+                cases.append(f"{name}({', '.join(args)})")
+    return cases
+
+
+# Known exceptions to NULL out: st_isGeomField maps NULL to FALSE, as in
+# the reference; st_extentFromGeom and st_z2LatLon give a struct of NULL
+# fields (recorded in CHANGES.md, pinned here until the lake contents move).
+_NULL_TO_FALSE = {"st_isgeomfield"}
+_NULL_TO_NULL_FIELDS = {"st_extentfromgeom", "st_z2latlon"}
+
+
+@pytest.mark.parametrize("expr", _null_sweep())
+def test_null_sweep(spark, expr):
+    got = one(spark, expr)
+    name = expr.split("(", 1)[0]
+    if name in _NULL_TO_FALSE:
+        assert got is False
+    elif name in _NULL_TO_NULL_FIELDS:
+        assert got is not None and all(v is None for v in got)
+    else:
+        assert got is None
 
 
 def test_numeric_coercion(spark):
