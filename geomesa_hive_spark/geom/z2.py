@@ -43,15 +43,14 @@ def z2_latlon_range(
     """(zmin, zmax) Z2 values of an envelope's corners in lon/lat."""
     s = float(1 << _SCALE_BITS)
 
-    def sx(lon):
-        v = np.floor((np.asarray(lon, dtype=np.float64) + 180.0) / 360.0 * s)
-        return np.clip(v, 0, s - 1).astype(np.uint64)
+    def cell(v, half):
+        v = np.floor((np.asarray(v, dtype=np.float64) + half) / (2 * half) * s)
+        # a NaN bound (NULL or empty geometry) has no cell: 0 keeps the
+        # uint64 cast defined, and the caller masks the row
+        return np.clip(np.where(np.isnan(v), 0.0, v), 0, s - 1).astype(np.uint64)
 
-    def sy(lat):
-        v = np.floor((np.asarray(lat, dtype=np.float64) + 90.0) / 180.0 * s)
-        return np.clip(v, 0, s - 1).astype(np.uint64)
-
-    return interleave2(sx(xmin), sy(ymin)), interleave2(sx(xmax), sy(ymax))
+    return (interleave2(cell(xmin, 180.0), cell(ymin, 90.0)),
+            interleave2(cell(xmax, 180.0), cell(ymax, 90.0)))
 
 
 def partition_centroid_key(

@@ -30,6 +30,7 @@ from geomesa_hive_spark.functions import api as ST
 from geomesa_hive_spark.geom import algorithms as alg
 from geomesa_hive_spark.geom import from_wkt, to_wkb
 from geomesa_hive_spark.geom.core import Geometry
+from geomesa_hive_spark.operators.native_points import point_columns, point_predicate_sql, quoted
 
 __all__ = ["intersects_pushdown", "contains_pushdown", "window_bounds"]
 
@@ -44,9 +45,17 @@ def window_bounds(window) -> tuple[float, float, float, float]:
     return float(xmin), float(ymin), float(xmax), float(ymax)
 
 
-def _exact_predicate(fn_name: str, geom_col, window) -> Column:
+def _exact_predicate(df: DataFrame, fn_name: str, geom_col, window) -> Column:
+    """``fn_name(geom_col, window)``: natively when ``df``'s field
+    metadata says ``geom_col`` holds points and its covering is in the
+    frame (:mod:`operators.native_points`), else the UDF against a WKB
+    window literal."""
     if isinstance(window, str):
         window = from_wkt(window)
+    cols = point_columns(df.schema, geom_col) if isinstance(geom_col, str) else None
+    native = cols and point_predicate_sql(fn_name, True, window, *(quoted(c) for c in cols))
+    if native:
+        return F.expr(" AND ".join(t for t in native if t))
     lit = F.lit(bytearray(to_wkb(window)))
     return F.call_function(fn_name, F.col(geom_col) if isinstance(geom_col, str) else geom_col, lit)
 
@@ -65,7 +74,10 @@ def intersects_pushdown(
     - ``geom_col`` + ``exact`` (default: True when a geometry window is
       given and geom_col present): retains the exact ST_Intersects UDF on
       the pruned rows, like the rule keeping the original condition for
-      Geometry literals.
+      Geometry literals. On a points column whose field metadata claims
+      ``["Point"]`` with its covering in ``df`` (a lake written by the Z2
+      writers), the exact test runs natively on the covering instead,
+      with the same answer and no Python (``operators/native_points.py``).
     """
     xmin, ymin, xmax, ymax = window_bounds(window)
     cond = None
@@ -74,12 +86,12 @@ def intersects_pushdown(
     if exact is None:
         exact = geom_col is not None and _window_is_geometry(window)
     if geom_col is not None and exact:
-        exact_cond = _exact_predicate("st_intersects", geom_col, _as_geom(window))
+        exact_cond = _exact_predicate(df, "st_intersects", geom_col, _as_geom(window))
         cond = exact_cond if cond is None else (cond & exact_cond)
     elif cond is None and geom_col is not None:
         # no bbox column: still cheaper to pre-filter on the vectorized
         # envelope before the exact predicate
-        cond = _exact_predicate("st_intersects", geom_col, _as_geom(window))
+        cond = _exact_predicate(df, "st_intersects", geom_col, _as_geom(window))
     if cond is None:
         raise ValueError("need geom_col or bbox_col")
     return df.filter(cond)
@@ -102,10 +114,10 @@ def contains_pushdown(
     if exact is None:
         exact = geom_col is not None and _window_is_geometry(window)
     if geom_col is not None and exact:
-        exact_cond = _exact_predicate("st_within", geom_col, _as_geom(window))
+        exact_cond = _exact_predicate(df, "st_within", geom_col, _as_geom(window))
         cond = exact_cond if cond is None else (cond & exact_cond)
     elif cond is None and geom_col is not None:
-        cond = _exact_predicate("st_within", geom_col, _as_geom(window))
+        cond = _exact_predicate(df, "st_within", geom_col, _as_geom(window))
     if cond is None:
         raise ValueError("need geom_col or bbox_col")
     return df.filter(cond)

@@ -142,9 +142,26 @@ def _boxed(df: DataFrame, geom: str, bbox: str | None, side: str) -> DataFrame:
     return df.withColumn(f"__{side}_bbox", box)
 
 
-def _exploded(df: DataFrame, box: str, side: str, cs: float) -> DataFrame:
-    """One row per grid cell of the column ``box``, as __<side>_cell."""
-    return df.withColumn(f"__{side}_cell", F.explode(F.expr(cells_sql(box, cs))))
+def exploded_sql(side: str, boxes: list[str], cs: float) -> str:
+    """The generator of one join side: one row per grid cell of the last
+    of the side's box columns ``boxes``, as ``__<side>_cell``, with every
+    box column again. The generator reads each box as ``<name>0`` and
+    emits it under ``<name>``: Spark infers ``isnotnull`` filters on the
+    boxes from the ON conjunction, and a filter on a generator's output
+    stays above it, where one on a projected box would be pushed under
+    the projection and evaluate its ``st_extentFromGeom`` a second time."""
+    fields = ", ".join(f"'{b}', {b}0" for b in boxes)
+    return (f"inline(transform({cells_sql(boxes[-1] + '0', cs)}, "
+            f"__c -> named_struct('__{side}_cell', __c, {fields})))")
+
+
+def _exploded(df: DataFrame, side: str, cs: float) -> DataFrame:
+    """One row per grid cell of the side's cell box (``__<side>_ebox``
+    when there is one, else ``__<side>_bbox``), as __<side>_cell, the
+    box columns coming out of the generator (:func:`exploded_sql`)."""
+    boxes = [b for b in (f"__{side}_bbox", f"__{side}_ebox") if b in df.columns]
+    df = df.withColumnsRenamed({b: b + "0" for b in boxes})
+    return df.select("*", F.expr(exploded_sql(side, boxes, cs))).drop(*[b + "0" for b in boxes])
 
 
 def _pair(fn: str, left_geom: str, right_geom: str) -> Column:
@@ -213,8 +230,8 @@ def spatial_join(
             "salt > 1 with broadcast_right: the broadcast path has no "
             "shuffle to skew — drop one of the two"
         )
-    a = _exploded(_boxed(left, left_geom, left_bbox, "l"), "__l_bbox", "l", cell_size)
-    b = _exploded(_boxed(right, right_geom, right_bbox, "r"), "__r_bbox", "r", cell_size)
+    a = _exploded(_boxed(left, left_geom, left_bbox, "l"), "l", cell_size)
+    b = _exploded(_boxed(right, right_geom, right_bbox, "r"), "r", cell_size)
     on = on_sql("__l", "__r", cell_size)
     if salt > 1:
         # deterministic per-row shard over ALL left columns (not just
@@ -375,8 +392,8 @@ def distance_join(
     cs = float(cell_size) if cell_size is not None else max(d, 1.0)
 
     a = _boxed(left, left_geom, left_bbox, "l")
-    a = _exploded(a.withColumn("__l_ebox", F.expr(grown_sql("__l_bbox", d))), "__l_ebox", "l", cs)
-    b = _exploded(_boxed(right, right_geom, right_bbox, "r"), "__r_bbox", "r", cs)
+    a = _exploded(a.withColumn("__l_ebox", F.expr(grown_sql("__l_bbox", d))), "l", cs)
+    b = _exploded(_boxed(right, right_geom, right_bbox, "r"), "r", cs)
     cand = a.alias("__l").join(b.alias("__r"), F.expr(on_sql("__l", "__r", cs, "__l_ebox", d)))
     return _within(cand, "st_distance", left_geom, right_geom, d, dist_col)
 
@@ -469,7 +486,7 @@ def distance_join_sphere(
         (ex1 + F.col("__off")).alias("xmax"),
         y1.alias("ymax"),
     )
-    a = _exploded(a.withColumn("__l_ebox", ebox).drop("__off"), "__l_ebox", "l", cs)
-    b = _exploded(_boxed(right, right_geom, right_bbox, "r"), "__r_bbox", "r", cs)
+    a = _exploded(a.withColumn("__l_ebox", ebox).drop("__off"), "l", cs)
+    b = _exploded(_boxed(right, right_geom, right_bbox, "r"), "r", cs)
     cand = a.alias("__l").join(b.alias("__r"), F.expr(on_sql("__l", "__r", cs, "__l_ebox")))
     return _within(cand, "st_distancesphere", left_geom, right_geom, d, dist_col)

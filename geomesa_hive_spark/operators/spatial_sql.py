@@ -75,8 +75,10 @@ from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from geomesa_hive_spark.functions.st import EXTENT_TYPE
-from geomesa_hive_spark.operators.spatial_join import cells_sql, grown_sql, on_sql
+from geomesa_hive_spark.operators.native_points import (
+    is_extent_type, point_columns, point_predicate_sql, quoted,
+)
+from geomesa_hive_spark.operators.spatial_join import exploded_sql, grown_sql, on_sql
 
 __all__ = [
     "spatial_sql", "rewrite_spatial_predicates", "rewrite_spatial_join",
@@ -251,9 +253,19 @@ def _wkt_geom(lit: str):
 # no extent and bounds that are not all finite (an empty geometry's NaN,
 # an overflowing number or d; Spark would read ``nan``/``inf`` as column
 # names) leave the call as written.
+#
+# A geometry literal against a column that holds points by its field
+# metadata (a binary geometry column whose claim is ["Point"], or its
+# covering) runs natively instead of through the UDF, for
+# st_intersects|st_within|st_contains|st_covers|st_disjoint on the
+# geometry column and st_intersects on the covering:
+# native_points.point_predicate_sql, the covering's bbox comparisons plus
+# the point test. Two such calls in one AND chain with the same test
+# (the paper's ``st_intersects(bbox, W) AND st_intersects(geom, W)``)
+# carry the test once.
 
 _PRED_CALL = re.compile(
-    r"\b(st_intersects|st_contains|st_within|st_dwithin)\s*\(", re.IGNORECASE)
+    r"\b(st_intersects|st_contains|st_within|st_dwithin|st_covers|st_disjoint)\s*\(", re.IGNORECASE)
 _ARG_COL = re.compile(rf"\s*({_IDENT})\s*", re.IGNORECASE)
 _ARG_NUM = re.compile(rf"\s*({_NUM})\s*")
 _WKT = r"st_geomfromwkt\s*\(\s*'([^']*)'\s*\)"
@@ -267,24 +279,25 @@ _LITERALS = tuple((kind, re.compile(rf"\s*{rx}\s*", re.IGNORECASE | re.DOTALL)) 
 
 
 def _literal(arg: str, masked: str):
-    """``(kind, (xmin, ymin, xmax, ymax))`` of a literal argument (its
-    text and masked text; see the table above), the bounds as SQL number
-    text; None for anything else, an unparseable WKT included."""
+    """``(kind, (xmin, ymin, xmax, ymax), geometry)`` of a literal
+    argument (its text and masked text; see the table above), the bounds
+    as SQL number text and the parsed geometry of a ``geometry`` kind
+    (else None); None for anything else, an unparseable WKT included."""
     for kind, rx in _LITERALS:
         m = rx.fullmatch(masked)
         if m is None:
             continue
         # numbers read the same on the masked text; WKT is read from ``arg``
         if kind == "box":
-            return kind, m.groups()
+            return kind, m.groups(), None
         if kind == "point":
-            return kind, m.groups() * 2            # [x,x]×[y,y]
+            return kind, m.groups() * 2, None      # [x,x]×[y,y]
         lit = _Orig(m, arg)
         if kind == "geometry":
             g = _wkt_geom(lit.group(1))
-            return None if g is None else (kind, tuple(map(repr, g.bounds)))
+            return None if g is None else (kind, tuple(map(repr, g.bounds)), g)
         inner = _literal(lit.group(1), m.group(1))
-        return (kind, inner[1]) if inner and inner[0] in ("point", "geometry") else None
+        return (kind, inner[1], None) if inner and inner[0] in ("point", "geometry") else None
     return None
 
 
@@ -329,11 +342,15 @@ def _mode(fn: str, col_first: bool) -> str:
     return "col_within_lit" if col_first else "col_contains_lit"  # st_within
 
 
-def _predicate(fn: str, args: list, call: str, is_extent):
+def _predicate(fn: str, args: list, call: str, is_extent, points_of=None):
     """The emitter: the replacement of the predicate ``call`` to ``fn``
-    (lower case) with ``args`` as (text, masked text) pairs, or None to
-    leave it as written. Decides in one place, by the table above,
-    whether the UDF is dropped or kept."""
+    (lower case) with ``args`` as (text, masked text) pairs, as
+    ``(conj, test)`` — the replacement is their AND, ``test`` None for
+    a replacement with no native point test — or None to leave it as
+    written. Decides in one place, by the table above, whether the UDF
+    is dropped or kept — and, where ``points_of(col)`` names the point
+    columns of a geometry literal's column, whether it runs natively
+    instead (``operators/native_points.py``)."""
     dwithin = fn == "st_dwithin"
     if len(args) != 2 + dwithin:
         return None
@@ -344,9 +361,15 @@ def _predicate(fn: str, args: list, call: str, is_extent):
     if col is None or lit is None or (dwithin and d is None):
         return None
     col = _Orig(col, args[c][0]).group(1)
+    kind, bounds, geom = lit
+    points = points_of(col) if points_of is not None and kind == "geometry" else None
     if is_extent is not None and is_extent(col) is False:
-        return None
-    kind, bounds = lit
+        return points and point_predicate_sql(fn, c == 0, geom, *points)
+    # an extent column that is the covering of points: intersects is the
+    # point test on its (xmin, ymin), as the UDF's all-degenerate path
+    native = points and fn == "st_intersects" and point_predicate_sql(fn, c == 0, geom, *points)
+    if native or fn in ("st_covers", "st_disjoint"):
+        return native or None
     if dwithin:
         fd = float(d.group(1))
         if kind == "extent" or fd < 0:
@@ -360,7 +383,7 @@ def _predicate(fn: str, args: list, call: str, is_extent):
     if not all(math.isfinite(float(b)) for b in bounds):
         return None
     conj = _conj(col, *bounds, mode)
-    return f"({conj} AND {call})" if keep else conj
+    return (f"({conj} AND {call})" if keep else conj), None
 
 
 def rewrite_spatial_predicates(sql: str) -> str:
@@ -373,15 +396,17 @@ def rewrite_spatial_predicates(sql: str) -> str:
     return _rewrite_predicates(sql, None)
 
 
-def _rewrite_predicates(sql: str, is_extent) -> str:
+def _rewrite_predicates(sql: str, is_extent, points_of=None) -> str:
     """The predicate rewrite. ``is_extent(col)`` tells, for a column's
     text, True (an extent struct), False (another type: the predicate is
-    left untouched) or None (unknown: rewritten as if an extent);
-    ``is_extent=None`` is the untyped rewrite. Calls are found on the
-    masked text; a call that is not rewritten is searched for calls
-    inside it."""
+    left untouched unless ``points_of`` gives it a native form) or None
+    (unknown: rewritten as if an extent); ``is_extent=None`` is the
+    untyped rewrite. ``points_of(col)`` is the ``(geometry, covering)``
+    column text of a column that holds points by its field metadata,
+    else None. Calls are found on the masked text; a call that is not
+    rewritten is searched for calls inside it."""
     masked = _mask(sql)
-    out, pos, i = [], 0, 0
+    out, pos, i, last = [], 0, 0, None
     while (m := _PRED_CALL.search(masked, i)) is not None:
         i = m.end()
         spans = _args(masked, i)
@@ -389,11 +414,36 @@ def _rewrite_predicates(sql: str, is_extent) -> str:
             continue
         end = spans[-1][1] + 1
         rep = _predicate(m.group(1).lower(), [(sql[a:b], masked[a:b]) for a, b in spans],
-                         sql[m.start():end], is_extent)
+                         sql[m.start():end], is_extent, points_of)
         if rep is not None:
-            out += [sql[pos:m.start()], rep]
+            conj, test = rep
+            if test is not None and last is not None and last[2] == test and _one_and_chain(
+                    masked, last[0], last[1], m.start(), end):
+                text = conj or "TRUE"  # the test is already a conjunct of this AND chain
+            else:
+                text = f"({conj} AND {test})" if conj and test else conj or test
+            out += [sql[pos:m.start()], text]
+            last = (m.start(), end, test) if test is not None else None
             pos = i = end
     return "".join(out + [sql[pos:]]) if out else sql
+
+
+# two calls are conjuncts of one AND chain when AND is all that separates
+# them, nothing that binds tighter than AND precedes the first (NOT, a
+# comparison, BETWEEN's AND) and nothing follows the second
+_CHAIN_LEFT = re.compile(r"(?:^|[(,]|\b(?:WHERE|ON|HAVING|WHEN|THEN|ELSE|OR|SELECT))\s*\Z", re.IGNORECASE)
+_CHAIN_GAP = re.compile(r"\s+AND\s+", re.IGNORECASE)
+_CHAIN_RIGHT = re.compile(
+    r"\s*(?:$|[),;]|(?:AND|OR|THEN|ELSE|END|WHEN|GROUP|ORDER|LIMIT|HAVING|UNION|EXCEPT|INTERSECT"
+    r"|WINDOW|SORT|CLUSTER|DISTRIBUTE)\b)", re.IGNORECASE)
+
+
+def _one_and_chain(masked: str, a0: int, a1: int, b0: int, b1: int) -> bool:
+    """True when the calls at ``[a0, a1)`` and ``[b0, b1)`` of masked text
+    are ``A AND B`` inside one AND chain, so a test both replacements
+    carry is needed once (AND is idempotent in three-valued logic)."""
+    return bool(_CHAIN_GAP.fullmatch(masked, a1, b0) and _CHAIN_LEFT.search(masked[:a0])
+                and _CHAIN_RIGHT.match(masked, b1))
 
 
 # ---------------------------------------------------------------------------
@@ -405,7 +455,7 @@ def _rewrite_predicates(sql: str, is_extent) -> str:
 # Filter(HiveGenericUDF) only, SpatialFilterPushdownRules.scala:35-38);
 # this rewrite EXTENDS the surface: a recognized geometry×geometry JOIN
 # predicate is re-expressed as the PBSM grid join, spliced in from the
-# one core in operators/spatial_join.py (cells_sql, grown_sql, on_sql:
+# one core in operators/spatial_join.py (exploded_sql, grown_sql, on_sql:
 # the same text spatial_join and distance_join run) — each side exploded
 # to the fixed-grid cells its bbox overlaps, equi-joined on cell id (a
 # plain shuffled hash join), bbox-overlap prefilter + reference-point
@@ -526,14 +576,16 @@ def _j_norm(seg: str) -> str:
 def _j_side(tbl: str, alias: str, geom: str, side: str, cs: float,
             expand: float | None = None) -> str:
     """One join side as a derived table: bbox (+d-expanded ebox for
-    dwithin) then cell explosion, aliased back to the user's alias so
-    every qualified reference in the rest of the query still resolves."""
-    b = f"__{side}_bbox"
-    inner = f"(SELECT *, st_extentFromGeom({geom}) AS {b} FROM {tbl}) __sj_{side}0"
+    dwithin) then the cell generator, which emits the boxes with the
+    cells (``exploded_sql``), aliased back to the user's alias so every
+    qualified reference in the rest of the query still resolves."""
+    boxes = [f"__{side}_bbox"]
+    inner = f"(SELECT *, st_extentFromGeom({geom}) AS __{side}_bbox0 FROM {tbl}) __sj_{side}0"
     if expand is not None:
-        inner = f"(SELECT *, {grown_sql(b, expand)} AS __{side}_ebox FROM {inner}) __sj_{side}1"
-        b = f"__{side}_ebox"
-    return f"(SELECT *, explode({cells_sql(b, cs)}) AS __{side}_cell FROM {inner}) {alias}"
+        inner = f"(SELECT *, {grown_sql(boxes[0] + '0', expand)} AS __{side}_ebox0 FROM {inner}) __sj_{side}1"
+        boxes.append(f"__{side}_ebox")
+    kept = ", ".join(b + "0" for b in boxes)
+    return f"(SELECT * EXCEPT ({kept}), {exploded_sql(side, boxes, cs)} FROM {inner}) {alias}"
 
 
 def rewrite_spatial_join(sql: str, cell_size: float = 1.0) -> str:
@@ -909,13 +961,6 @@ _COL_REF = re.compile(rf"(?:(?P<q>{_SEG})\.)?(?P<c>{_SEG})")
 _WKT_CALL = re.compile(rf"\b{_WKT}", re.IGNORECASE)
 
 
-def _is_extent_type(dt) -> bool:
-    """``dt`` is the extent struct, up to field-name case and nullability."""
-    return isinstance(dt, T.StructType) and [
-        (f.name.lower(), f.dataType) for f in dt.fields] == [
-        (f.name, f.dataType) for f in EXTENT_TYPE.fields]
-
-
 def _relations(spark, sql: str) -> list:
     """(qualifier, schema or None) of every relation named after
     FROM/JOIN in ``sql``: the alias, else the table's own name, and
@@ -946,14 +991,21 @@ def _relations(spark, sql: str) -> list:
 
 
 def _column_types(spark, sql: str):
-    """``is_extent(col)`` for :func:`_rewrite_predicates`, from the
-    schemas of :func:`_relations` (looked up on the first call only). A
-    column found only as an extent struct is True, one found only with
-    other types is False; a column of a CTE, a subquery or a relation
-    the catalog cannot resolve, or one found with both, is None."""
+    """``(is_extent, points_of)`` for :func:`_rewrite_predicates`, from
+    the schemas of :func:`_relations` (looked up on the first call
+    only). ``is_extent(col)``: a column found only as an extent struct
+    is True, one found only with other types is False; a column of a
+    CTE, a subquery or a relation the catalog cannot resolve, or one
+    found with both, is None. ``points_of(col)``: the geometry and
+    covering column text (qualified as ``col`` is) when ``col`` is found
+    in exactly one relation, every relation that could hold it is
+    resolved, and its field metadata says it holds points
+    (:func:`native_points.point_columns`); else None."""
     rels = []
 
-    def is_extent(col: str):
+    def candidates(col: str):
+        """(qualifier text, column name, [(schema or None)]) of the
+        relations that may hold ``col``; None if it is no column ref."""
         if not rels:
             rels.append(_relations(spark, sql))
         ref = _COL_REF.fullmatch(col)
@@ -961,19 +1013,34 @@ def _column_types(spark, sql: str):
             return None
         q = ref.group("q") and _j_norm(ref.group("q"))
         c = _j_norm(ref.group("c"))
+        found = [schema for qual, schema in rels[0] if q is None or q == qual]
+        return ref.group("q"), c, found
+
+    def is_extent(col: str):
+        got = candidates(col)
+        if got is None:
+            return None
+        q, c, schemas = got
         found = set()
-        for qual, schema in rels[0]:
-            if q is not None and q != qual:
-                continue
+        for schema in schemas:
             if schema is None:
                 if q is not None:
                     return None
                 continue
-            found.update(_is_extent_type(f.dataType) for f in schema.fields
+            found.update(is_extent_type(f.dataType) for f in schema.fields
                          if f.name.lower() == c)
         return found.pop() if len(found) == 1 else None
 
-    return is_extent
+    def points_of(col: str):
+        got = candidates(col)
+        if got is None or None in got[2]:
+            return None
+        q, c, schemas = got
+        holding = [s for s in schemas if any(f.name.lower() == c for f in s.fields)]
+        cols = point_columns(holding[0], c) if len(holding) == 1 else None
+        return cols and tuple(f"{q}.{quoted(n)}" if q else quoted(n) for n in cols)
+
+    return is_extent, points_of
 
 
 def _fold_wkt(sql: str) -> str:
@@ -997,7 +1064,7 @@ def _rewrite(session, sql: str) -> str:
     sql = rewrite_spatial_join(rewrite_extent_agg(rewrite_convexhull_agg(sql)))
     if not callable(getattr(session, "table", None)):
         return rewrite_spatial_predicates(sql)
-    return _fold_wkt(_rewrite_predicates(sql, _column_types(session, sql)))
+    return _fold_wkt(_rewrite_predicates(sql, *_column_types(session, sql)))
 
 
 _log = logging.getLogger(__name__)

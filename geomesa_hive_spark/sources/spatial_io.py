@@ -142,6 +142,7 @@ def write_spatial_parquet(
 # per-file bboxes tight — same argument as write_spatially_partitioned.
 
 _GEO_KEY = b"geo"
+_BOUNDS = ("xmin", "ymin", "xmax", "ymax")
 
 
 def write_geoparquet(
@@ -149,7 +150,6 @@ def write_geoparquet(
     path: str,
     geom_col: str = "geom",
     crs: dict | str | None = None,
-    geometry_types: list[str] | None = None,
     n_files: int = 16,
     zoom: int = 6,
     version: str = "1.1.0",
@@ -163,6 +163,13 @@ def write_geoparquet(
 
     ``crs`` is embedded verbatim (PROJJSON per spec; omitted = spec
     default OGC:CRS84, which matches the repo's lon/lat convention).
+    ``geometry_types`` is computed, never declared: each file's footer
+    lists the types that file holds (``[]``, the spec's "unknown", when
+    one is not a 2D or Z type), and the directory's
+    ``_common_metadata`` carries the whole table's claim for Spark
+    readers (``operators/partitioning.py:_record_lake``; files are
+    added to the directory, so the claim is the union with what it
+    held).
 
     Clustering is the shared Z2 step (``operators.partitioning``): the
     z2 key and bbox are evaluated once per row, and the session needs no
@@ -172,7 +179,7 @@ def write_geoparquet(
     import json as _json
     import os as _os
 
-    from geomesa_hive_spark.operators.partitioning import _z2_clustered, add_z2_columns
+    from geomesa_hive_spark.operators.partitioning import _z2_clustered, add_z2_columns, geometry_types
 
     if geom_col not in df.columns:
         raise ValueError(f"geometry column {geom_col!r} not in DataFrame")
@@ -187,7 +194,6 @@ def write_geoparquet(
             "under that name"
         )
     data_cols = list(df.columns)
-    gtypes = list(geometry_types) if geometry_types else []
     crs_val = crs
 
     def _write_part(it):
@@ -216,9 +222,10 @@ def write_geoparquet(
         tbl = tbl.append_column("bbox", bbox_struct)
         import math
 
+        headers = {bytes(v[:5]).hex().upper() for v in pdf[geom_col] if v is not None}
         col_meta = {
             "encoding": "WKB",
-            "geometry_types": gtypes,
+            "geometry_types": geometry_types(headers) or [],
             # a file of only NULL/empty geometries has no extent — omit
             # bbox (it's optional per spec) rather than emit NaN, which
             # is not valid JSON
@@ -260,7 +267,8 @@ def write_geoparquet(
             ]
         )
 
-    with _z2_clustered(add_z2_columns(df, geom_col, zoom=zoom), "z2", int(n_files)) as clustered:
+    with _z2_clustered(add_z2_columns(df, geom_col, zoom=zoom), "z2", int(n_files),
+                       geom_col=geom_col, path=path, mode="append") as clustered:
         summaries = clustered.select(
             *data_cols,
             F.col("bbox.xmin").alias("__bx0"),
@@ -309,11 +317,14 @@ def read_geoparquet(
 ) -> DataFrame:
     """Read GeoParquet: Spark's native parquet scan (unknown footer keys
     are ignored, WKB binary comes back as BinaryType — directly usable
-    by every ST_* function). With ``bbox``, the spec's declared covering
-    column drives a NATIVE min/max window conjunction first (pushed to
-    parquet row-group stats — the same coarse-then-exact shape as
-    :func:`read_spatial_parquet`), then the exact ``st_intersects`` on
-    survivors when ``exact``.
+    by every ST_* function). With ``bbox``, the window goes through
+    :func:`operators.pushdown.intersects_pushdown` with the spec's
+    declared covering column (when it is one extent struct) as the
+    native min/max window conjunction, pushed to parquet row-group
+    stats, then the exact predicate against a WKB window literal when
+    ``exact`` or when there is no such covering — natively on a points
+    table that records its ``geometry_types`` (the same path as
+    :func:`read_spatial_parquet`).
 
     ``prune_files=True`` additionally cuts the FILE LIST on the
     per-file ``geo`` bbox before Spark plans — the coarse cut that
@@ -357,21 +368,9 @@ def read_geoparquet(
         df = spark.read.parquet(path)
     if bbox is None:
         return df
-    xmin, ymin, xmax, ymax = bbox
-    covering = meta["columns"][gcol].get("covering", {}).get("bbox")
-    if covering:
-        bx0, by0 = ".".join(covering["xmin"]), ".".join(covering["ymin"])
-        bx1, by1 = ".".join(covering["xmax"]), ".".join(covering["ymax"])
-        df = df.filter(
-            (F.col(bx0) <= F.lit(xmax)) & (F.col(bx1) >= F.lit(xmin))
-            & (F.col(by0) <= F.lit(ymax)) & (F.col(by1) >= F.lit(ymin))
-        )
-    if exact:
-        window_wkt = (
-            f"POLYGON (({xmin} {ymin}, {xmax} {ymin}, {xmax} {ymax}, "
-            f"{xmin} {ymax}, {xmin} {ymin}))"
-        )
-        df = df.filter(
-            ST.st_intersects(F.col(gcol), ST.st_geomfromwkt(F.lit(window_wkt)))
-        )
-    return df
+    # the declared covering, when it is one extent struct column
+    covering = meta["columns"][gcol].get("covering", {}).get("bbox") or {}
+    paths = [tuple(covering.get(c) or ()) for c in _BOUNDS]
+    bbox_col = paths[0][0] if paths[0] and paths == [(paths[0][0], c) for c in _BOUNDS] else None
+    return intersects_pushdown(df, tuple(bbox), geom_col=gcol,
+                               bbox_col=bbox_col if bbox_col in df.columns else None, exact=exact)

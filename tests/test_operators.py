@@ -344,6 +344,51 @@ def test_spatial_join_drops_stored_bbox_without_extent(spark):
         assert sorted(r.id for r in got.collect()) == [0], name
 
 
+def test_join_evaluates_each_side_bbox_once(spark):
+    """Each side's ``st_extentFromGeom`` runs once per input row in the
+    PBSM join, on the DataFrame and SQL surfaces and in the distance
+    join: the boxes come out of the cell generator, so the isnotnull
+    filters Spark infers from the ON conjunction stay above it instead
+    of evaluating the UDF again under the projection."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from geomesa_hive_spark.functions.registry import register_all
+    from geomesa_hive_spark.functions.st import EXTENT_TYPE, SPEC
+    from geomesa_hive_spark.operators.spatial_join import distance_join, spatial_join
+    from geomesa_hive_spark.operators.spatial_sql import spatial_sql
+
+    register_all(spark)
+    calls = spark.sparkContext.accumulator(0)
+    inner = SPEC["st_extentfromgeom"].func
+
+    def extent(s: pd.Series) -> pd.DataFrame:
+        calls.add(len(s))
+        return inner(s)
+
+    pts = spark.createDataFrame(
+        [(i, bytearray(to_wkb(from_wkt(f"POINT ({i % 10 / 2} {i // 10})")))) for i in range(60)], "id INT, geom BINARY")
+    zones = spark.createDataFrame(
+        [(1, bytearray(to_wkb(from_wkt("POLYGON ((0 0, 4 0, 4 4, 0 0))")))),
+         (2, bytearray(to_wkb(from_wkt("POLYGON ((3 3, 9 3, 9 9, 3 9, 3 3))"))))], "zid INT, zgeom BINARY")
+    pts.createOrReplaceTempView("once_pts")
+    zones.createOrReplaceTempView("once_zones")
+    runs = {
+        "api": lambda: spatial_join(pts, zones, left_geom="geom", right_geom="zgeom", exact=False),
+        "sql": lambda: spatial_sql(spark, "SELECT p.id FROM once_pts p JOIN once_zones z "
+                                          "ON ST_Intersects(p.geom, z.zgeom)"),
+        "distance": lambda: distance_join(pts, zones, 0.5, left_geom="geom", right_geom="zgeom", dist_col=None),
+    }
+    try:
+        spark.udf.register("st_extentfromgeom", pandas_udf(extent, EXTENT_TYPE))
+        for name, run in runs.items():
+            calls.value = 0
+            assert run().count() > 0
+            assert calls.value == 62, name
+    finally:
+        spark.udf.register("st_extentfromgeom", SPEC["st_extentfromgeom"])
+
+
 def test_asof_join(spark):
     from geomesa_hive_spark.operators.temporal import asof_join
     import datetime as dt

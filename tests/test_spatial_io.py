@@ -142,8 +142,7 @@ def test_geoparquet_roundtrip(spark, tmp_path):
     )
     df = base.withColumn("geom", F.call_function("st_makepoint", "x", "y"))
     path = str(tmp_path / "gpq")
-    summ = write_geoparquet(df, path, "geom", geometry_types=["Point"],
-                            n_files=8)
+    summ = write_geoparquet(df, path, "geom", n_files=8)
     assert sum(s["n_rows"] for s in summ) == n and len(summ) == 8
 
     # every file: geo metadata present, per-file bbox EXACT vs contents
@@ -153,6 +152,8 @@ def test_geoparquet_roundtrip(spark, tmp_path):
         assert geo["primary_column"] == "geom"
         gcol = geo["columns"]["geom"]
         assert gcol["encoding"] == "WKB"
+        # computed from the file's rows, not declared
+        assert gcol["geometry_types"] == ["Point"]
         assert gcol["covering"]["bbox"]["xmin"] == ["bbox", "xmin"]
         t = _pq.read_table(s["file"], columns=["x", "y"])
         xs, ys = t.column("x").to_pylist(), t.column("y").to_pylist()
@@ -162,8 +163,11 @@ def test_geoparquet_roundtrip(spark, tmp_path):
     m = geoparquet_meta(path)
     assert m["version"] == "1.1.0"
 
+    # the table's claim reaches Spark, so the window read runs natively
+    assert spark.read.parquet(path).schema["geom"].metadata["geo"]["geometry_types"] == ["Point"]
     win = (-60.005, 0.005, -10.005, 50.005)
     got = read_geoparquet(spark, path, bbox=win)
+    assert "ArrowEvalPython" not in got._jdf.queryExecution().executedPlan().toString()
     exp = df.filter((F.col("x") >= win[0]) & (F.col("x") <= win[2])
                     & (F.col("y") >= win[1]) & (F.col("y") <= win[3]))
     assert sorted(r.k for r in got.collect()) == \

@@ -1157,7 +1157,7 @@ def test_typed_rewrite_reads_column_types_from_the_catalog():
     other = T.StructType([T.StructField("bbox", T.BinaryType())])
     cat = _Catalog(pts=pts, other=other)
 
-    kinds = _column_types(cat, "WITH c AS (SELECT 1) SELECT * FROM pts p JOIN other o ON 1 = 1, c, missing")
+    kinds, _ = _column_types(cat, "WITH c AS (SELECT 1) SELECT * FROM pts p JOIN other o ON 1 = 1, c, missing")
     assert [kinds(c) for c in ("p.bbox", "p.geom", "o.bbox", "bbox", "c.bbox", "missing.x", "p.nope")] == \
         [True, False, False, None, None, None, None]
 
