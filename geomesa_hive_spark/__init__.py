@@ -21,7 +21,7 @@ filter-pushdown Catalyst rules), re-expressed Spark-first:
   density, trajectories) under ``operators/``
 - beyond-paper code still awaiting retirement: the training-data
   operators under ``pipeline/`` (dedup, similarity search, text,
-  multimodal), the Structured Streaming extension under ``streaming/``
+  sampling), the Structured Streaming extension under ``streaming/``
   and the merge-on-read lake in ``sources/{manifest,incremental,datasource}.py``.
 
 The geometry kernel is pure Python/NumPy (this environment has no

@@ -23,11 +23,13 @@ extent/extent and far more selective at 100 TB).
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from geomesa_hive_spark.functions import api as ST
-from geomesa_hive_spark.geom import algorithms as alg
 from geomesa_hive_spark.geom import from_wkt, to_wkb
 from geomesa_hive_spark.geom.core import Geometry
 from geomesa_hive_spark.operators.native_points import point_columns, point_predicate_sql, quoted
@@ -36,13 +38,18 @@ __all__ = ["intersects_pushdown", "contains_pushdown", "window_bounds"]
 
 
 def window_bounds(window) -> tuple[float, float, float, float]:
-    """Accepts WKT, a kernel Geometry, or a 4-tuple; returns (xmin,ymin,xmax,ymax)."""
+    """Accepts WKT, a kernel Geometry, or a 4-tuple; returns (xmin,ymin,xmax,ymax).
+
+    Raises ``ValueError`` on a non-finite bound (an empty window has
+    NaN bounds): Spark orders NaN above every double, so the bbox
+    comparisons would read it as +inf."""
     if isinstance(window, str):
         window = from_wkt(window)
-    if isinstance(window, Geometry):
-        return window.bounds
-    xmin, ymin, xmax, ymax = window
-    return float(xmin), float(ymin), float(xmax), float(ymax)
+    xmin, ymin, xmax, ymax = window.bounds if isinstance(window, Geometry) else window
+    bounds = float(xmin), float(ymin), float(xmax), float(ymax)
+    if not all(map(math.isfinite, bounds)):
+        raise ValueError(f"window bounds must be finite, got {bounds}")
+    return bounds
 
 
 def _exact_predicate(df: DataFrame, fn_name: str, geom_col, window) -> Column:
@@ -144,7 +151,14 @@ def _as_geom(window) -> Geometry:
 
 def _is_rectangle(g: Geometry) -> bool:
     """A polygon equal to its own envelope: the bbox test alone is exact
-    (the case where the reference drops the UDF entirely)."""
+    (the case where the reference drops the UDF entirely). Scale-free:
+    every shell vertex is an envelope corner, and the shoelace area,
+    taken from the lower-left corner so that it is exact, is the
+    envelope's (which rules out a triangle or bow-tie over the corners)."""
     if g.geom_type != "Polygon" or g.holes or g.is_empty:
         return False
-    return abs(alg.area(g) - alg.area(alg.envelope(g))) <= 1e-12 * max(1.0, alg.area(g))
+    xmin, ymin, xmax, ymax = g.bounds
+    x, y = g.shell[:, 0] - xmin, g.shell[:, 1] - ymin
+    w, h = xmax - xmin, ymax - ymin
+    corners = np.isin(x, (0.0, w)).all() and np.isin(y, (0.0, h)).all()
+    return bool(corners) and abs(np.sum(x[:-1] * y[1:] - x[1:] * y[:-1])) / 2 == w * h

@@ -1,6 +1,6 @@
 """Large-scale training-data pipeline operators (beyond the reference's
 surface, per BASELINE.json's north star): deduplication, similarity
-search, text analysis, multimodal column plumbing.
+search, text analysis, sampling.
 
 Design rule: everything that can be a native Catalyst expression IS one
 (whole-stage-codegen, no Python in the hot path); Python appears only in
@@ -9,10 +9,9 @@ signatures, simhash, hyperplane LSH)."""
 
 from geomesa_hive_spark.pipeline import (
     dedup,
-    multimodal,
     sampling,
     similarity,
     text,
 )
 
-__all__ = ["dedup", "sampling", "similarity", "text", "multimodal"]
+__all__ = ["dedup", "sampling", "similarity", "text"]

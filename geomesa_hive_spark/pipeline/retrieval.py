@@ -2,8 +2,8 @@
 ranking function (Robertson/Spärck Jones probabilistic model, the
 Lucene/Elasticsearch default), here as the training-data curation
 primitive it has become: retrieve the corpus documents most similar
-to a benchmark prompt (contamination auditing), to a seed set (DSIR-
-style targeted selection), or to a user query (eval-set mining).
+to a benchmark prompt (contamination auditing), to a seed set
+(targeted selection), or to a user query (eval-set mining).
 
 Shape — the inverted-index discipline on DataFrames:
 
@@ -15,7 +15,7 @@ Shape — the inverted-index discipline on DataFrames:
 3. Per-term document frequencies — at most |query| rows — collect and
    fold into a literal CASE; no second join against the corpus.
 4. Per-(doc, term) BM25 contributions quantize to integer MICRO-UNITS
-   before the per-doc sum (the lm.py micro-nat convention): integer
+   before the per-doc sum: integer
    sums are order-independent under any partitioning, which is what
    lets the DuckDB oracle replay scores exactly.
 5. Top-k via orderBy(score, id).limit(k) — Spark's TakeOrdered, a

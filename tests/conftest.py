@@ -11,6 +11,10 @@ def spark():
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # perfbench/tests reuse this session when run in the same process;
+        # their tracer reads every stage of a query from the status store
+        .config("spark.ui.retainedJobs", "100000")
+        .config("spark.ui.retainedStages", "100000")
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

@@ -79,6 +79,40 @@ def test_window_as_wkt_polygon_exact(spark, pts_parquet):
     assert got == expect
 
 
+@pytest.mark.parametrize("size", [1e-6, 1.0, 1e6])
+def test_geometry_window_matches_wkt_at_any_scale(spark, size):
+    """A Geometry window gives the WKT window's answer whatever its
+    size: a small triangle is not taken for its own envelope (which
+    would drop the exact predicate), and a rectangle still is."""
+    o = 10.0
+    pts = [(1, o + 0.2 * size, o + 0.2 * size), (2, o + 0.9 * size, o + 0.9 * size)]
+    rows = [(i, x, y, bytearray(to_wkb(from_wkt(f"POINT ({x!r} {y!r})")))) for i, x, y in pts]
+    df = spark.createDataFrame(rows, "id INT, x DOUBLE, y DOUBLE, geom BINARY")
+    df = df.withColumn("bbox", ST.make_extent("x", "y", "x", "y"))
+    a, b = o, o + size
+    windows = {
+        f"POLYGON (({a!r} {a!r}, {b!r} {a!r}, {a!r} {b!r}, {a!r} {a!r}))": [1],
+        f"POLYGON (({a!r} {a!r}, {b!r} {a!r}, {b!r} {b!r}, {a!r} {b!r}, {a!r} {a!r}))": [1, 2],
+    }
+    for wkt, want in windows.items():
+        for fn in (intersects_pushdown, contains_pushdown):
+            by_wkt = sorted(r.id for r in fn(df, wkt, geom_col="geom", bbox_col="bbox").collect())
+            by_geom = sorted(r.id for r in fn(df, from_wkt(wkt), geom_col="geom", bbox_col="bbox").collect())
+            assert by_geom == by_wkt == want, (fn.__name__, wkt)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_pushdown_rejects_non_finite_window(spark, pts_parquet, bad):
+    """A NaN bound would compare like +inf in Spark (every row passes),
+    so both functions refuse a non-finite window, whatever the columns."""
+    df = spark.read.parquet(pts_parquet)
+    for window in [(0.0, 0.0, bad, 1.0), (bad, 0.0, 1.0, 1.0)]:
+        for fn in (intersects_pushdown, contains_pushdown):
+            for cols in [{"bbox_col": "bbox"}, {"geom_col": "geom"}, {"geom_col": "geom", "bbox_col": "bbox"}]:
+                with pytest.raises(ValueError, match="finite"):
+                    fn(df, window, **cols)
+
+
 def test_convex_hull_agg_global(spark):
     rows = [(i, bytearray(to_wkb(from_wkt(f"POINT ({x} {y})"))))
             for i, (x, y) in enumerate([(0, 0), (10, 0), (10, 10), (0, 10), (5, 5), (2, 3)])]
@@ -267,6 +301,50 @@ def test_bucketed_join_shuffle_free(spark):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS bk_a")
         spark.sql("DROP TABLE IF EXISTS bk_b")
+
+
+def test_bucketed_join_no_exchange(spark, tmp_path):
+    """write_bucketed + bucketed_equijoin: the bucketed join plans
+    ZERO Exchange nodes while the identical un-bucketed merge join
+    shuffles; results equal the plain join exactly."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from geomesa_hive_spark.operators.join_strategies import (
+        assert_no_exchange, bucketed_equijoin, write_bucketed,
+    )
+
+    left = spark.createDataFrame(
+        [(i % 50, i, float(i)) for i in range(500)],
+        "k long, oid long, v double",
+    )
+    right = spark.createDataFrame(
+        [(i, f"seg{i % 5}") for i in range(50)], "k long, seg string"
+    )
+    write_bucketed(left, "t_bl", "k", num_buckets=8, sort_cols="k",
+                   path=str(tmp_path / "bl"))
+    write_bucketed(right, "t_br", "k", num_buckets=8, sort_cols="k",
+                   path=str(tmp_path / "br"))
+    try:
+        j = bucketed_equijoin(spark, "t_bl", "t_br", "k")
+        got = (
+            j.groupBy("seg").agg(F.count("*").alias("cnt"),
+                                 F.sum("v").alias("sv"))
+            .collect()
+        )
+        exp = (
+            left.join(right, "k")
+            .groupBy("seg").agg(F.count("*").alias("cnt"),
+                                F.sum("v").alias("sv"))
+            .collect()
+        )
+        assert sorted(map(tuple, got)) == sorted(map(tuple, exp))
+        # control: the same hinted join WITHOUT bucketing must shuffle
+        with _pytest.raises(AssertionError, match="Exchange"):
+            assert_no_exchange(left.hint("merge").join(right, "k"))
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_bl")
+        spark.sql("DROP TABLE IF EXISTS t_br")
 
 
 def test_salted_join_matches_plain(spark):

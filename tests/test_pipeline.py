@@ -1,11 +1,11 @@
-"""Pipeline operator tests: dedup family, ANN search, text analysis,
-multimodal plumbing — toy data with hand-checkable answers."""
+"""Pipeline operator tests: dedup family, ANN search, text analysis —
+toy data with hand-checkable answers."""
 
 import pytest
 
 from pyspark.sql import functions as F
 
-from geomesa_hive_spark.pipeline import dedup, multimodal, similarity, text
+from geomesa_hive_spark.pipeline import dedup, similarity, text
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog"),
@@ -237,94 +237,6 @@ def test_winnowing_fingerprints(spark):
     assert out[5] == set()                            # shorter than k
 
 
-def test_multimodal_plumbing(spark):
-    df = spark.createDataFrame([(1, bytearray(b"\x00" * 64)), (2, bytearray(b"ab" * 100))],
-                               "doc_id LONG, media BINARY")
-    st = multimodal.media_stats(df, "media")
-    sizes = {r.doc_id: r.media_size for r in st.collect()}
-    assert sizes == {1: 64, 2: 200}
-    dec = multimodal.decode_image_batch(df, "media")
-    rows = {r.doc_id: r for r in dec.collect()}
-    assert rows[1].width > 0 and rows[1].height > 0  # deterministic fake decode
-    feat = multimodal.extract_image_features(dec, "media", dim=8)
-    frow = feat.collect()[0]
-    assert len(frow.features) == 8
-    rs = multimodal.resize_images(df, "media", 8, 4)
-    row = rs.filter(F.col("media").isNotNull()).first()
-    assert len(bytes(row["media"])) == 32 and row["out_width"] == 8
-    import pytest as _pt
-    with _pt.raises(Exception):
-        multimodal.resize_images(df, "media", 8, 4, strict=True).collect()
-
-    frames = multimodal.sample_video_frames(df, "media", "doc_id", n_frames=3)
-    assert frames.count() == 6  # 3 frames per input row
-
-
-def test_parse_image_header():
-    """Real byte-level header parsing: PNG IHDR, JPEG SOF behind an APP0
-    segment (progressive SOF2), GIF, top-down (negative-height) BMP."""
-    from geomesa_hive_spark.pipeline.multimodal import parse_image_header
-
-    png = (b"\x89PNG\r\n\x1a\n" + (13).to_bytes(4, "big") + b"IHDR"
-           + (640).to_bytes(4, "big") + (480).to_bytes(4, "big")
-           + b"\x08\x06\x00\x00\x00" + b"\x00" * 4)
-    assert parse_image_header(png) == ("image/png", 640, 480)
-    jpeg = (b"\xff\xd8"
-            + b"\xff\xe0" + (16).to_bytes(2, "big") + b"JFIF\x00" + b"\x00" * 9
-            + b"\xff\xc2" + (17).to_bytes(2, "big") + b"\x08"
-            + (300).to_bytes(2, "big") + (500).to_bytes(2, "big") + b"\x03")
-    assert parse_image_header(jpeg) == ("image/jpeg", 500, 300)
-    gif = b"GIF89a" + (320).to_bytes(2, "little") + (200).to_bytes(2, "little")
-    assert parse_image_header(gif) == ("image/gif", 320, 200)
-    bmp = (b"BM" + b"\x00" * 16 + (123).to_bytes(4, "little")
-           + (-77).to_bytes(4, "little", signed=True))
-    assert parse_image_header(bmp) == ("image/bmp", 123, 77)
-    assert parse_image_header(b"not an image at all") is None
-    assert parse_image_header(None) is None
-
-
-def test_parse_image_header_never_crashes_on_fuzz():
-    """Arbitrary bytes — including truncated/corrupted container
-    prefixes — must return a tuple or None, never raise."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from geomesa_hive_spark.pipeline.multimodal import parse_image_header
-
-    prefixes = [b"", b"\x89PNG\r\n\x1a\n", b"\xff\xd8", b"GIF89a", b"BM"]
-
-    @settings(max_examples=300, deadline=None)
-    @given(st.sampled_from(prefixes), st.binary(min_size=0, max_size=64))
-    def fuzz(prefix, tail):
-        out = parse_image_header(prefix + tail)
-        assert out is None or (
-            isinstance(out, tuple) and len(out) == 3 and out[1] >= 0 and out[2] >= 0
-        )
-
-    fuzz()
-
-
-def test_decode_image_batch_real_headers(spark):
-    """Recognized containers get REAL parsed dims + mime; unknown bytes
-    fall back to the declared stub (null mime)."""
-    png = (b"\x89PNG\r\n\x1a\n" + (13).to_bytes(4, "big") + b"IHDR"
-           + (31).to_bytes(4, "big") + (17).to_bytes(4, "big")
-           + b"\x08\x06\x00\x00\x00" + b"\x00" * 4)
-    df = spark.createDataFrame(
-        [(1, bytearray(png)), (2, bytearray(b"random junk bytes here"))],
-        "doc_id LONG, media BINARY")
-    rows = {r.doc_id: r for r in multimodal.decode_image_batch(df, "media").collect()}
-    assert (rows[1].mime, rows[1].width, rows[1].height) == ("image/png", 31, 17)
-    assert rows[2].mime is None and rows[2].width > 0  # stub fallback
-
-
-def test_multimodal_strict_decode_raises(spark):
-    df = spark.createDataFrame([(1, bytearray(b"xx"))], "doc_id LONG, media BINARY")
-    with pytest.raises(Exception):
-        # strict mode surfaces the NotImplementedError from the stub decoder
-        multimodal.decode_image_batch(df, "media", strict=True).collect()
-
-
 def test_knn_lsh_stored_layout_prunes_partitions(spark, tmp_path):
     """The stored-bucket layout must (a) return exactly what the
     on-the-fly knn_lsh returns and (b) show the probe as PARTITION
@@ -468,31 +380,6 @@ def test_hash_split_deterministic(spark):
     assert 0.85 <= counts["train"] / 2000 <= 0.95               # ~90%
     with pytest.raises(ValueError):
         sampling.hash_split(df, "doc_id", {"a": 0.5, "b": 0.4})
-
-
-def test_perplexity_buckets(spark):
-    """CCNet bucket split: ordered buckets, near-thirds sizes, no
-    global-sort window in the plan (cutoffs broadcast back), label
-    arity check."""
-    from geomesa_hive_spark.pipeline import lm as L
-
-    rows = [(i, (i * 37) % 101) for i in range(99)]
-    df = spark.createDataFrame(rows, "id LONG, avg_q LONG")
-    out = L.perplexity_buckets(df, "avg_q")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert "Window" not in plan
-    got = out.collect()
-    by = {}
-    for r in got:
-        by.setdefault(r.bucket, []).append(r.avg_q)
-    assert set(by) == {"head", "middle", "tail"}
-    assert max(by["head"]) <= min(by["middle"]) <= max(by["middle"]) <= min(by["tail"])
-    # scores are a permutation of 0..100 sampled evenly: thirds within 2
-    assert abs(len(by["head"]) - 33) <= 2 and abs(len(by["tail"]) - 33) <= 2
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        L.perplexity_buckets(df, "avg_q", labels=("a", "b"))
 
 
 def test_c4_clean_rules(spark):
@@ -713,154 +600,6 @@ def test_semantic_dedup(spark):
     assert out[3] == 1 and out[4] == 1
 
 
-def _wav_bytes(rate, ch, payload, extra_chunk=False):
-    import struct
-    block = ch * 2
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, ch, rate, rate * block, block, 16)
-    data = b"data" + struct.pack("<I", len(payload)) + payload
-    lst = b"LIST" + struct.pack("<I", 4) + b"INFO" if extra_chunk else b""
-    body = b"WAVE" + fmt + lst + data
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def test_parse_wav_header():
-    from geomesa_hive_spark.pipeline.multimodal import parse_wav_header
-    assert parse_wav_header(_wav_bytes(16000, 2, b"x" * 100)) == (16000, 2, 16, 25)
-    # fmt and data separated by a LIST chunk (word-aligned walk)
-    assert parse_wav_header(_wav_bytes(8000, 1, b"abc", extra_chunk=True)) == (8000, 1, 16, 1)
-    assert parse_wav_header(_wav_bytes(44100, 1, b"")) == (44100, 1, 16, 0)
-    assert parse_wav_header(b"RIFFxxxxWAVE") is None
-    assert parse_wav_header(b"\x89PNG\r\n\x1a\n" + b"0" * 40) is None
-
-
-def test_decode_audio_batch(spark):
-    from geomesa_hive_spark.pipeline.multimodal import decode_audio_batch
-    df = spark.createDataFrame(
-        [(1, _wav_bytes(16000, 2, b"y" * 64)), (2, b"not audio at all")],
-        "id LONG, media BINARY")
-    out = {r.id: (r.sample_rate, r.channels, r.bits, r.n_samples, r.duration_ms)
-           for r in decode_audio_batch(df, "media").collect()}
-    assert out[1] == (16000, 2, 16, 16, 1)
-    assert out[2] == (None, None, None, None, None)
-
-
-def _mp4_bytes(timescale, dur, w, h, payload=b""):
-    import struct
-    def box(typ, pl): return struct.pack(">I", 8 + len(pl)) + typ + pl
-    mvhd = box(b"mvhd", bytes(4) + bytes(8) + struct.pack(">II", timescale, dur) + bytes(80))
-    tkhd = box(b"tkhd", bytes(4) + bytes(80) + struct.pack(">II", w << 16, h << 16))
-    moov = box(b"moov", mvhd + box(b"trak", tkhd))
-    return box(b"ftyp", b"isom" + bytes(4)) + moov + box(b"mdat", payload)
-
-
-def test_parse_mp4_header():
-    from geomesa_hive_spark.pipeline.multimodal import parse_mp4_header
-    assert parse_mp4_header(_mp4_bytes(1000, 5500, 640, 360, b"x" * 50)) == \
-        (1000, 5500, 640, 360, 5500)
-    assert parse_mp4_header(_mp4_bytes(600, 1234, 1920, 1080)) == \
-        (600, 1234, 1920, 1080, 2056)
-    assert parse_mp4_header(b"RIFFxxxxWAVE" + bytes(40)) is None
-    assert parse_mp4_header(_wav_bytes(8000, 1, b"abc")) is None
-
-
-def test_decode_video_batch(spark):
-    from geomesa_hive_spark.pipeline.multimodal import decode_video_batch
-    df = spark.createDataFrame(
-        [(1, _mp4_bytes(1000, 2500, 320, 240)), (2, b"not a video")],
-        "id LONG, media BINARY")
-    out = {r.id: (r.width, r.height, r.timescale, r.duration_ms)
-           for r in decode_video_batch(df, "media").collect()}
-    assert out[1] == (320, 240, 1000, 2500)
-    assert out[2] == (None, None, None, None)
-
-
-def _make_bmp(w, h, rows=None, color=(10, 20, 30), bpp=24, top_down=False):
-    """Build a real uncompressed BMP: `rows` is an optional list of h
-    (r, g, b) tuples (one color per row, top-down visual order);
-    otherwise solid `color`."""
-    rows = rows or [color] * h
-    stride = ((bpp // 8) * w + 3) & ~3
-    visual = []
-    for r, g, b in rows:
-        px = bytes([b, g, r] + ([255] if bpp == 32 else [])[:0]) * w if bpp == 24 else bytes([b, g, r, 255]) * w
-        visual.append(px + b"\x00" * (stride - len(px)))
-    data = b"".join(visual if top_down else visual[::-1])
-    hdr_h = -h if top_down else h
-    header = b"BM" + (54 + len(data)).to_bytes(4, "little") + b"\x00" * 4 + (54).to_bytes(4, "little")
-    info = ((40).to_bytes(4, "little") + w.to_bytes(4, "little", signed=True)
-            + hdr_h.to_bytes(4, "little", signed=True) + (1).to_bytes(2, "little")
-            + bpp.to_bytes(2, "little") + (0).to_bytes(4, "little")
-            + len(data).to_bytes(4, "little") + b"\x00" * 16)
-    return header + info + data
-
-
-def test_decode_bmp_pixels_real_raster():
-    from geomesa_hive_spark.pipeline.multimodal import decode_bmp_pixels
-
-    # 3x2 gradient: rows red, green (top-down visual), odd width → stride pad
-    img = _make_bmp(3, 2, rows=[(255, 0, 0), (0, 255, 0)])
-    px = decode_bmp_pixels(img)
-    assert px.shape == (2, 3, 3)
-    assert (px[0] == [255, 0, 0]).all() and (px[1] == [0, 255, 0]).all()
-    # top-down flag gives the same visual raster
-    px2 = decode_bmp_pixels(_make_bmp(3, 2, rows=[(255, 0, 0), (0, 255, 0)], top_down=True))
-    assert (px2 == px).all()
-    # 32-bit BGRA path
-    px3 = decode_bmp_pixels(_make_bmp(2, 2, color=(1, 2, 3), bpp=32))
-    assert px3.shape == (2, 2, 3) and (px3 == [1, 2, 3]).all()
-    # compressed / truncated → None
-    assert decode_bmp_pixels(img[:40]) is None
-    bad = bytearray(img); bad[30] = 1  # BI_RLE8
-    assert decode_bmp_pixels(bytes(bad)) is None
-
-
-def test_bmp_pixel_kernels_real(spark):
-    """resize/brightness/features run on REAL pixels for BMP — strict
-    mode passes — and the resize output is the analytically expected
-    raster."""
-    from geomesa_hive_spark.pipeline import multimodal
-
-    img = _make_bmp(4, 4, rows=[(0, 0, 0), (60, 60, 60), (120, 120, 120), (240, 240, 240)])
-    df = spark.createDataFrame([(1, bytearray(img))], "doc_id LONG, media BINARY")
-    dec = multimodal.decode_image_batch(df, "media", strict=True).collect()[0]
-    assert (dec.mime, dec.width, dec.height) == ("image/bmp", 4, 4)
-    assert abs(dec.brightness - (0 + 60 + 120 + 240) / 4 / 255.0) < 1e-9
-    rs = multimodal.resize_images(df, "media", 2, 2, strict=True).collect()[0]
-    # NN picks source rows 0 and 2 → colors 0 and 120
-    assert bytes(rs.media) == bytes([0, 0, 0] * 2 + [120, 120, 120] * 2)
-    assert (rs.out_width, rs.out_height) == (2, 2)
-    feats = multimodal.extract_image_features(df, "media", dim=16).collect()[0].features
-    import numpy as np
-    got = np.array(feats)
-    # luminance histogram over {0, 60, 120, 240}×4 pixels, 16 bins → bins 0,3,7,15
-    want = np.zeros(16); want[[0, 3, 7, 15]] = 4.0; want /= np.linalg.norm(want)
-    assert np.allclose(got, want, atol=1e-6)
-
-
-def test_mp4_largesize_and_first_nonzero_trak():
-    from geomesa_hive_spark.pipeline.multimodal import parse_mp4_header
-
-    def box(typ, payload):
-        return (8 + len(payload)).to_bytes(4, "big") + typ + payload
-
-    def box_large(typ, payload):
-        return (1).to_bytes(4, "big") + typ + (16 + len(payload)).to_bytes(8, "big") + payload
-
-    mvhd = box(b"mvhd", bytes(12) + (1000).to_bytes(4, "big") + (5000).to_bytes(4, "big"))
-    tkhd_audio = box(b"tkhd", bytes(76) + bytes(8))             # 0x0 dims
-    tkhd_video = box(b"tkhd", bytes(76) + (640 << 16).to_bytes(4, "big") + (480 << 16).to_bytes(4, "big"))
-    # audio trak FIRST: video dims must still win
-    moov = box(b"moov", mvhd + box(b"trak", tkhd_audio) + box(b"trak", tkhd_video))
-    buf = box(b"ftyp", b"isom") + moov
-    assert parse_mp4_header(buf) == (1000, 5000, 640, 480, 5000)
-    # largesize (size==1) moov with the same children
-    buf2 = box(b"ftyp", b"isom") + box_large(b"moov", mvhd + box(b"trak", tkhd_video))
-    assert parse_mp4_header(buf2) == (1000, 5000, 640, 480, 5000)
-    # size==0 final box (extends to EOF)
-    moov0 = (0).to_bytes(4, "big") + b"moov" + mvhd + box(b"trak", tkhd_video)
-    assert parse_mp4_header(box(b"ftyp", b"isom") + moov0) == (1000, 5000, 640, 480, 5000)
-
-
 def test_minhash_lsh_band_shards_invariant(spark, docs):
     """Salted band join (hot-band skew control) must return exactly the
     unsalted pairs for any shard count."""
@@ -903,71 +642,6 @@ def test_extract_urls_hosts(spark):
                      (3, "a.example.com")]
     # query string stopped at '?' (not in the path class) — by design
     assert any(r.url == "https://a.example.com/x/y" for r in out)
-
-
-# --------------------------------------------------------------- audio DSP
-def _wav(samples, rate=8000, bits=16):
-    """Build a PCM WAV from an (n, ch) int array."""
-    import numpy as _np
-    a = _np.asarray(samples)
-    ch = a.shape[1]
-    if bits == 16:
-        data = a.astype("<i2").tobytes()
-    elif bits == 8:
-        data = (a + 128).astype(_np.uint8).tobytes()
-    else:
-        data = a.astype("<i4").tobytes()
-    block = ch * bits // 8
-    return (b"RIFF" + (36 + len(data)).to_bytes(4, "little") + b"WAVEfmt "
-            + (16).to_bytes(4, "little") + (1).to_bytes(2, "little")
-            + ch.to_bytes(2, "little") + rate.to_bytes(4, "little")
-            + (rate * block).to_bytes(4, "little") + block.to_bytes(2, "little")
-            + bits.to_bytes(2, "little") + b"data"
-            + len(data).to_bytes(4, "little") + data)
-
-
-def test_parse_wav_samples_formats():
-    import numpy as np
-    from geomesa_hive_spark.pipeline.multimodal import parse_wav_samples
-
-    st = np.array([[100, -200], [300, -400], [-500, 600]])
-    rate, ch, got = parse_wav_samples(_wav(st))
-    assert (rate, ch) == (8000, 2) and np.array_equal(got, st)
-    # 8-bit unsigned rebased to signed midpoint
-    m8 = np.array([[-128], [0], [127]])
-    _, _, got = parse_wav_samples(_wav(m8, bits=8))
-    assert np.array_equal(got, m8)
-    # 32-bit
-    m32 = np.array([[2**20], [-(2**20)]])
-    _, _, got = parse_wav_samples(_wav(m32, bits=32))
-    assert np.array_equal(got, m32)
-    # compressed format tag rejected
-    bad = bytearray(_wav(st)); bad[20] = 2
-    assert parse_wav_samples(bytes(bad)) is None
-
-
-def test_audio_features_and_resample(spark):
-    import numpy as np
-    from geomesa_hive_spark.pipeline import multimodal
-
-    sq = np.array([[v] for v in ([16384] * 4 + [-16384] * 4) * 4])  # square wave
-    df = spark.createDataFrame(
-        [(1, bytearray(_wav(sq))), (2, bytearray(b"not audio"))],
-        "doc_id LONG, media BINARY")
-    rows = {r.doc_id: r for r in multimodal.audio_features(df, "media").collect()}
-    assert rows[1].rms == pytest.approx(0.5) and rows[1].peak == pytest.approx(0.5)
-    assert rows[1].mean_amp == pytest.approx(0.0)
-    assert rows[1].zero_crossings == 7 and rows[1].n_frames == 32
-    assert rows[2].rms is None and rows[2].n_frames is None
-
-    # linear-interp resample of a pure ramp is exact at half rate
-    ramp = np.arange(0, 64, dtype=np.int64).reshape(-1, 1) * 100
-    df2 = spark.createDataFrame([(1, bytearray(_wav(ramp, rate=8000)))],
-                                "doc_id LONG, media BINARY")
-    out = multimodal.resample_audio(df2, "media", 4000).collect()[0]
-    assert out.out_rate == 4000 and out.out_frames == 32
-    got = np.frombuffer(bytes(out.media), dtype="<i2")
-    assert np.array_equal(got, ramp[::2, 0])  # every other ramp point, exact
 
 
 # ----------------------------------------------------------- tfidf / quantile
@@ -1291,147 +965,6 @@ def test_knn_ivfpq_matches_numpy_reference(spark):
 
 
 # ---------------------------------------------------------------------------
-# DSIR importance resampling (pipeline/dsir.py)
-# ---------------------------------------------------------------------------
-
-
-def test_dsir_weights_brute_force(spark):
-    """lw_q matches a pure-Python recomputation of the hashed-bucket
-    models and quantized log ratios — feature hash, Laplace smoothing,
-    micro-nat quantization, per-doc sum, all of it."""
-    import hashlib
-    import math
-
-    from geomesa_hive_spark.pipeline import dsir
-
-    rows = [
-        (1, "spark shuffle join spark shuffle", "t"),
-        (2, "spark join broadcast hash", "t"),
-        (3, "cat dog fish bird cat dog", "r"),
-        (4, "spark shuffle partition skew", "r"),
-        (5, "completely unrelated words here", "r"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING, grp STRING")
-    out = {
-        r.id: (r.n_grams, r.lw_q)
-        for r in dsir.dsir_weights(
-            docs, "doc_id", "text", F.col("grp") == "t", n_buckets=16, seed=42
-        ).collect()
-    }
-
-    def grams(t):
-        w = [x for x in t.lower().split() if x]
-        return w + [f"{a} {b}" for a, b in zip(w, w[1:])]
-
-    def bucket(g):
-        h = hashlib.md5(f"dsir:42:{g}".encode()).hexdigest()
-        return int(h[:8], 16) % 16
-
-    ct, cr = {}, {}
-    for did, t, grp in rows:
-        for g in grams(t):
-            b = bucket(g)
-            (ct if grp == "t" else cr)[b] = (ct if grp == "t" else cr).get(b, 0) + 1
-    tt, tr = sum(ct.values()), sum(cr.values())
-    exp = {}
-    for did, t, grp in rows:
-        if grp == "t":
-            continue
-        gs = grams(t)
-        lw = 0
-        for g in gs:
-            b = bucket(g)
-            x = math.log(
-                ((ct.get(b, 0) + 1.0) / (tt + 16.0))
-                / ((cr.get(b, 0) + 1.0) / (tr + 16.0))
-            ) * 1e6
-            lw += math.floor(x + 0.5) if x >= 0 else math.ceil(x - 0.5)
-        exp[did] = (len(gs), lw)
-    assert out == exp
-    # the target-like raw doc outranks the unrelated ones
-    assert out[4][1] > out[3][1] and out[4][1] > out[5][1]
-
-
-def test_dsir_select_k_and_partition_invariance(spark):
-    from geomesa_hive_spark.pipeline import dsir
-
-    rows = [(i, f"word{i % 7} word{i % 3} common text body {i % 5}") for i in range(60)]
-    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    pred = F.col("doc_id") % 10 == 0
-    a = dsir.dsir_select(docs, "doc_id", "text", pred, k=15, n_buckets=32)
-    b = dsir.dsir_select(
-        docs.repartition(13, "doc_id"), "doc_id", "text", pred, k=15, n_buckets=32
-    )
-    ra = {(r.id, r.n_grams, r.lw_q, r.selected) for r in a.collect()}
-    rb = {(r.id, r.n_grams, r.lw_q, r.selected) for r in b.collect()}
-    assert ra == rb
-    assert sum(s for _, _, _, s in ra) == 15
-    assert len(ra) == 54  # the 6 target docs are excluded from scoring
-
-
-# ---------------------------------------------------------------------------
-# Naive Bayes classifier (pipeline/classify.py)
-# ---------------------------------------------------------------------------
-
-
-def test_nb_learns_separable_vocabulary(spark):
-    """The contract corpus has no lang signal (text ⟂ lang, stated in
-    q_nb_classify), so REAL learning is asserted here: three classes
-    with distinct vocabularies + shared filler, held-out accuracy must
-    be perfect, and predictions must be invariant to partitioning."""
-    from geomesa_hive_spark.pipeline import classify
-
-    vocab = {
-        "db": "table join index query scan row column",
-        "geo": "polygon point latitude longitude projection datum geoid",
-        "ml": "gradient embedding training epoch loss batch model",
-    }
-    rows = []
-    i = 0
-    for label, words in vocab.items():
-        ws = words.split()
-        for k in range(20):
-            body = " ".join(ws[(k + j) % len(ws)] for j in range(6))
-            rows.append((i, f"{body} the a of and", label))
-            i += 1
-    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING, lbl STRING")
-    train = docs.filter(F.col("doc_id") % 4 != 0)
-    test = docs.filter(F.col("doc_id") % 4 == 0)
-    counts, classes = classify.nb_train(train, "doc_id", "text", "lbl",
-                                        n_buckets=64, seed=7)
-    pred = classify.nb_score(test, "doc_id", "text", counts, classes,
-                             n_buckets=64, seed=7)
-    joined = pred.join(test.select(F.col("doc_id").alias("id"), "lbl"), "id")
-    res = joined.collect()
-    assert len(res) == test.count()
-    acc = sum(1 for r in res if r.pred == r.lbl) / len(res)
-    assert acc == 1.0
-
-    # partition invariance: identical (id, pred, score_q) sets
-    counts2, classes2 = classify.nb_train(
-        train.repartition(11, "doc_id"), "doc_id", "text", "lbl",
-        n_buckets=64, seed=7)
-    pred2 = classify.nb_score(test.repartition(5), "doc_id", "text",
-                              counts2, classes2, n_buckets=64, seed=7)
-    assert {(r.id, r.pred, r.score_q) for r in pred.collect()} == \
-           {(r.id, r.pred, r.score_q) for r in pred2.collect()}
-
-
-def test_nb_zero_token_doc_gets_prior_argmax(spark):
-    from geomesa_hive_spark.pipeline import classify
-
-    train = spark.createDataFrame(
-        [(1, "alpha beta", "a"), (2, "alpha beta gamma", "a"), (3, "delta", "b")],
-        "doc_id LONG, text STRING, lbl STRING")
-    test = spark.createDataFrame([(10, "")], "doc_id LONG, text STRING")
-    counts, classes = classify.nb_train(train, "doc_id", "text", "lbl",
-                                        n_buckets=16, seed=7)
-    out = classify.nb_score(test, "doc_id", "text", counts, classes,
-                            n_buckets=16, seed=7).collect()
-    assert len(out) == 1 and out[0].pred == "a"  # majority prior
-
-
-# ---------------------------------------------------------------------------
 # Embedding PCA (pipeline/embeddings.py)
 # ---------------------------------------------------------------------------
 
@@ -1539,96 +1072,6 @@ def test_opq_rotation_invariants(spark):
            similarity.rotate_vecs(df, "embedding", R, "rvec").collect()}
     got = np.stack([rot[i] for i in range(n)])
     assert np.abs(got - x.astype(np.float64) @ R.T).max() < 1e-12
-
-
-def test_audio_spectrogram_planted_tone(spark):
-    """A pure cosine at an exact FFT bin concentrates its energy in
-    the band owning that bin (Hann leakage only reaches adjacent
-    bins); the values equal a direct NumPy reference of the same
-    framing/window/banding; short/broken payloads yield nulls."""
-    import numpy as np
-
-    from geomesa_hive_spark.pipeline.multimodal import audio_spectrogram
-
-    n = 128
-    t = np.arange(n)
-    rows = []
-    tones = {1: 6, 2: 14, 3: 28}  # doc -> bin k of a 64-point frame
-    for did, k in tones.items():
-        sig = np.round(12000 * np.cos(2 * np.pi * k * t / 64.0)).astype(int)
-        rows.append((did, _wav(sig[:, None])))
-    rows.append((99, _wav(np.zeros((10, 1), dtype=int))))  # too short
-    rows.append((98, b"not a wav"))
-    df = spark.createDataFrame(rows, "doc_id LONG, media BINARY")
-    out = {r.doc_id: (r.band_energy, r.n_fft_frames)
-           for r in audio_spectrogram(df, "media", 64, 32, 8).collect()}
-
-    assert out[99] == (None, None) and out[98] == (None, None)
-    win = 0.5 - 0.5 * np.cos(2 * np.pi * np.arange(64) / 64)
-    band_of = (np.arange(33) * 8) // 33
-    for did, k in tones.items():
-        sig = np.round(12000 * np.cos(2 * np.pi * k * t / 64.0))
-        acc = np.zeros(8)
-        for s in (0, 32, 64):
-            p = np.abs(np.fft.rfft(sig[s:s+64] * win)) ** 2
-            np.add.at(acc, band_of, p)
-        got, frames = out[did]
-        assert frames == 3
-        assert np.allclose(got, acc, rtol=1e-12)
-        # Hann leakage is exactly ±1 bin with power 64A² vs 256A² at k:
-        # when k±1 share k's band the band holds 100% of the tone, when
-        # one sidelobe crosses a band edge (k=28 → bin 29 in band 7)
-        # the share drops to 320/384 ≈ 83% — assert the exact physics
-        kb = band_of[k]
-        in_band = sum(w for j, w in ((k - 1, 64), (k, 256), (k + 1, 64))
-                      if band_of[j] == kb)
-        assert abs(got[kb] / sum(got) - in_band / 384.0) < 0.01
-        assert kb == int(np.argmax(got))
-
-
-def test_video_motion_known_frames(spark):
-    """MAD values equal hand-computed integers for known solid-color
-    BMP frames in a real AVI container; dimension-mismatched pairs are
-    skipped; non-AVI bytes produce no rows."""
-    import numpy as np
-
-    from geomesa_hive_spark.pipeline.multimodal import video_motion
-
-    def le(v, n):
-        return int(v).to_bytes(n, "little")
-
-    def bmp(w, h, bgr):
-        stride = (w * 3 + 3) // 4 * 4
-        row = bytes(bgr) * w + bytes(stride - w * 3)
-        data = row * h
-        return (b"BM" + le(54 + len(data), 4) + le(0, 4) + le(54, 4)
-                + le(40, 4) + le(w, 4) + le(h, 4) + le(1, 2) + le(24, 2)
-                + le(0, 4) + le(len(data), 4) + bytes(16) + data)
-
-    def avi(frames):
-        chunks = b""
-        for fb in frames:
-            chunks += b"00dc" + le(len(fb), 4) + fb + (b"\0" if len(fb) % 2 else b"")
-        movi = b"movi" + chunks
-        return (b"RIFF" + le(4 + 8 + len(movi), 4) + b"AVI "
-                + b"LIST" + le(len(movi), 4) + movi)
-
-    # grays: (10+20+30)//3=20, (40+50+60)//3=50, (5+5+5)//3=5
-    f1, f2, f3 = bmp(4, 3, (30, 20, 10)), bmp(4, 3, (60, 50, 40)), bmp(4, 3, (5, 5, 5))
-    f_other = bmp(2, 2, (0, 0, 0))  # different dims -> pair skipped
-    rows = [
-        (1, avi([f1, f2, f3])),
-        (2, avi([f1, f_other, f3])),
-        (3, b"RIFF....not avi"),
-    ]
-    df = spark.createDataFrame(rows, "vid LONG, media BINARY")
-    got = {(r.id, r.pair_index): (r.mad_q, r.n_px)
-           for r in video_motion(df, "media", "vid").collect()}
-    assert got == {
-        (1, 0): (abs(50 - 20) * 12, 12),
-        (1, 1): (abs(5 - 50) * 12, 12),
-        # doc 2: both pairs involve the 2x2 frame -> skipped entirely
-    }
 
 
 def test_top_terms_ranking_and_stop_cut(spark):

@@ -1324,50 +1324,6 @@ def test_stream_static_enrich_multibatch_parity(spark, tmp_path):
         streaming.enrich_with_dim(stream, dim, on="user_id", how="full")
 
 
-def test_bucketed_join_no_exchange(spark, tmp_path):
-    """write_bucketed + bucketed_equijoin: the bucketed join plans
-    ZERO Exchange nodes while the identical un-bucketed merge join
-    shuffles; results equal the plain join exactly."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from geomesa_hive_spark.operators.join_strategies import (
-        assert_no_exchange, bucketed_equijoin, write_bucketed,
-    )
-
-    left = spark.createDataFrame(
-        [(i % 50, i, float(i)) for i in range(500)],
-        "k long, oid long, v double",
-    )
-    right = spark.createDataFrame(
-        [(i, f"seg{i % 5}") for i in range(50)], "k long, seg string"
-    )
-    write_bucketed(left, "t_bl", "k", num_buckets=8, sort_cols="k",
-                   path=str(tmp_path / "bl"))
-    write_bucketed(right, "t_br", "k", num_buckets=8, sort_cols="k",
-                   path=str(tmp_path / "br"))
-    try:
-        j = bucketed_equijoin(spark, "t_bl", "t_br", "k")
-        got = (
-            j.groupBy("seg").agg(F.count("*").alias("cnt"),
-                                 F.sum("v").alias("sv"))
-            .collect()
-        )
-        exp = (
-            left.join(right, "k")
-            .groupBy("seg").agg(F.count("*").alias("cnt"),
-                                F.sum("v").alias("sv"))
-            .collect()
-        )
-        assert sorted(map(tuple, got)) == sorted(map(tuple, exp))
-        # control: the same hinted join WITHOUT bucketing must shuffle
-        with _pytest.raises(AssertionError, match="Exchange"):
-            assert_no_exchange(left.hint("merge").join(right, "k"))
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bl")
-        spark.sql("DROP TABLE IF EXISTS t_br")
-
-
 def test_vacuum_removes_refused_writer_orphans(spark, tmp_path):
     """A conflict-REFUSED writer's data dir (landed before the commit
     claim) is an orphan; vacuum(remove_orphans=True) deletes exactly
