@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import functools
 import math
+import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -424,6 +425,13 @@ def _bbox_contains(a_cols, b_cols):
     return ok, np.isnan(ax0) | np.isnan(bx0)
 
 
+# the first five WKB bytes (byte order + type) of a 2-D polygon or
+# multipolygon, in both byte orders
+_AREAL_HEADERS = frozenset(
+    bytes([order]) + t.to_bytes(4, "little" if order else "big") for order in (0, 1) for t in (3, 6)
+)
+
+
 def _poly_predicate_udf(fn, extent_extent_fn, pip_includes_boundary: bool | None):
     """Polymorphic (Extent|Geometry, Extent|Geometry) → Boolean.
 
@@ -434,6 +442,9 @@ def _poly_predicate_udf(fn, extent_extent_fn, pip_includes_boundary: bool | None
       every non-null extent of the batch is degenerate (xmin == xmax and
       ymin == ymax — the bbox of a point), the same vectorized PIP on
       (xmin, ymin); a batch with any other extent takes the per-row path
+    - point-batch vs varying geometry: the rows grouped by the other
+      side's WKB, one vectorized PIP per distinct polygon
+      (``_by_polygon``); the rows it leaves take the per-row path
     - general: per-row DE-9IM via the kernel
     """
 
@@ -445,7 +456,8 @@ def _poly_predicate_udf(fn, extent_extent_fn, pip_includes_boundary: bool | None
             out = pd.Series(ok, dtype=object)
             out[isnull] = None
             return out
-        res = None
+        res = grouped = None
+        parse = parse_cache()
         if a_ext != b_ext and fn.__name__ in ("intersects", "disjoint"):
             ext, const = (a, b) if a_ext else (b, a)
             res = _vec_const(lambda: _point_extents_xy(ext), const, swapped=b_ext)
@@ -454,17 +466,79 @@ def _poly_predicate_udf(fn, extent_extent_fn, pip_includes_boundary: bool | None
             res = _vec_points_const(a, b, swapped=False)
             if res is None:
                 res = _vec_points_const(b, a, swapped=True)
+            if res is None:
+                grouped = _by_polygon(a, b, False, parse) or _by_polygon(b, a, True, parse)
         if res is not None:
             return res
-        parse = parse_cache()
-        ga = _extents_to_geoms(a) if a_ext else [parse(v) for v in a]
-        gb = _extents_to_geoms(b) if b_ext else [parse(v) for v in b]
-        return _series(
-            [
-                None if x is None or y is None else bool(fn(x, y))
-                for x, y in zip(ga, gb)
-            ]
-        )
+        if grouped is None:
+            return _series(_per_pair(a, b, parse))
+        out, done = grouped
+        rest = np.flatnonzero(~done)
+        if len(rest):
+            out[rest] = _per_pair(a.iloc[rest], b.iloc[rest], parse)
+        return pd.Series(out, dtype=object)
+
+    def _per_pair(a, b, parse) -> list:
+        """The kernel's answer for each row, NULL where either side is."""
+        ga = _extents_to_geoms(a) if isinstance(a, pd.DataFrame) else [parse(v) for v in a]
+        gb = _extents_to_geoms(b) if isinstance(b, pd.DataFrame) else [parse(v) for v in b]
+        return [None if x is None or y is None else bool(fn(x, y)) for x, y in zip(ga, gb)]
+
+    def _by_polygon(pts_side: pd.Series, other_side: pd.Series, swapped: bool, parse):
+        """predicate(points, other) (or swapped) where the other side
+        varies: the rows grouped by the other side's WKB, each distinct
+        polygon decoded once (by ``parse``, which the per-row path
+        shares) and tested against its points by one ``_vec_eval``.
+        ``(values, done)`` as object and bool arrays; ``done`` is False
+        on the rows left to the per-row kernel, which the vectorized
+        test would not match: a NULL or non-finite point, a point larger
+        in magnitude than the polygon's coordinates (the pair's eps would
+        no longer be the polygon's), and a polygon that does not decode
+        or has no vectorized form, or none of whose points lies in its
+        bbox. None, before any point is decoded, when the other side
+        holds no 2-D polygon, and when the points side is not all plain
+        2-D points."""
+        if fn.__name__ == "within" and swapped:
+            return None  # an areal geometry within points: no vectorized form
+        keys: dict[bytes, int] = {}
+        rows_of: list[list[int]] = []
+        gid = np.full(len(other_side), -1)
+        for i, v in enumerate(other_side.to_numpy(dtype=object)):
+            if v is not None and bytes(v[:5]) in _AREAL_HEADERS:
+                k = gid[i] = keys.setdefault(bytes(v), len(keys))
+                if k == len(rows_of):
+                    rows_of.append([])
+                rows_of[k].append(i)
+        if not keys:
+            return None
+        fp = wkb_array_to_points(pts_side.to_numpy(dtype=object))
+        if fp is None:
+            return None
+        x, y = fp
+        geoms, bounds = [], np.full((len(keys), 4), np.nan)
+        for k, key in enumerate(keys):
+            try:
+                geoms.append(parse(key))
+                bounds[k] = geoms[k].bounds
+            except (ValueError, struct.error):
+                geoms.append(None)  # malformed: the per-row path raises it in row order
+        # per row, its polygon's bbox (NaN: not grouped, empty or malformed)
+        b = np.where((gid >= 0)[:, None], bounds[gid], np.nan)
+        with np.errstate(invalid="ignore"):
+            inside = (x >= b[:, 0]) & (x <= b[:, 2]) & (y >= b[:, 1]) & (y <= b[:, 3])
+            near = np.isfinite(x) & np.isfinite(y) & (np.maximum(np.abs(x), np.abs(y)) <= np.abs(b).max(axis=1))
+        out = np.full(len(x), None, dtype=object)
+        done = np.zeros(len(x), dtype=bool)
+        # a polygon none of whose points lies in its bbox leaves them to
+        # the kernel, whose bbox test rejects each cheaper than a call here
+        for k in np.unique(gid[inside]):
+            rows = np.asarray(rows_of[k])
+            rows = rows[near[rows]]
+            vals = _vec_eval(x[rows], y[rows], geoms[k], swapped)
+            if vals is not None:
+                out[rows] = vals
+                done[rows] = True
+        return out, done
 
     def _vec_points_const(pts_side: pd.Series, const_side: pd.Series, swapped: bool):
         return _vec_const(

@@ -55,7 +55,8 @@ from geomesa_hive_spark.functions.st import EXTENT_TYPE
 from geomesa_hive_spark.geom.algorithms import _EPS, _scale
 from geomesa_hive_spark.geom.core import Geometry
 
-__all__ = ["GEO_KEY", "claim", "is_extent_type", "point_columns", "point_predicate_sql", "quoted"]
+__all__ = ["GEO_KEY", "claim", "covering_column", "is_extent_type", "point_columns", "point_predicate_sql",
+           "quoted"]
 
 GEO_KEY = "geo"
 
@@ -98,25 +99,43 @@ def is_extent_type(dt) -> bool:
         (f.name, f.dataType) for f in EXTENT_TYPE.fields]
 
 
+def _geo(f) -> dict:
+    """The ``geo`` field metadata of the field ``f`` (None: no field)."""
+    return (f.metadata.get(GEO_KEY) if f is not None else None) or {}
+
+
+def covering_column(schema: T.StructType, geom: str) -> str | None:
+    """The name of the covering column of the geometry column ``geom``
+    (any case), of any geometry type, when the claim can be used: the
+    column's metadata names a covering, that covering is in ``schema``
+    as an extent struct, and it claims ``geom`` back with
+    ``covering_of``. None otherwise."""
+    fields = {f.name.lower(): f for f in schema.fields}
+    f = fields.get(geom.lower())
+    if f is None:
+        return None
+    cov = fields.get(str(_geo(f).get("covering", "")).lower())
+    if cov is None or not is_extent_type(cov.dataType):
+        return None
+    return cov.name if str(_geo(cov).get("covering_of")).lower() == f.name.lower() else None
+
+
 def point_columns(schema: T.StructType, col: str) -> tuple[str, str] | None:
     """``(geometry, covering)`` column names when ``col`` (either of the
     two, any case) holds points by the claim: the binary geometry
-    column's metadata lists exactly ``["Point"]`` and names a covering
-    that is in ``schema`` as an extent struct claiming it back. None
-    otherwise."""
+    column's metadata lists exactly ``["Point"]`` and its covering is
+    usable (:func:`covering_column`). None otherwise."""
     fields = {f.name.lower(): f for f in schema.fields}
     f = fields.get(col.lower())
-    geo = (f.metadata.get(GEO_KEY) if f is not None else None) or {}
+    geo = _geo(f)
     if "covering_of" in geo:
         found = fields.get(str(geo["covering_of"]).lower())
         got = found and point_columns(schema, found.name)
         return got if got and got[1] == f.name else None
-    cov = fields.get(str(geo.get("covering", "")).lower())
-    if (geo.get("geometry_types") != ["Point"] or cov is None
-            or not isinstance(f.dataType, T.BinaryType) or not is_extent_type(cov.dataType)):
+    if geo.get("geometry_types") != ["Point"] or not isinstance(f.dataType, T.BinaryType):
         return None
-    back = (cov.metadata.get(GEO_KEY) or {}).get("covering_of")
-    return (f.name, cov.name) if str(back).lower() == f.name.lower() else None
+    cov = covering_column(schema, f.name)
+    return (f.name, cov) if cov else None
 
 
 def quoted(name: str) -> str:

@@ -5,13 +5,18 @@ Cartesian ``ST_Intersects`` filter, which dies at scale. This is the
 standard partition-based spatial-merge join (PBSM / GeoSpark-style)
 re-expressed in Spark SQL expressions so every stage is a stock Spark
 shuffle. Each plan piece is defined once, as SQL text (``cells_sql``,
-``grown_sql``, ``on_sql``): the DataFrame joins here run it through
+``grown_sql``, ``banded_sql``, ``on_sql``): the DataFrame joins here run it through
 ``F.expr``, and the SQL join rewrite (``spatial_sql.rewrite_spatial_join``)
 splices the same text into the query, so both surfaces plan one join:
 
-1. each side's geometry bbox is exploded to the fixed-grid cells it
+1. each side's bbox is the covering column its field metadata names
+   (``native_points.covering_column``: the lake's stored bbox, read with
+   no Python), else ``st_extentFromGeom`` of the geometry; for a
+   predicate join it grows by the kernel's snap band of its own
+   geometry (``banded_sql``), so a contact the exact predicate counts
+   is never pruned; then it is exploded to the fixed-grid cells it
    overlaps (native ``sequence``/``transform``/``explode`` expressions —
-   a point lands in exactly one cell);
+   a point lands in one cell, two where it lies on a cell line);
 2. candidates = equi-join on cell id (hash shuffle both sides on the
    SAME key → co-located, no broadcast needed at any scale);
 3. a native bbox-overlap conjunction prunes non-touching candidates
@@ -22,7 +27,9 @@ splices the same text into the query, so both surfaces plan one join:
    dedup happens inside the joined partition, NOT as a global distinct
    (which would be a second full shuffle of the candidate stream);
 5. the exact geometry predicate (pandas UDF over the WKB pair) runs
-   last, on the few bbox-confirmed survivors.
+   last, on the few bbox-confirmed survivors; for point × polygon pairs
+   it groups each batch by polygon and tests each polygon's points in
+   one vectorized pass (``functions/st.py:_poly_predicate_udf``).
 
 At 100 TB the only tunables are ``cell_size`` (match it to the p95
 geometry extent so most rows explode to ≤4 cells) and the shuffle
@@ -36,6 +43,9 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from geomesa_hive_spark.geom.algorithms import _EPS
+from geomesa_hive_spark.operators.native_points import covering_column, quoted
 
 __all__ = [
     "spatial_join", "spatial_knn_join",
@@ -51,6 +61,9 @@ __all__ = [
 _OFFSET = 1 << 30
 _STRIDE = 1 << 31
 _BOUNDS = ("xmin", "ymin", "xmax", "ymax")
+# the kernel's relative snap band, plus a margin well above the few ulps
+# of M that the box arithmetic and the kernel's own distance test round by
+_BAND = _EPS * (1.0 + 1e-6)
 
 _PREDICATES = {
     "intersects": "st_intersects",
@@ -108,11 +121,28 @@ def cells_sql(box: str, cs: float) -> str:
     )
 
 
-def grown_sql(box: str, d: float) -> str:
-    """The struct ``box`` grown by ``d`` on every side."""
-    d = _num(d)
+def grown_sql(box: str, d: float | str) -> str:
+    """The struct ``box`` grown by ``d`` (a number or a SQL expression)
+    on every side."""
+    d = d if isinstance(d, str) else _num(d)
     return (f"named_struct('xmin', {box}.xmin - {d}, 'ymin', {box}.ymin - {d}, "
             f"'xmax', {box}.xmax + {d}, 'ymax', {box}.ymax + {d})")
+
+
+def banded_sql(box: str) -> str:
+    """The struct ``box`` grown on every side by the snap band of its
+    own geometry: ``_BAND·M``, ``M`` its largest absolute bound.
+
+    The exact predicates count a contact within ``1e-9·max(M_a, M_b)``
+    as touching (``geom/algorithms.py``: ``eps = _EPS·_scale(a, b)``).
+    Growing each side by its own band makes the two growths add up to at
+    least that, so two boxes overlap, and share a cell, whenever the
+    kernel can pair their geometries. Growing one side is not enough: a
+    line to x = 1e6 passing 1e-4 under a unit square touches it (eps =
+    1e-3), and only the line's own band spans the gap. A NULL or NaN
+    bound stays one, so such a box still has no extent."""
+    m = f"greatest(abs({box}.xmin), abs({box}.ymin), abs({box}.xmax), abs({box}.ymax))"
+    return grown_sql(box, f"{m} * {_num(_BAND)}")
 
 
 def on_sql(left: str, right: str, cs: float, lbox: str = "__l_bbox", d: float | None = None) -> str:
@@ -136,10 +166,23 @@ def on_sql(left: str, right: str, cs: float, lbox: str = "__l_bbox", d: float | 
     return " AND ".join(conds)
 
 
-def _boxed(df: DataFrame, geom: str, bbox: str | None, side: str) -> DataFrame:
-    """``df`` plus its bbox as __<side>_bbox: the stored one, else derived."""
-    box = F.col(bbox) if bbox else F.call_function("st_extentfromgeom", F.col(geom))
-    return df.withColumn(f"__{side}_bbox", box)
+def _boxed(df: DataFrame, geom: str, bbox: str | None, side: str, band: bool = False) -> DataFrame:
+    """``df`` plus its bbox as __<side>_bbox0, the name
+    :func:`_exploded` reads it by: the column ``bbox`` when given, else
+    the covering ``df.schema`` declares for ``geom``
+    (:func:`native_points.covering_column`), else derived by
+    ``st_extentFromGeom``; with ``band``, grown by the snap band
+    (:func:`banded_sql`). A given or derived box is first projected as
+    __<side>_bbox1, so the band's several references to it do not
+    evaluate the UDF again."""
+    b = f"__{side}_bbox"
+    cov = None if bbox else covering_column(df.schema, geom)
+    if cov:
+        box = quoted(cov)
+    else:
+        box = f"{b}1"
+        df = df.withColumn(box, F.col(bbox) if bbox else F.call_function("st_extentfromgeom", F.col(geom)))
+    return df.withColumn(f"{b}0", F.expr(banded_sql(box) if band else box))
 
 
 def exploded_sql(side: str, boxes: list[str], cs: float) -> str:
@@ -156,12 +199,13 @@ def exploded_sql(side: str, boxes: list[str], cs: float) -> str:
 
 
 def _exploded(df: DataFrame, side: str, cs: float) -> DataFrame:
-    """One row per grid cell of the side's cell box (``__<side>_ebox``
-    when there is one, else ``__<side>_bbox``), as __<side>_cell, the
-    box columns coming out of the generator (:func:`exploded_sql`)."""
-    boxes = [b for b in (f"__{side}_bbox", f"__{side}_ebox") if b in df.columns]
-    df = df.withColumnsRenamed({b: b + "0" for b in boxes})
-    return df.select("*", F.expr(exploded_sql(side, boxes, cs))).drop(*[b + "0" for b in boxes])
+    """One row per grid cell of the side's cell box (``__<side>_ebox0``
+    when there is one, else ``__<side>_bbox0``, as :func:`_boxed`
+    names them), as __<side>_cell, the box columns coming out of the
+    generator without the ``0`` (:func:`exploded_sql`)."""
+    boxes = [b for b in (f"__{side}_bbox", f"__{side}_ebox") if b + "0" in df.columns]
+    dropped = [b + "0" for b in boxes] + [b for b in (f"__{side}_bbox1",) if b in df.columns]
+    return df.selectExpr(f"* EXCEPT ({', '.join(dropped)})", exploded_sql(side, boxes, cs))
 
 
 def _pair(fn: str, left_geom: str, right_geom: str) -> Column:
@@ -217,6 +261,13 @@ def spatial_join(
     shuffles nothing, so there is no skew to split — and replicating
     the broadcast table would only inflate it).
 
+    Each side's bbox is ``left_bbox``/``right_bbox`` when given, else
+    the covering column the geometry column's field metadata names (the
+    Z2 writers and ``write_geoparquet`` record it; a ``select`` that
+    drops the covering drops the claim), else ``st_extentFromGeom`` of
+    the geometry. Both boxes grow by their own snap band before the
+    cells and the overlap test (:func:`banded_sql`).
+
     Register the ST surface first (``register_all(spark)``) —
     the exact predicate and the bbox derivation call the SQL functions.
     """
@@ -230,8 +281,8 @@ def spatial_join(
             "salt > 1 with broadcast_right: the broadcast path has no "
             "shuffle to skew — drop one of the two"
         )
-    a = _exploded(_boxed(left, left_geom, left_bbox, "l"), "l", cell_size)
-    b = _exploded(_boxed(right, right_geom, right_bbox, "r"), "r", cell_size)
+    a = _exploded(_boxed(left, left_geom, left_bbox, "l", band=True), "l", cell_size)
+    b = _exploded(_boxed(right, right_geom, right_bbox, "r", band=True), "r", cell_size)
     on = on_sql("__l", "__r", cell_size)
     if salt > 1:
         # deterministic per-row shard over ALL left columns (not just
@@ -392,7 +443,7 @@ def distance_join(
     cs = float(cell_size) if cell_size is not None else max(d, 1.0)
 
     a = _boxed(left, left_geom, left_bbox, "l")
-    a = _exploded(a.withColumn("__l_ebox", F.expr(grown_sql("__l_bbox", d))), "l", cs)
+    a = _exploded(a.withColumn("__l_ebox0", F.expr(grown_sql("__l_bbox0", d))), "l", cs)
     b = _exploded(_boxed(right, right_geom, right_bbox, "r"), "r", cs)
     cand = a.alias("__l").join(b.alias("__r"), F.expr(on_sql("__l", "__r", cs, "__l_ebox", d)))
     return _within(cand, "st_distance", left_geom, right_geom, d, dist_col)
@@ -456,8 +507,8 @@ def distance_join_sphere(
     cs = float(cell_size) if cell_size is not None else max(dlat * 2.0, 1.0)
 
     a = _boxed(left, left_geom, left_bbox, "l")
-    y0 = F.col("__l_bbox")["ymin"] - F.lit(dlat)
-    y1 = F.col("__l_bbox")["ymax"] + F.lit(dlat)
+    y0 = F.col("__l_bbox0")["ymin"] - F.lit(dlat)
+    y1 = F.col("__l_bbox0")["ymax"] + F.lit(dlat)
     # smallest cos|φ| over the EXPANDED band; envelope goes full-range
     # when the inverse-haversine bound is undefined there (polar caps)
     wlat = F.greatest(F.abs(y0), F.abs(y1))
@@ -466,8 +517,8 @@ def distance_join_sphere(
     dlon = F.when(full, F.lit(180.0)).otherwise(
         F.degrees(F.lit(2.0) * F.asin(F.lit(sin_half) / cosmin))
     )
-    ex0 = F.col("__l_bbox")["xmin"] - dlon
-    ex1 = F.col("__l_bbox")["xmax"] + dlon
+    ex0 = F.col("__l_bbox0")["xmin"] - dlon
+    ex1 = F.col("__l_bbox0")["xmax"] + dlon
     # a ≥360°-wide envelope sees every longitude: clamp and use only
     # offset 0 (any wider and a pair could be found under two offsets)
     full_span = full | ((ex1 - ex0) >= F.lit(360.0))
@@ -486,7 +537,7 @@ def distance_join_sphere(
         (ex1 + F.col("__off")).alias("xmax"),
         y1.alias("ymax"),
     )
-    a = _exploded(a.withColumn("__l_ebox", ebox).drop("__off"), "l", cs)
+    a = _exploded(a.withColumn("__l_ebox0", ebox).drop("__off"), "l", cs)
     b = _exploded(_boxed(right, right_geom, right_bbox, "r"), "r", cs)
     cand = a.alias("__l").join(b.alias("__r"), F.expr(on_sql("__l", "__r", cs, "__l_ebox")))
     return _within(cand, "st_distancesphere", left_geom, right_geom, d, dist_col)

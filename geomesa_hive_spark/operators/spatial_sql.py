@@ -76,9 +76,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from geomesa_hive_spark.operators.native_points import (
-    is_extent_type, point_columns, point_predicate_sql, quoted,
+    covering_column, is_extent_type, point_columns, point_predicate_sql, quoted,
 )
-from geomesa_hive_spark.operators.spatial_join import exploded_sql, grown_sql, on_sql
+from geomesa_hive_spark.operators.spatial_join import banded_sql, exploded_sql, grown_sql, on_sql
 
 __all__ = [
     "spatial_sql", "rewrite_spatial_predicates", "rewrite_spatial_join",
@@ -456,8 +456,10 @@ def _one_and_chain(masked: str, a0: int, a1: int, b0: int, b1: int) -> bool:
 # this rewrite EXTENDS the surface: a recognized geometry×geometry JOIN
 # predicate is re-expressed as the PBSM grid join, spliced in from the
 # one core in operators/spatial_join.py (exploded_sql, grown_sql, on_sql:
-# the same text spatial_join and distance_join run) — each side exploded
-# to the fixed-grid cells its bbox overlaps, equi-joined on cell id (a
+# the same text spatial_join and distance_join run) — each side's bbox
+# read from its covering column when the catalog's field metadata names
+# one (the typed chain only; else st_extentFromGeom), grown by its snap
+# band, exploded to the fixed-grid cells it overlaps, equi-joined on cell id (a
 # plain shuffled hash join), bbox-overlap prefilter + reference-point
 # dedup in the ON conjunction, the ORIGINAL predicate kept verbatim as
 # the exact filter. st_dwithin(a.g, b.g, d) gets the distance_join form:
@@ -573,19 +575,32 @@ def _j_norm(seg: str) -> str:
     return seg.strip("`").lower()
 
 
-def _j_side(tbl: str, alias: str, geom: str, side: str, cs: float,
-            expand: float | None = None) -> str:
-    """One join side as a derived table: bbox (+d-expanded ebox for
-    dwithin) then the cell generator, which emits the boxes with the
-    cells (``exploded_sql``), aliased back to the user's alias so every
-    qualified reference in the rest of the query still resolves."""
-    boxes = [f"__{side}_bbox"]
-    inner = f"(SELECT *, st_extentFromGeom({geom}) AS __{side}_bbox0 FROM {tbl}) __sj_{side}0"
-    if expand is not None:
-        inner = f"(SELECT *, {grown_sql(boxes[0] + '0', expand)} AS __{side}_ebox0 FROM {inner}) __sj_{side}1"
-        boxes.append(f"__{side}_ebox")
-    kept = ", ".join(b + "0" for b in boxes)
-    return f"(SELECT * EXCEPT ({kept}), {exploded_sql(side, boxes, cs)} FROM {inner}) {alias}"
+def _j_side(tbl: str, alias: str, geom: str, side: str, cs: float, d: float | None = None,
+            covering: str | None = None) -> str:
+    """One join side as a derived table, aliased back to the user's
+    alias so every qualified reference in the rest of the query still
+    resolves. Its bbox is the ``covering`` column when the catalog names
+    one, else ``st_extentFromGeom``, in a projection of its own (the
+    boxes reference it more than once, so Spark does not merge the UDF
+    into them and it runs once per row). A predicate join (``d`` None)
+    grows it by the snap band (``banded_sql``); a dwithin join keeps it
+    and adds a ``d``-grown ebox on the left side. Then the cell
+    generator emits the boxes with the cells (``exploded_sql``)."""
+    b = f"__{side}_bbox"
+    if covering:
+        box, kept = quoted(covering), []
+    else:
+        box, kept = f"{b}1", [f"{b}1"]
+        tbl = f"(SELECT *, st_extentFromGeom({geom}) AS {box} FROM {tbl}) __sj_{side}1"
+    if d is None:
+        boxes, cols = [b], f"{banded_sql(box)} AS {b}0"
+    elif side == "r":
+        boxes, cols = [b], f"{box} AS {b}0"
+    else:
+        boxes, cols = [b, f"__{side}_ebox"], f"{box} AS {b}0, {grown_sql(box, d)} AS __{side}_ebox0"
+    kept += [x + "0" for x in boxes]
+    inner = f"(SELECT *, {cols} FROM {tbl}) __sj_{side}0"
+    return f"(SELECT * EXCEPT ({', '.join(kept)}), {exploded_sql(side, boxes, cs)} FROM {inner}) {alias}"
 
 
 def rewrite_spatial_join(sql: str, cell_size: float = 1.0) -> str:
@@ -607,6 +622,13 @@ def rewrite_spatial_join(sql: str, cell_size: float = 1.0) -> str:
     join both spellings are the same relation. Leading conjuncts must
     pass _j_head_sound (AND-composed, ending in AND); they stay in the
     ON conjunction unchanged."""
+    return _rewrite_spatial_join(sql, cell_size)
+
+
+def _rewrite_spatial_join(sql: str, cell_size: float = 1.0, covering=None) -> str:
+    """:func:`rewrite_spatial_join`, with ``covering(table, geometry)``
+    giving a side's covering column name (or None), asked only once a
+    join matched; without it both sides derive their bbox."""
     # every pattern and soundness check runs on the masked text (see
     # _mask): a join spelled inside a literal or a comment is not one,
     # and 'SELECT /*+ hint */ *' must not slip past the star guard
@@ -642,8 +664,10 @@ def rewrite_spatial_join(sql: str, cell_size: float = 1.0) -> str:
         g_l = p.group("g1") if q1 == al else p.group("g2")
         g_r = p.group("g2") if q1 == al else p.group("g1")
         cs = max(float(d), float(cell_size)) if d is not None else float(cell_size)
-        left = _j_side(f.group("t1"), a1, g_l, "l", cs, expand=d)
-        right = _j_side(f.group("t2"), a2, g_r, "r", cs)
+        cov_l, cov_r = ((covering(f.group("t1"), _j_norm(g_l)), covering(f.group("t2"), _j_norm(g_r)))
+                        if covering else (None, None))
+        left = _j_side(f.group("t1"), a1, g_l, "l", cs, d, cov_l)
+        right = _j_side(f.group("t2"), a2, g_r, "r", cs, d, cov_r)
         on = on_sql(a1, a2, cs, "__l_bbox" if d is None else "__l_ebox", d)
         rep = f"FROM {left} JOIN {right} ON {on} AND {head}{p.group('pred')}"
         if fm.re is _J_FROM_COMMA:
@@ -961,28 +985,39 @@ _COL_REF = re.compile(rf"(?:(?P<q>{_SEG})\.)?(?P<c>{_SEG})")
 _WKT_CALL = re.compile(rf"\b{_WKT}", re.IGNORECASE)
 
 
-def _relations(spark, sql: str) -> list:
+def _cte_names(sql: str) -> set:
+    """The normalized names of the CTEs ``sql`` defines."""
+    return {_j_norm(_Orig(m, sql).group("n")) for m in _CTE_NAME.finditer(_mask(sql))}
+
+
+def _schema(spark, name: str, schemas: dict):
+    """``spark.table(name).schema``, looked up once per name in the
+    query's cache ``schemas``; None when the catalog cannot resolve it."""
+    if name not in schemas:
+        schemas[name] = None
+        try:
+            schemas[name] = spark.table(name).schema
+        except Exception:
+            pass
+    return schemas[name]
+
+
+def _relations(spark, sql: str, schemas: dict | None = None) -> list:
     """(qualifier, schema or None) of every relation named after
     FROM/JOIN in ``sql``: the alias, else the table's own name, and
-    ``spark.table(name).schema`` — None for a CTE name or a name the
-    catalog cannot resolve."""
+    ``spark.table(name).schema`` (from the cache ``schemas``) — None for
+    a CTE name or a name the catalog cannot resolve."""
     masked = _mask(sql)
-    ctes = {_j_norm(_Orig(m, sql).group("n")) for m in _CTE_NAME.finditer(masked)}
-    schemas: dict[str, object] = {}
+    ctes = _cte_names(sql)
+    schemas = {} if schemas is None else schemas
     rels = []
     for head in _REL_HEAD.finditer(masked):
         pos = head.end()
         while (m := _REL_ITEM.match(masked, pos)) is not None:
             o = _Orig(m, sql)
             name, alias = o.group("t"), o.group("a")
-            if name not in schemas:
-                schemas[name] = None
-                if _j_norm(name) not in ctes:
-                    try:
-                        schemas[name] = spark.table(name).schema
-                    except Exception:
-                        pass
-            rels.append((_j_norm(alias or re.findall(_SEG, name)[-1]), schemas[name]))
+            schema = None if _j_norm(name) in ctes else _schema(spark, name, schemas)
+            rels.append((_j_norm(alias or re.findall(_SEG, name)[-1]), schema))
             comma = _REL_COMMA.match(masked, m.end())
             if comma is None:
                 break
@@ -990,14 +1025,27 @@ def _relations(spark, sql: str) -> list:
     return rels
 
 
-def _column_types(spark, sql: str):
+def _coverings(spark, sql: str, schemas: dict):
+    """``covering(table, geometry)`` for :func:`_rewrite_spatial_join`:
+    the covering column of the geometry column in the catalog's schema of
+    ``table`` (:func:`native_points.covering_column`), through the
+    query's schema cache; None for a CTE or a table the catalog cannot
+    resolve."""
+    def covering(tbl: str, geom: str):
+        schema = None if _j_norm(tbl) in _cte_names(sql) else _schema(spark, tbl, schemas)
+        return schema and covering_column(schema, geom)
+
+    return covering
+
+
+def _column_types(spark, sql: str, schemas: dict | None = None):
     """``(is_extent, points_of)`` for :func:`_rewrite_predicates`, from
     the schemas of :func:`_relations` (looked up on the first call
-    only). ``is_extent(col)``: a column found only as an extent struct
-    is True, one found only with other types is False; a column of a
-    CTE, a subquery or a relation the catalog cannot resolve, or one
-    found with both, is None. ``points_of(col)``: the geometry and
-    covering column text (qualified as ``col`` is) when ``col`` is found
+    only, through the cache ``schemas``). ``is_extent(col)``: a column
+    found only as an extent struct is True, one found only with other
+    types is False; a column of a CTE, a subquery or a relation the
+    catalog cannot resolve, or one found with both, is None.
+    ``points_of(col)``: the geometry and covering column text (qualified as ``col`` is) when ``col`` is found
     in exactly one relation, every relation that could hold it is
     resolved, and its field metadata says it holds points
     (:func:`native_points.point_columns`); else None."""
@@ -1007,7 +1055,7 @@ def _column_types(spark, sql: str):
         """(qualifier text, column name, [(schema or None)]) of the
         relations that may hold ``col``; None if it is no column ref."""
         if not rels:
-            rels.append(_relations(spark, sql))
+            rels.append(_relations(spark, sql, schemas))
         ref = _COL_REF.fullmatch(col)
         if ref is None:
             return None
@@ -1060,11 +1108,15 @@ def _fold_wkt(sql: str) -> str:
 def _rewrite(session, sql: str) -> str:
     """The one rewrite chain: aggregate and join rewrites, then the
     predicate rewrite — typed, with WKT literals folded, when
-    ``session`` has a catalog (a ``table`` method), else untyped."""
-    sql = rewrite_spatial_join(rewrite_extent_agg(rewrite_convexhull_agg(sql)))
+    ``session`` has a catalog (a ``table`` method), else untyped. With a
+    catalog the join sides read their covering column, and the join and
+    the predicate typing share one schema lookup per relation."""
+    sql = rewrite_extent_agg(rewrite_convexhull_agg(sql))
     if not callable(getattr(session, "table", None)):
-        return rewrite_spatial_predicates(sql)
-    return _fold_wkt(_rewrite_predicates(sql, *_column_types(session, sql)))
+        return rewrite_spatial_predicates(rewrite_spatial_join(sql))
+    schemas: dict = {}
+    sql = _rewrite_spatial_join(sql, covering=_coverings(session, sql, schemas))
+    return _fold_wkt(_rewrite_predicates(sql, *_column_types(session, sql, schemas)))
 
 
 _log = logging.getLogger(__name__)

@@ -467,6 +467,120 @@ def test_join_evaluates_each_side_bbox_once(spark):
         spark.udf.register("st_extentfromgeom", SPEC["st_extentfromgeom"])
 
 
+def _join_pairs(df, left: str, right: str) -> set:
+    """The (left, right) id pairs of a join result, each exactly once."""
+    rows = [(r[left], r[right]) for r in df.collect()]
+    assert len(rows) == len(set(rows))
+    return set(rows)
+
+
+def test_joins_keep_contacts_inside_the_snap_band(spark):
+    """The exact predicates count a contact within eps = 1e-9·scale(a, b)
+    as touching, scale being the largest absolute coordinate of both
+    geometries. Both PBSM surfaces must pair what a cartesian UDF join
+    pairs: a line to x = 1e6 passing 1e-4 under a unit square (eps =
+    1e-3, so only the line's own band spans the gap), the point
+    (1 + 5e-10, 0.5) against the unit square, and contacts at
+    ±{0.5, 1, 2}·eps off edges and corners at scales 1, 180 and 1e6."""
+    from geomesa_hive_spark.operators.spatial_join import spatial_join
+    from geomesa_hive_spark.operators.spatial_sql import rewrite_spatial_join, spatial_sql
+
+    left, right = ["POINT (1.0000000005 0.5)"], []
+    for s in (1.0, 180.0, 1e6):
+        right.append(f"POLYGON (({s - 1!r} {s - 1!r}, {s!r} {s - 1!r}, {s!r} {s!r}, {s - 1!r} {s!r}, "
+                     f"{s - 1!r} {s - 1!r}))")
+        for k in (0.5, -0.5, 1.0, -1.0, 2.0, -2.0):
+            d = k * 1e-9 * s
+            left += [f"POINT ({s + d!r} {s - 0.5!r})", f"POINT ({s - 0.5!r} {s + d!r})",
+                     f"POINT ({s + d!r} {s + d!r})", f"POINT ({s - 1 - d!r} {s - 0.5!r})",
+                     f"LINESTRING ({s - 0.5!r} {s + d!r}, {s + 3!r} {s + d!r})"]
+    groups = [(1e5, ["LINESTRING (0 0, 1000000 0)"], ["POLYGON ((1 0.0001, 2 0.0001, 2 2, 1 2, 1 0.0001))",
+                                                      "POLYGON ((1 0.01, 2 0.01, 2 2, 1 2, 1 0.01))"]),
+              (1.0, left, right)]
+    q = "SELECT a.lid AS lid, b.rid AS rid FROM band_l a JOIN band_r b ON st_intersects(a.lgeom, b.rgeom)"
+    for cs, lw, rw in groups:
+        lf = spark.createDataFrame([(i, bytearray(to_wkb(from_wkt(w)))) for i, w in enumerate(lw)], "lid INT, lgeom BINARY")
+        rf = spark.createDataFrame([(i, bytearray(to_wkb(from_wkt(w)))) for i, w in enumerate(rw)], "rid INT, rgeom BINARY")
+        lf.createOrReplaceTempView("band_l")
+        rf.createOrReplaceTempView("band_r")
+        want = _join_pairs(spark.sql("SELECT lid, rid FROM band_l CROSS JOIN band_r "
+                                     "WHERE st_intersects(lgeom, rgeom)"), "lid", "rid")
+        assert 0 < len(want) < len(lw) * len(rw)
+        got = {
+            "spatial_join": spatial_join(lf, rf, left_geom="lgeom", right_geom="rgeom", cell_size=cs),
+            "rewrite_spatial_join": spark.sql(rewrite_spatial_join(q, cs)),
+        }
+        if cs == 1.0:
+            got["spatial_sql"] = spatial_sql(spark, q)
+        for name, df in got.items():
+            assert _join_pairs(df, "lid", "rid") == want, (name, cs)
+
+
+def _derived_sides(df) -> int:
+    """How many join sides of ``df``'s plan derive their bbox by UDF."""
+    return df._jdf.queryExecution().executedPlan().toString().count("ArrowEvalPython [st_extentfromgeom(")
+
+
+def test_joins_read_the_stored_covering(spark, tmp_path):
+    """Over a lake written by write_spatially_partitioned (points) and
+    write_geoparquet (polygons), the SQL join and spatial_join take each
+    side's bbox from the covering its field metadata names: the plan
+    evaluates no st_extentFromGeom. A frame that selected the covering
+    away, a broken claim (a covering_of naming another column, a
+    covering that is not an extent struct) and a CTE side keep the UDF.
+    Every case returns the cartesian UDF join's pairs."""
+    import random
+
+    from geomesa_hive_spark.operators.spatial_join import spatial_join
+    from geomesa_hive_spark.operators.spatial_sql import spatial_sql
+    from geomesa_hive_spark.sources.spatial_io import write_geoparquet
+
+    rng = random.Random(3)
+    wkb = lambda w: bytearray(to_wkb(from_wkt(w)))
+    pts = spark.createDataFrame(
+        [(i, wkb(f"POINT ({rng.uniform(0, 6)!r} {rng.uniform(0, 6)!r})")) for i in range(300)], "pid INT, geom BINARY")
+    zones = spark.createDataFrame(
+        [(i, wkb(f"POLYGON (({i} 0, {i + 1.5} 1, {i + 1} 5, {i} 4, {i} 0))")) for i in range(5)], "zid INT, geom BINARY")
+    write_spatially_partitioned(pts, str(tmp_path / "pts"), "geom", num_files=2)
+    write_geoparquet(zones, str(tmp_path / "zones"))
+    lake_pts = spark.read.parquet(str(tmp_path / "pts"))
+    lake_zones = spark.read.parquet(str(tmp_path / "zones"))
+    lake_zones.createOrReplaceTempView("cov_zones")
+    lake_pts.createOrReplaceTempView("cov_pts")
+    want = _join_pairs(spark.sql("SELECT p.pid, z.zid FROM cov_pts p CROSS JOIN cov_zones z "
+                                 "WHERE st_intersects(p.geom, z.geom)"), "pid", "zid")
+    assert len(want) > 50
+
+    def sql(pts_view: str, cte: str = ""):
+        return spatial_sql(spark, f"{cte}SELECT p.pid AS pid, z.zid AS zid FROM {pts_view} p "
+                                  "JOIN cov_zones z ON st_intersects(p.geom, z.geom)")
+
+    def api(pts_df):
+        return spatial_join(pts_df, lake_zones, left_geom="geom", right_geom="geom").select("pid", "zid")
+
+    wrong_back = lake_pts.withColumn("bbox", F.col("bbox").alias("bbox", metadata={"geo": {"covering_of": "pid"}}))
+    not_extent = lake_pts.withColumn("bbox", F.struct(*[F.col(f"bbox.{c}").cast("float").alias(c) for c in
+                                                        ("xmin", "ymin", "xmax", "ymax")]).alias(
+        "bbox", metadata={"geo": {"covering_of": "geom"}}))
+    wrong_back.createOrReplaceTempView("cov_wrong_back")
+    not_extent.createOrReplaceTempView("cov_not_extent")
+    cases = {
+        "sql": (sql("cov_pts"), 0),
+        "api": (api(lake_pts), 0),
+        "api, covering selected away": (api(lake_pts.select("pid", "geom")), 1),
+        "api, covering_of another column": (api(wrong_back), 1),
+        "api, covering not an extent": (api(not_extent), 1),
+        "sql, covering_of another column": (sql("cov_wrong_back"), 1),
+        "sql, covering not an extent": (sql("cov_not_extent"), 1),
+        "sql, CTE side": (sql("c", "WITH c AS (SELECT pid, geom, bbox FROM cov_pts) "), 1),
+    }
+    for name, (df, derived) in cases.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan and "NestedLoopJoin" not in plan, name
+        assert _derived_sides(df) == derived, name
+        assert _join_pairs(df, "pid", "zid") == want, name
+
+
 def test_asof_join(spark):
     from geomesa_hive_spark.operators.temporal import asof_join
     import datetime as dt

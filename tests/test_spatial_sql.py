@@ -1177,6 +1177,45 @@ def test_typed_rewrite_reads_column_types_from_the_catalog():
     assert _rewrite(cat, cte) == rewrite_spatial_predicates(cte) != cte
 
 
+def test_typed_join_rewrite_reads_the_covering_with_one_lookup_per_table():
+    """With a catalog, each join side whose geometry column names a
+    usable covering reads it in place of st_extentFromGeom; the join and
+    the predicate typing share one catalog lookup per table, and a
+    query with no join looks up nothing more than before. A side without
+    a covering, and the untyped rewrite, keep the UDF."""
+    from pyspark.sql import types as T
+
+    from geomesa_hive_spark.functions.st import EXTENT_TYPE
+    from geomesa_hive_spark.operators.native_points import claim
+    from geomesa_hive_spark.operators.spatial_sql import _rewrite, rewrite_spatial_join
+
+    def lake(types):
+        return T.StructType([T.StructField("id", T.LongType()),
+                             T.StructField("geom", T.BinaryType(), True, claim(types, "bbox")),
+                             T.StructField("bbox", EXTENT_TYPE, True, {"geo": {"covering_of": "geom"}})])
+
+    calls = []
+
+    class Counting(_Catalog):
+        def table(self, name):
+            calls.append(name)
+            return super().table(name)
+
+    cat = Counting(pts=lake(["Point"]), zones=lake(["Polygon"]), plain=T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("geom", T.BinaryType())]))
+    q = "SELECT z.id, count(*) FROM pts p JOIN zones z ON ST_Intersects(p.geom, z.geom) GROUP BY z.id"
+    out = _rewrite(cat, q)
+    assert "st_extentFromGeom" not in out and out.count("`bbox`") > 0
+    assert sorted(calls) == ["pts", "zones"]
+    assert rewrite_spatial_join(q).count("st_extentFromGeom") == 2
+    calls.clear()
+    assert _rewrite(cat, q.replace("zones", "plain")).count("st_extentFromGeom") == 1
+    assert sorted(calls) == ["plain", "pts"]
+    calls.clear()
+    _rewrite(cat, "SELECT count(*) FROM pts WHERE st_intersects(bbox, st_makeBBOX(0, 0, 1, 1))")
+    assert calls == ["pts"]
+
+
 def _pushed_filters(df) -> str:
     """The PushedFilters of ``df``'s one Parquet scan, untruncated."""
     leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()

@@ -560,6 +560,98 @@ def test_point_extent_fast_path_matches_point_path_and_kernel(spark, monkeypatch
     assert any(r.e for r in rows) and not all(r.e for r in rows)
 
 
+def _eps_band(g, rng):
+    """Points on the vertices and edge midpoints of every ring of ``g``,
+    at ±{0.5, 1, 2}·eps off them along the edge normal and the diagonal
+    (eps = 1e-9·scale, the kernel's band), and a few random points
+    around ``g``."""
+    import numpy as np
+
+    from geomesa_hive_spark.geom import algorithms as alg
+
+    eps = 1e-9 * alg._scale(g)
+    pts = []
+    for part in g.geometries():
+        for ring in part.rings:
+            for (x0, y0), (x1, y1) in zip(ring[:-1, :2], ring[1:, :2]):
+                dx, dy = x1 - x0, y1 - y0
+                ln = float(np.hypot(dx, dy)) or 1.0
+                for t in (0.0, 0.5):
+                    ex, ey = x0 + t * dx, y0 + t * dy
+                    pts.append((ex, ey))
+                    for k in (0.5, -0.5, 1.0, -1.0, 2.0, -2.0):
+                        pts += [(ex - k * eps * dy / ln, ey + k * eps * dx / ln), (ex + k * eps, ey + k * eps)]
+    x0, y0, x1, y1 = g.bounds
+    pts += [(rng.uniform(x0, x1), rng.uniform(y0, y1)) for _ in range(10)]
+    return pts
+
+
+def test_point_predicates_grouped_by_polygon_equal_the_per_pair_kernel(monkeypatch):
+    """A point × polygon batch whose polygons vary (a join's refine) is
+    grouped by polygon, one vectorized test per distinct polygon. For the
+    five predicates with a vectorized form, in both argument orders, it
+    must equal the per-pair kernel row for row, NULL included: on points
+    in the boundary band at scales 1e-3 to 1e6, with holes and
+    multipolygons, a NULL point and polygon, POINT EMPTY and a point
+    larger than the polygon's coordinates (those rows keep the kernel). A
+    batch mixing point and non-point rows takes the per-pair path."""
+    import random
+    import re
+
+    import pandas as pd
+
+    from geomesa_hive_spark.functions import st
+    from geomesa_hive_spark.geom import algorithms as alg
+    from geomesa_hive_spark.geom import from_wkb, from_wkt, to_wkb
+
+    calls = []  # per decode of a points side: did it hold only points
+    real = st.wkb_array_to_points
+
+    def spy(vals):
+        calls.append(real(vals) is not None)
+        return real(vals) if calls[-1] else None
+
+    monkeypatch.setattr(st, "wkb_array_to_points", spy)
+    rng = random.Random(7)
+    shapes = ["POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))",
+              "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 4 2, 4 4, 2 4, 2 2))",
+              "MULTIPOLYGON (((0 0, 1 0, 1 1, 0 0)), ((1 1, 2 1, 2 2, 1 1)))",
+              "POLYGON ((0 0, 4 0, 4 1, 1 1, 1 3, 4 3, 4 4, 0 4, 0 0))",
+              "POLYGON ((-1 -1, 1 -1, 1 1, -1 1, -1 -1))"]
+    polys = [from_wkt(re.sub(r"-?\d+", lambda m: repr(int(m.group()) * s), w))
+             for w in shapes for s in (1e-3, 1.0, 180.0, 1e6)] + [from_wkt("POLYGON EMPTY")]
+    point = lambda x, y: to_wkb(from_wkt(f"POINT ({x!r} {y!r})"))
+    pairs = [(point(x, y), to_wkb(g)) for g in polys if not g.is_empty for x, y in _eps_band(g, rng)]
+    big = from_wkt("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")
+    pairs += [(None, to_wkb(big)), (to_wkb(from_wkt("POINT EMPTY")), to_wkb(big)), (point(0.5, 0.5), None),
+              (point(1 + 5e-10, 0.5), to_wkb(big)), (point(2e6, 0.5), to_wkb(big)),
+              (point(0.5, 0.5), to_wkb(polys[-1]))]
+    rng.shuffle(pairs)
+    line = to_wkb(from_wkt("LINESTRING (0 0, 1 1)"))
+    for name in ("st_intersects", "st_within", "st_contains", "st_covers", "st_disjoint"):
+        kernel = getattr(alg, name[3:])
+        for first in (True, False):
+            a, b = zip(*[(p, g) if first else (g, p) for p, g in pairs])
+            want = [None if u is None or v is None else bool(kernel(from_wkb(u), from_wkb(v)))
+                    for u, v in zip(a, b)]
+            calls.clear()
+            got = list(st.SPEC[name].func(pd.Series(a, dtype=object), pd.Series(b, dtype=object)))
+            assert got == want, (name, first, [(i, g, w) for i, (g, w) in enumerate(zip(got, want)) if g != w][:5])
+            assert all(v is None or type(v) is bool for v in got)
+            # grouped (st_within(polygon, point) has no vectorized form)
+            assert any(calls) == (first or name != "st_within"), (name, first)
+            # a point contains, covers and is covered by no polygon
+            if not (name in ("st_contains", "st_covers") if first else name == "st_within"):
+                assert 0 < sum(v is True for v in want) < len(want)
+            # one non-point row on the points side: the per-pair path
+            mixed = [line if i == 3 else v for i, v in enumerate((a if first else b)[:40])]
+            a2, b2 = (mixed, b[:40]) if first else (a[:40], mixed)
+            calls.clear()
+            got = list(st.SPEC[name].func(pd.Series(a2, dtype=object), pd.Series(b2, dtype=object)))
+            assert not any(calls)
+            assert got[:3] + got[4:] == want[:3] + want[4:40]
+
+
 def test_zip_directory_reuse_is_installed_in_workers_only(spark):
     """The package wraps ``zipimporter.invalidate_caches`` in the Python
     workers that unpickle its UDFs, and leaves this (driver) process's
